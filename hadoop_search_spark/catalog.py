@@ -6872,7 +6872,7 @@ from hadoop_search_spark.operators.sketch import (  # noqa: E402
     + "\nSELECT CAST(register AS BIGINT) AS register, "
     "CAST(max_rho AS INT) AS max_rho FROM sk",
     note="streaming==batch equivalence for the HLL register store "
-    "(streaming/hll_ingest.py:StreamingHllCounter): events split into "
+    "(streaming/sketch_ingest.py:StreamingHllCounter): events split into "
     "4 deterministic epochs (event_id % 4), each merged into the "
     "versioned store (register-wise max, _CURRENT pointer + epoch "
     "ledger), epoch 2 then REPLAYED (ledger no-op) — the final "
@@ -6886,7 +6886,7 @@ from hadoop_search_spark.operators.sketch import (  # noqa: E402
 def stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from hadoop_search_spark.streaming.hll_ingest import StreamingHllCounter
+    from hadoop_search_spark.streaming.sketch_ingest import StreamingHllCounter
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
     store = tempfile.mkdtemp(prefix="hll_replay_store_")
@@ -6905,7 +6905,7 @@ def stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_cms_replay",
     oracle=cms_oracle_sql("events", "user_id"),
     note="streaming==batch equivalence for the Count-Min cell store "
-    "(streaming/cms_ingest.py:StreamingCmsCounter): the same 4-epoch "
+    "(streaming/sketch_ingest.py:StreamingCmsCounter): the same 4-epoch "
     "split + epoch-2 replay as stream_hll_replay, but the merge is "
     "cell-wise SUM — NOT replay-idempotent, so exactly-once comes "
     "from the epoch ledger written BEFORE the pointer flip (the "
@@ -6917,7 +6917,7 @@ def stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_cms_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from hadoop_search_spark.streaming.cms_ingest import StreamingCmsCounter
+    from hadoop_search_spark.streaming.sketch_ingest import StreamingCmsCounter
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
     store = tempfile.mkdtemp(prefix="cms_replay_store_")
@@ -6998,7 +6998,7 @@ h AS (
 SELECT bucket, CAST(count(*) AS BIGINT) AS cnt FROM h GROUP BY bucket
 """,
     note="streaming==batch equivalence for the equi-width histogram "
-    "store (streaming/hist_ingest.py:StreamingHistogram — the "
+    "store (streaming/sketch_ingest.py:StreamingHistogram — the "
     "QUANTILE member of the streaming sketch-store family, completing "
     "HLL/CMS): events.value in 4 deterministic epochs (event_id % 4) "
     "under bounds FROZEN at store creation, bucket-wise SUM merge "
@@ -7012,7 +7012,7 @@ def stream_hist_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from hadoop_search_spark.operators.sketch import hist_bounds
-    from hadoop_search_spark.streaming.hist_ingest import StreamingHistogram
+    from hadoop_search_spark.streaming.sketch_ingest import StreamingHistogram
 
     ev = _t(spark, sf_dir, "events").select("event_id", "value")
     lo, hi = hist_bounds(ev, "value")
@@ -7058,7 +7058,7 @@ SELECT q, bucket,
 FROM hit, b
 """,
     note="the QUERY surface of the streaming histogram store "
-    "(streaming/hist_ingest.py:StreamingHistogram.quantiles — the "
+    "(streaming/sketch_ingest.py:StreamingHistogram.quantiles — the "
     "store itself is driver-checked via stream_hist_replay, this "
     "checks what a user actually READS from it): after the same "
     "4-epoch ingest + epoch-2 replay of events.value, quantile "
@@ -7074,7 +7074,7 @@ def stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from hadoop_search_spark.operators.sketch import hist_bounds
-    from hadoop_search_spark.streaming.hist_ingest import StreamingHistogram
+    from hadoop_search_spark.streaming.sketch_ingest import StreamingHistogram
 
     ev = _t(spark, sf_dir, "events").select("event_id", "value")
     lo, hi = hist_bounds(ev, "value")

@@ -3008,9 +3008,11 @@ def ivfpq_index_add(
         exact_rotation=exact_rotation,
     ).withColumn("gen", F.lit(gen).cast("bigint"))
     _write_gen(path, gen)
-    assigned.write.mode("append").partitionBy("cell").parquet(
-        f"{path}/codes"
-    )
+    # same rebalance-by-cell as write_ivfpq_index: without it an append
+    # writes one small file per (task × touched cell)
+    assigned.hint("rebalance", "cell").write.mode("append").partitionBy(
+        "cell"
+    ).parquet(f"{path}/codes")
     return assigned.count()
 
 

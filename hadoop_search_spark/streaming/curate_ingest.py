@@ -40,16 +40,18 @@ store join, vocab-sized weight join). Nothing new shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import os
 
+from pyspark.sql import DataFrame, SparkSession
+
+from hadoop_search_spark.streaming import store
 from hadoop_search_spark.streaming.dedup_ingest import StreamingDeduper
 from hadoop_search_spark.streaming.dsir_ingest import StreamingDsirScorer
 
 DOCS_SCHEMA = "doc_id BIGINT, source STRING, text STRING"
 
 
-class StreamingCurator:
+class StreamingCurator(store.BatchSink):
     """Admits a document stream into a curated store under ``root``:
     ``{root}/store`` is the StreamingDeduper's versioned accepted
     corpus, ``{root}/scores`` the DSIR score sink. Pass
@@ -68,8 +70,6 @@ class StreamingCurator:
         dsir_weights_root: str | None = None,
         text_col: str = "text",
     ) -> None:
-        import os
-
         self.spark = spark
         self.min_quality = min_quality
         self.langs = langs
@@ -118,14 +118,6 @@ class StreamingCurator:
         if self.scorer is not None and kept is not None:
             survivors = batch.join(kept, "doc_id")
             self.scorer.process_batch(survivors, epoch_id)
-
-    def start(self, docs_stream: DataFrame, checkpoint: str):
-        return (
-            docs_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )
 
     # -- published-state accessors ------------------------------------
 

@@ -12,9 +12,8 @@ accepted?" Each micro-batch:
 3. exact-Jaccard-verifies candidates against the accepted docs (and
    earlier-id batch peers), rejects matches >= threshold;
 4. appends survivors (docs + their bands) to the store and atomically
-   republishes — the same versioned-directory + ``_CURRENT`` pointer
-   protocol as `streaming/index_ingest.py`, so replays are idempotent
-   across both crash windows.
+   republishes ``v{epoch_id}`` through `streaming/store.py`, so
+   replays are idempotent across both crash windows.
 
 Semantics are GREEDY-ONLINE over LSH CANDIDATES: a doc is rejected
 iff an ACCEPTED doc (not a rejected one) shares a band key with it
@@ -52,11 +51,12 @@ from hadoop_search_spark.operators.dedup import (
     minhash_bands_wide,
     word_shingles,
 )
+from hadoop_search_spark.streaming import store
 
 DOCS_SCHEMA = "doc_id BIGINT, text STRING"
 
 
-class StreamingDeduper:
+class StreamingDeduper(store.VersionedStore):
     """Maintains the accepted-corpus store under ``root`` from a
     document stream: ``{root}/v{epoch}/docs`` + ``/bands`` per
     version, ``_CURRENT`` pointer. Doc ids must be distinct across
@@ -65,31 +65,16 @@ class StreamingDeduper:
     def __init__(
         self, spark: SparkSession, root: str, threshold: float = 0.5
     ) -> None:
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root)
         self.threshold = threshold
-        os.makedirs(root, exist_ok=True)
 
     # -- published-state accessors ------------------------------------
 
-    def _current_path(self) -> str | None:
-        ptr = os.path.join(self.root, "_CURRENT")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            return os.path.join(self.root, f.read().strip())
-
     def current_docs(self) -> DataFrame | None:
-        path = self._current_path()
-        if path is None:
-            return None
-        return self.spark.read.parquet(os.path.join(path, "docs"))
+        return self._read("docs")
 
     def current_bands(self) -> DataFrame | None:
-        path = self._current_path()
-        if path is None:
-            return None
-        return self.spark.read.parquet(os.path.join(path, "bands"))
+        return self._read("bands")
 
     # -- the dedup step ------------------------------------------------
 
@@ -187,20 +172,14 @@ class StreamingDeduper:
         stage (e.g. the DSIR scorer) committed its epoch, the replay
         must reach that stage — its own idempotence gate, not this
         pointer, decides whether it already ran."""
-        version = f"v{epoch_id}"
-        cur = self._current_path()
-        if cur is not None and os.path.basename(cur) == version:
+        if store.current_version(self.root) == epoch_id:
             # replay of a published epoch: the store write is a no-op,
             # but downstream stages still need this epoch's accepted ids
-            acc = os.path.join(cur, "accepted")
+            acc = os.path.join(self.root, f"v{epoch_id}", "accepted")
             if os.path.exists(acc):
                 return self.spark.read.parquet(acc)
             return None  # pre-record store version: degrade to no-op
-        out = os.path.join(self.root, version)
-        if os.path.exists(out):
-            import shutil
-
-            shutil.rmtree(out)  # partial write from a pre-publish crash
+        out = store.version_dir(self.root, epoch_id)
         # the batch frame is traversed several times (bands, greedy ids,
         # survivors join, bands again) and a non-replayable source would
         # re-read the micro-batch input on each — pin it
@@ -236,16 +215,5 @@ class StreamingDeduper:
                 survivors.unpersist()
         finally:
             batch.unpersist()
-        tmp = os.path.join(self.root, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(version)
-        os.replace(tmp, os.path.join(self.root, "_CURRENT"))
+        store.flip(self.root, epoch_id)
         return keep
-
-    def start(self, docs_stream: DataFrame, checkpoint: str):
-        return (
-            docs_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )

@@ -9,8 +9,8 @@ scored against the frozen model — the same offline-build / online-
 serve split as the inverted index (`streaming/index_ingest.py`) and
 the IVF index (`operators/similarity.py:ivf_index_add`).
 
-Model publication uses the versioned-directory + ``_CURRENT`` pointer
-protocol shared by the other streaming stores: ``{root}/v{n}/weights``
+Model publication uses the versioned-store protocol of
+`streaming/store.py`: ``{root}/v{n}/weights``
 (the vocab-sized ``(tok, w6)`` table) + ``/meta`` (one row with the
 corpus totals and the unseen-token ``default_w6``), with the pointer
 flipped atomically after both land.
@@ -30,11 +30,9 @@ Laplace-smoothed formula evaluated at cnt_s = cnt_t = 0, so serving
 a frozen model is exactly what a rebuilt model with those zero
 counts would produce (pinned by test).
 
-Output is an append-only epoch-partitioned parquet table
-(``{out}/epoch=N/``); replaying an epoch after a crash first deletes
-any partial epoch directory and rewrites it, and skips epochs whose
-``_SUCCESS`` marker already landed — the standard idempotent
-foreachBatch sink.
+Output is the store's append-only epoch sink (``{out}/epoch=N/``):
+committed epochs replay as no-ops, partial ones are swept and
+rewritten.
 
 Scale shape: the scoring join is stream-batch × vocab on ``tok``.
 The weight table is vocab-sized (zipf-bounded, typically ≪ corpus);
@@ -47,7 +45,6 @@ the only shuffle of the batch.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +54,7 @@ from hadoop_search_spark.operators.mixing import (
     dsir_score,
     dsir_weights,
 )
+from hadoop_search_spark.streaming import store
 
 DOCS_SCHEMA = "doc_id BIGINT, source STRING, text STRING"
 
@@ -74,30 +72,17 @@ def publish_dsir_weights(
     pointer flips only after both tables land, and the scorer picks
     the new version up on its next micro-batch."""
     os.makedirs(root, exist_ok=True)
-    cur = _current_version(root)
+    cur = store.current_version(root)
     version = 0 if cur is None else cur + 1
-    out = os.path.join(root, f"v{version}")
-    if os.path.exists(out):
-        shutil.rmtree(out)  # partial publish from a pre-flip crash
+    out = store.version_dir(root, version)
     weights, meta = dsir_weights(docs, target_source, text_col, source_col)
     weights.write.parquet(os.path.join(out, "weights"))
     meta.coalesce(1).write.parquet(os.path.join(out, "meta"))
-    tmp = os.path.join(root, "_CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(f"v{version}")
-    os.replace(tmp, os.path.join(root, "_CURRENT"))
+    store.flip(root, version)
     return version
 
 
-def _current_version(root: str) -> int | None:
-    ptr = os.path.join(root, "_CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return int(f.read().strip()[1:])
-
-
-class StreamingDsirScorer:
+class StreamingDsirScorer(store.BatchSink):
     """Scores a document stream against the published model at
     ``weights_root``, appending ``(doc_id, n_tokens, score, keep,
     model_v, epoch)`` under ``out_root``. Wire into a stream with
@@ -122,7 +107,7 @@ class StreamingDsirScorer:
     # -- model resolution (per batch — this is the no-restart refresh)
 
     def _model(self) -> tuple[DataFrame, object, int]:
-        v = _current_version(self.weights_root)
+        v = store.current_version(self.weights_root)
         if v is None:
             raise RuntimeError(
                 f"no published DSIR model under {self.weights_root}; "
@@ -136,13 +121,9 @@ class StreamingDsirScorer:
     # -- the scoring step ---------------------------------------------
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        out = os.path.join(self.out_root, f"epoch={int(epoch_id)}")
-        if os.path.exists(os.path.join(out, "_SUCCESS")):
-            return  # replay of a committed epoch: no-op
-        if os.path.exists(out):
-            shutil.rmtree(out)  # partial write from a mid-epoch crash
-        if batch.isEmpty():
-            return
+        out = store.open_epoch(self.out_root, epoch_id)
+        if out is None or batch.isEmpty():
+            return  # replay of a committed epoch, or nothing to score
         weights, default_w6, v = self._model()
         toks = _dsir_toks(batch, self.text_col, self.source_col)
         scored = dsir_score(toks, weights, default_w6=default_w6).withColumn(
@@ -150,28 +131,7 @@ class StreamingDsirScorer:
         )
         scored.write.parquet(out)
 
-    def start(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )
-
     def scores(self) -> DataFrame | None:
         """All COMMITTED epoch scores (epoch surfaces as a partition
-        column). Committed = the epoch dir carries the _SUCCESS marker
-        process_batch keys idempotence on; a partial directory left by
-        a mid-write crash is excluded (it will be swept and rewritten
-        on replay) rather than surfaced as if it were committed."""
-        committed = [
-            os.path.join(self.out_root, e)
-            for e in os.listdir(self.out_root)
-            if e.startswith("epoch=")
-            and os.path.exists(os.path.join(self.out_root, e, "_SUCCESS"))
-        ]
-        if not committed:
-            return None
-        return self.spark.read.option("basePath", self.out_root).parquet(
-            *committed
-        )
+        column); a partial dir left by a crash is excluded."""
+        return store.read_epochs(self.spark, self.out_root)

@@ -7,9 +7,8 @@ current: each micro-batch tokenizes only its own documents, merges
 their (term, doc_id, tf, positions) rows with the published index,
 rescores df/idf over the union, and atomically republishes.
 
-``foreachBatch`` + versioned output directories gives idempotent
-exactly-once semantics on replay (an epoch that re-runs overwrites
-its own version); readers follow the ``_CURRENT`` pointer.
+Each epoch publishes ``v{epoch_id}`` through the versioned-store
+protocol of `streaming/store.py`; readers follow the pointer.
 
 At scale the same loop runs against Kafka (`streaming/kafka.py`) with
 the publish step writing to a transactional table format instead of
@@ -27,8 +26,10 @@ from hadoop_search_spark.operators.index import (
     merge_index,
     rescore,
     term_doc_stats,
+    vocab_stats,
     write_index,
 )
+from hadoop_search_spark.streaming import store
 
 DOCS_SCHEMA = "doc_id BIGINT, text STRING"
 
@@ -38,7 +39,7 @@ def read_docs_stream(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(DOCS_SCHEMA).parquet(path)
 
 
-class StreamingIndexer:
+class StreamingIndexer(store.VersionedStore):
     """Maintains a published index under ``index_root`` from a
     document stream.
 
@@ -54,26 +55,14 @@ class StreamingIndexer:
         num_partitions: int = NUM_INDEX_PARTITIONS,
         stem: bool = True,
     ) -> None:
-        self.spark = spark
-        self.index_root = index_root
+        super().__init__(spark, index_root)
         self.num_partitions = num_partitions
         self.stem = stem
-        os.makedirs(index_root, exist_ok=True)
 
     # -- published-state accessors ------------------------------------
 
-    def _current_path(self) -> str | None:
-        ptr = os.path.join(self.index_root, "_CURRENT")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            return os.path.join(self.index_root, f.read().strip())
-
     def current_postings(self) -> DataFrame | None:
-        path = self._current_path()
-        if path is None:
-            return None
-        return self.spark.read.parquet(os.path.join(path, "postings"))
+        return self._read("postings")
 
     def current_num_docs(self) -> int:
         path = self._current_path()
@@ -94,15 +83,9 @@ class StreamingIndexer:
         double the batch AND overwrite the parquet path being read);
         if the version directory exists unpublished, it is a partial
         write from a crash before the pointer flip and is rebuilt."""
-        version = f"v{epoch_id}"
-        cur = self._current_path()
-        if cur is not None and os.path.basename(cur) == version:
+        if store.current_version(self.root) == epoch_id:
             return  # epoch already merged and published; replay no-op
-        out = os.path.join(self.index_root, version)
-        if os.path.exists(out):
-            import shutil
-
-            shutil.rmtree(out)  # partial write from a pre-publish crash
+        out = store.version_dir(self.root, epoch_id)
         existing = self.current_postings()
         if existing is None:
             n = batch.count()
@@ -121,8 +104,6 @@ class StreamingIndexer:
         # strictly cheaper than the full-index rewrite write_index just
         # performed, so it does not change publish asymptotics; an
         # incremental-format publish would derive vocab incrementally)
-        from hadoop_search_spark.operators.index import vocab_stats
-
         (
             vocab_stats(self.spark.read.parquet(os.path.join(out, "postings")))
             .coalesce(1)
@@ -131,32 +112,14 @@ class StreamingIndexer:
         )
         with open(os.path.join(out, "NUM_DOCS"), "w") as f:
             f.write(str(n))
-        # pointer flip is the atomic publish
-        tmp = os.path.join(self.index_root, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(version)
-        os.replace(tmp, os.path.join(self.index_root, "_CURRENT"))
-
-    def start(self, docs_stream: DataFrame, checkpoint: str):
-        """Attach to a stream; returns the StreamingQuery."""
-        return (
-            docs_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )
+        store.flip(self.root, epoch_id)  # the atomic publish
 
 
 def vacuum(index_root: str, keep: int = 2) -> list[str]:
     """Delete all but the newest ``keep`` published versions (never the
     one ``_CURRENT`` points at). Returns the removed version names."""
-    import shutil
-
-    ptr = os.path.join(index_root, "_CURRENT")
-    current = None
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            current = f.read().strip()
+    cur = store.current_version(index_root)
+    current = None if cur is None else f"v{cur}"
     versions = sorted(
         (d for d in os.listdir(index_root) if d.startswith("v")),
         key=lambda d: int(d[1:]),
@@ -165,5 +128,5 @@ def vacuum(index_root: str, keep: int = 2) -> list[str]:
         v for v in versions if v != current
     ]
     for v in removable:
-        shutil.rmtree(os.path.join(index_root, v))
+        store.sweep(os.path.join(index_root, v))
     return removable

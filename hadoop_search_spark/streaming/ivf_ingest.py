@@ -27,7 +27,7 @@ Idempotence / crash windows (three stages, three gates):
    (some but not all ids present) cannot arise from that protocol and
    fails fast rather than appending duplicates;
 3. the drift report writes per-epoch under ``{root}/drift/epoch=N``
-   with the standard _SUCCESS-gated sweep-and-rewrite sink.
+   through the epoch sink of `streaming/store.py`.
 
 Rebuild trigger (documented contract, not automated): when an epoch's
 report flags any cell, the operator rebuilds offline with
@@ -41,7 +41,6 @@ incrementally in a stats table, same math.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +51,7 @@ from hadoop_search_spark.operators.similarity import (
     ivf_index_add,
     ivf_index_drift,
 )
+from hadoop_search_spark.streaming import store
 from hadoop_search_spark.streaming.vector_ingest import (
     VECS_SCHEMA,  # noqa: F401  (re-export: the composed schema is the same)
     StreamingVectorDeduper,
@@ -92,7 +92,7 @@ _LAYOUTS = {
 }
 
 
-class StreamingIvfIndexer:
+class StreamingIvfIndexer(store.BatchSink):
     """Maintains ``{root}/store`` (accepted-vector store) and a
     PUBLISHED ANN index at ``index_path`` (pre-built offline with
     ``write_ivf_index`` or ``write_int8_index`` per ``layout`` — the
@@ -196,19 +196,15 @@ class StreamingIvfIndexer:
                     f"ids already in {self.index_path} — the commit protocol "
                     "should expose all or none; rebuild the index"
                 )
-        with open(marker, "w") as f:
-            f.write(str(int(epoch_id)))
+        store.mark(marker, str(int(epoch_id)))
         return n_kept
 
     # -- stage 3: drift postcondition ----------------------------------
 
     def _drift_epoch(self, epoch_id: int) -> None:
-        out = os.path.join(self.root, "drift", f"epoch={int(epoch_id)}")
-        if os.path.exists(os.path.join(out, "_SUCCESS")):
-            return
-        if os.path.exists(out):
-            shutil.rmtree(out)
-        self._drift(self.spark, self.index_path).write.parquet(out)
+        out = store.open_epoch(os.path.join(self.root, "drift"), epoch_id)
+        if out is not None:
+            self._drift(self.spark, self.index_path).write.parquet(out)
 
     # -- the composed batch body ---------------------------------------
 
@@ -219,14 +215,6 @@ class StreamingIvfIndexer:
             self._append_epoch(admitted, epoch_id)
         self._drift_epoch(epoch_id)
 
-    def start(self, vec_stream: DataFrame, checkpoint: str):
-        return (
-            vec_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )
-
     # -- published-state accessors -------------------------------------
 
     def current_vectors(self) -> DataFrame | None:
@@ -235,16 +223,7 @@ class StreamingIvfIndexer:
     def drift_reports(self) -> DataFrame | None:
         """All COMMITTED per-epoch drift reports (epoch is a partition
         column)."""
-        base = os.path.join(self.root, "drift")
-        committed = [
-            os.path.join(base, e)
-            for e in os.listdir(base)
-            if e.startswith("epoch=")
-            and os.path.exists(os.path.join(base, e, "_SUCCESS"))
-        ]
-        if not committed:
-            return None
-        return self.spark.read.option("basePath", base).parquet(*committed)
+        return store.read_epochs(self.spark, os.path.join(self.root, "drift"))
 
     def persistent_drift(self, k: int = 2) -> DataFrame | None:
         """Cells flagged in EACH of the last ``k`` committed epochs →

@@ -11,10 +11,10 @@ source-agnostic.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from hadoop_search_spark.streaming import store
 
 EVENTS_JSON_SCHEMA = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
@@ -44,25 +44,20 @@ def kafka_events_source(
     ).select("e.*")
 
 
-def exactly_once_parquet_sink(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    batch_fn: Callable[[DataFrame, int], None] | None = None,
-):
+def exactly_once_parquet_sink(stream_df: DataFrame, path: str, checkpoint: str):
     """foreachBatch sink: idempotent per-epoch parquet writes.
 
-    ``foreachBatch`` hands each micro-batch a batch id; writing to an
-    epoch-keyed subdirectory (or MERGE into a transactional table when
-    Delta/Iceberg jars are present) makes replays after failure
-    idempotent — the standard exactly-once pattern.
+    Each micro-batch lands in ``{path}/epoch={id}`` through the
+    ``_SUCCESS``-gated epoch sink of `streaming/store.py`: a replayed
+    committed epoch is a no-op and a partial one is swept and
+    rewritten, so replays after failure are idempotent — the standard
+    exactly-once pattern (MERGE into a transactional table when
+    Delta/Iceberg jars are present). Returns the unstarted writer.
     """
 
-    def default_fn(batch: DataFrame, epoch_id: int) -> None:
-        batch.write.mode("overwrite").parquet(f"{path}/epoch={epoch_id}")
+    def write_epoch(batch: DataFrame, epoch_id: int) -> None:
+        out = store.open_epoch(path, epoch_id)
+        if out is not None:
+            batch.write.parquet(out)
 
-    return (
-        stream_df.writeStream.foreachBatch(batch_fn or default_fn)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return store.foreach_batch(stream_df, write_epoch, checkpoint)

@@ -16,10 +16,8 @@ sequential Python arithmetic (the same left-to-right fold the Spark
 expressions use, so the 9dp-rounded values agree bit-for-bit).
 
 Store protocol: ``{root}/v{epoch}/vectors`` (vec_id, embedding,
-bucket) + ``_CURRENT`` pointer flipped atomically after the write —
-replays of a published epoch are no-ops and partial writes from a
-pre-publish crash are swept, the same two crash windows
-`dedup_ingest`/`index_ingest` cover.
+bucket) published through `streaming/store.py`, with the same two
+crash windows as `dedup_ingest`/`index_ingest`.
 
 Scale shape: the store probe is an equi-join on ``bucket`` — never
 all-pairs; only candidate store vectors join the exact-cosine verify.
@@ -37,11 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_search_spark.operators.similarity import _cosine_names, lsh_bucket
+from hadoop_search_spark.streaming import store
 
 VECS_SCHEMA = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
 
 
-class StreamingVectorDeduper:
+class StreamingVectorDeduper(store.VersionedStore):
     """Maintains the accepted-vector store under ``root`` from an
     embedding stream. Vec ids must be distinct across batches and
     increase with arrival order (the greedy contract)."""
@@ -54,27 +53,15 @@ class StreamingVectorDeduper:
         num_planes: int = 8,
         dim: int = 64,
     ) -> None:
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root)
         self.threshold = threshold
         self.num_planes = num_planes
         self.dim = dim
-        os.makedirs(root, exist_ok=True)
 
     # -- published-state accessors ------------------------------------
 
-    def _current_path(self) -> str | None:
-        ptr = os.path.join(self.root, "_CURRENT")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            return os.path.join(self.root, f.read().strip())
-
     def current_vectors(self) -> DataFrame | None:
-        path = self._current_path()
-        if path is None:
-            return None
-        return self.spark.read.parquet(os.path.join(path, "vectors"))
+        return self._read("vectors")
 
     # -- the dedup step ------------------------------------------------
 
@@ -160,18 +147,12 @@ class StreamingVectorDeduper:
         the live IVF index appender) then run under their OWN
         idempotence gates instead of being skipped by this store's
         pointer (the dedup_ingest crash-window contract)."""
-        version = f"v{epoch_id}"
-        cur = self._current_path()
-        if cur is not None and os.path.basename(cur) == version:
-            acc = os.path.join(cur, "accepted")
+        if store.current_version(self.root) == epoch_id:
+            acc = os.path.join(self.root, f"v{epoch_id}", "accepted")
             if os.path.exists(acc):
                 return self.spark.read.parquet(acc)
             return None  # pre-record store version: degrade to no-op
-        out = os.path.join(self.root, version)
-        if os.path.exists(out):
-            import shutil
-
-            shutil.rmtree(out)  # partial write from a pre-publish crash
+        out = store.version_dir(self.root, epoch_id)
         batch = batch.persist()
         try:
             if batch.isEmpty():
@@ -184,16 +165,5 @@ class StreamingVectorDeduper:
             keep.write.parquet(os.path.join(out, "accepted"))
         finally:
             batch.unpersist()
-        tmp = os.path.join(self.root, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(version)
-        os.replace(tmp, os.path.join(self.root, "_CURRENT"))
+        store.flip(self.root, epoch_id)
         return keep
-
-    def start(self, vec_stream: DataFrame, checkpoint: str):
-        return (
-            vec_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .start()
-        )

@@ -616,7 +616,7 @@ def main() -> int:
         # r9: the streaming histogram store's query surface over the
         # replicated corpus's length distribution, 4-epoch ingest
         from hadoop_search_spark.operators.sketch import hist_bounds
-        from hadoop_search_spark.streaming.hist_ingest import (
+        from hadoop_search_spark.streaming.sketch_ingest import (
             StreamingHistogram,
         )
 

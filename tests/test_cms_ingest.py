@@ -8,10 +8,8 @@ import shutil
 import pyspark.sql.functions as F
 
 from hadoop_search_spark.operators.sketch import cms_sketch
-from hadoop_search_spark.streaming.cms_ingest import (
-    StreamingCmsCounter,
-    _current_version,
-)
+from hadoop_search_spark.streaming.sketch_ingest import StreamingCmsCounter
+from hadoop_search_spark.streaming.store import current_version as _current_version
 
 SF_DIR = "/root/testdata/sf0.001"
 

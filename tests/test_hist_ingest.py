@@ -9,10 +9,8 @@ import os
 import pyspark.sql.functions as F
 
 from hadoop_search_spark.operators.sketch import hist_bounds, hist_sketch
-from hadoop_search_spark.streaming.hist_ingest import (
-    StreamingHistogram,
-    _current_version,
-)
+from hadoop_search_spark.streaming.sketch_ingest import StreamingHistogram
+from hadoop_search_spark.streaming.store import current_version as _current_version
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -9,10 +9,8 @@ import shutil
 import pyspark.sql.functions as F
 
 from hadoop_search_spark.operators.sketch import hll_registers
-from hadoop_search_spark.streaming.hll_ingest import (
-    StreamingHllCounter,
-    _current_version,
-)
+from hadoop_search_spark.streaming.sketch_ingest import StreamingHllCounter
+from hadoop_search_spark.streaming.store import current_version as _current_version
 
 SF_DIR = "/root/testdata/sf0.001"
 

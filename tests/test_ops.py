@@ -1786,6 +1786,7 @@ def test_ivfpq_index_add_equals_rebuild_and_code_drift_flags(
     clean on an in-distribution append, and an append saturating one
     codebook entry flags code_drift in the right subspace while the
     in-distribution cells stay quiet."""
+    import collections
     import os
 
     from hadoop_search_spark.operators.similarity import (
@@ -1814,6 +1815,14 @@ def test_ivfpq_index_add_equals_rebuild_and_code_drift_flags(
         if f.endswith(".parquet")
     }
     assert files_before <= files_after and len(files_after) > len(files_before)
+
+    def per_cell(files):
+        return collections.Counter(os.path.dirname(f) for f in files)
+
+    # the append is rebalanced by cell like the build: no touched cell
+    # partition gains more files than the build wrote into one
+    added = per_cell(files_after - files_before)
+    assert max(added.values()) <= max(per_cell(files_before).values())
 
     full_path = str(tmp_path / "ivfpq_full")
     write_ivfpq_index(emb, full_path, centroids=cents, books=books)
