@@ -34,6 +34,7 @@ Scale design:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -158,7 +159,11 @@ def build_index_tables(
     sw = stop_words(documents, num_stop_words)
     n = doc_count(documents)
     postings = build_postings(documents, stopwords=sw, num_docs=n, stem=stem)
-    corpus_stats = spark.createDataFrame([(n,)], "doc_num BIGINT")
+    # an Arrow table becomes a local relation: no job over it runs
+    # through the Python workers
+    corpus_stats = spark.createDataFrame(
+        pa.table({"doc_num": pa.array([n], pa.int64())}), "doc_num BIGINT"
+    )
     # vocabulary stats: the (term, df) table the query planner's J6
     # join ordering reads — publishing it here means a serving engine
     # seeds its driver cache from a tiny table scan instead of

@@ -125,7 +125,8 @@ def fetch_docs(documents: DataFrame, doc_ids: list[int]) -> DataFrame:
     reference's MapFile random access (`util/CorpusFetcher.java:97-102`)."""
     if not doc_ids:
         return documents.limit(0)
-    return documents.filter(F.col("doc_id").isin(*[int(d) for d in doc_ids]))
+    # one SQL predicate string: one py4j call, not one per id
+    return documents.filter(f"doc_id IN ({', '.join(str(int(d)) for d in doc_ids)})")
 
 
 def unescape_html(col: F.Column) -> F.Column:

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -153,8 +154,9 @@ class StreamingDeduper(store.VersionedStore):
             if any(a in alive for a in adj.get(d, ())):
                 continue
             alive.add(d)
+        # an Arrow table, even an empty one, becomes a local relation
         return self.spark.createDataFrame(
-            [(int(d),) for d in sorted(alive)] or [], "doc_id BIGINT"
+            pa.table({"doc_id": pa.array(sorted(alive), pa.int64())}), "doc_id BIGINT"
         )
 
     def process_batch(

@@ -14,7 +14,7 @@ and of an epoch sink under ``out``::
                            Spark's job commit left its _SUCCESS marker
 
 Readers only ever follow ``_CURRENT``, and the pointer is replaced
-atomically (tmp file + ``os.replace``) after the version dir is
+atomically (hidden tmp file + ``os.replace``) after the version dir is
 complete, so a reader sees the old version or the new one, never a
 partial write. Versions are named two ways: the merge stores
 (:class:`VersionedMergeStore`) and the DSIR model publish
@@ -79,12 +79,24 @@ def current_path(root: str) -> str | None:
     return None if v is None else os.path.join(root, f"v{v}")
 
 
+def replace_into(path: str, write: Callable[[str], None]) -> None:
+    """Atomically (re)write ``path``: ``write(tmp)`` fills a temp file
+    beside it, which then replaces ``path``. The temp name starts with
+    ".", so Spark's file listing never picks up a half-written file."""
+    head, tail = os.path.split(path)
+    tmp = os.path.join(head, f".{tail}.tmp")
+    write(tmp)
+    os.replace(tmp, path)
+
+
 def mark(path: str, text: str) -> None:
     """Atomically (re)write a small marker file."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(text)
-    os.replace(tmp, path)
+
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as f:
+            f.write(text)
+
+    replace_into(path, write)
 
 
 def flip(root: str, version: int) -> None:

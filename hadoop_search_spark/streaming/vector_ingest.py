@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -132,8 +133,9 @@ class StreamingVectorDeduper(store.VersionedStore):
             if any(a in alive for a in adj.get(v, ())):
                 continue
             alive.add(v)
+        # an Arrow table, even an empty one, becomes a local relation
         return self.spark.createDataFrame(
-            [(int(v),) for v in sorted(alive)] or [], "vec_id BIGINT"
+            pa.table({"vec_id": pa.array(sorted(alive), pa.int64())}), "vec_id BIGINT"
         )
 
     def process_batch(

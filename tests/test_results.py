@@ -1,11 +1,16 @@
 """Results layer tests: pagination, SearchResult wire format, snippet,
 NOT-aware highlighting, doc fetch, query cache."""
 
+import os
+import sys
+from concurrent.futures import ThreadPoolExecutor
+
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
 
-from hadoop_search_spark.plans.cache import QueryCache
+from hadoop_search_spark.plans.cache import _SCHEMA, QueryCache
 from hadoop_search_spark.plans.results import (
     SearchResult,
     _ordinal_index_of,
@@ -132,6 +137,48 @@ def test_query_cache_roundtrip(spark, tmp_path):
     assert cache.get("q1") == "12;1,2;3"
     cache.put("q1", "13;1,2,4;5")  # newest wins
     assert cache.get("q1") == "13;1,2,4;5"
+
+
+def test_query_cache_concurrent_puts(spark, tmp_path):
+    """Writers sharing one cache path never collide: each put is its
+    own file, renamed into place."""
+    path = str(tmp_path / "qc")
+    cache = QueryCache(spark, path)
+
+    def writer(t):
+        for i in range(25):
+            cache.put(f"q{t}-{i}", f"{t};{i}")
+            cache.get(f"q{t}-0")  # refreshes race the other writers
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            list(pool.map(writer, range(8), timeout=60))  # re-raises any put's error
+    finally:
+        sys.setswitchinterval(interval)
+
+    want = {f"q{t}-{i}": f"{t};{i}" for t in range(8) for i in range(25)}
+    assert all(cache.get(q) == r for q, r in want.items())
+    fresh = QueryCache(spark, path)
+    assert all(fresh.get(q) == r for q, r in want.items())
+    assert spark.read.schema(_SCHEMA).parquet(path).count() == len(want)
+
+
+def test_query_cache_reads_spark_part_files(spark, tmp_path):
+    """A directory written by Spark's append path (multi-row part
+    files) still answers, newest ts first, and a newer put wins."""
+    path = str(tmp_path / "qc")
+    old = pd.DataFrame(
+        {"query": ["q1", "q1", "q2"], "result": ["2;5,6", "1;5", "1;9"], "ts": [2.0, 1.0, 1.0]}
+    )
+    spark.createDataFrame(old, _SCHEMA).coalesce(1).write.parquet(path)
+    assert len([f for f in os.listdir(path) if f.startswith("part-")]) == 1
+    cache = QueryCache(spark, path)
+    assert cache.get("q1") == "2;5,6" and cache.get("q2") == "1;9"
+    cache.put("q1", "3;5,6,7")
+    assert cache.get("q1") == "3;5,6,7"
+    assert QueryCache(spark, path).get("q1") == "3;5,6,7"
 
 
 def test_catalog_render_page_no_nested_spans(spark):

@@ -23,6 +23,30 @@ def test_search_session_cache_roundtrip(spark, documents, tmp_path):
     assert sr2.serialize() == sr1.serialize()
 
 
+def test_search_session_cache_hit_runs_one_job(spark, documents, tmp_path):
+    """A hit reads the cache on the driver: the doc fetch is the only
+    Spark job."""
+    engine = SearchEngine(
+        spark, build_postings(documents, num_docs=500, stem=False), documents=documents, stem=None
+    )
+    sess = SearchSession(engine, documents, cache=QueryCache(spark, str(tmp_path / "qc")))
+    miss = sess.page("spark or stream", 1)
+    assert miss[0] > 0
+
+    sc = spark.sparkContext
+    group = f"cache-hit-{tmp_path.name}"
+    sc.setJobGroup(group, "cache hit page")
+    try:
+        hit = sess.page("spark or stream", 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert hit == miss
+
+    # the status store is filled from the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_search_session_page(spark, documents, tmp_path):
     engine = SearchEngine(
         spark, build_postings(documents, num_docs=500, stem=True), documents=documents
