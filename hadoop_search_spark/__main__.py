@@ -295,24 +295,19 @@ def cmd_drift(args) -> int:
     by layout). Exit code 1 when any cell flags, so the command
     slots into a cron/orchestrator as the documented offline-rebuild
     trigger."""
-    import os
     import sys
 
-    from hadoop_search_spark.operators.similarity import (
-        int8_index_drift,
-        ivf_index_drift,
-        ivfpq_index_drift,
-    )
+    from hadoop_search_spark.operators.similarity import layout_of
 
-    has_codes = os.path.exists(os.path.join(args.index, "codes"))
-    if not has_codes and not os.path.exists(
-        os.path.join(args.index, "vectors")
-    ):
+    spark = _spark(args.cpus)
+    layout = layout_of(spark, args.index)
+    if layout is None:
         print(
             f"no published index at {args.index} "
             "(neither codes/ nor vectors/)",
             file=sys.stderr,
         )
+        spark.stop()
         return 2
     if getattr(args, "graph", False):
         # graph-staleness mode: the adjacency is an offline artifact
@@ -325,7 +320,6 @@ def cmd_drift(args) -> int:
             graph_stale_report,
         )
 
-        spark = _spark(args.cpus)
         try:
             rows = (
                 graph_stale_report(spark, args.index)
@@ -361,9 +355,9 @@ def cmd_drift(args) -> int:
             return 1
         spark.stop()
         return 0
-    spark = _spark(args.cpus)
-    if has_codes:
-        rows = ivfpq_index_drift(spark, args.index).orderBy("cell", "s").collect()
+    report = layout.drift(spark, args.index)
+    if layout.name == "ivfpq":
+        rows = report.orderBy("cell", "s").collect()
         print(f"{'cell':>5}{'s':>3}{'n_orig':>8}{'n_new':>8}{'l1x':>12}{'drift':>7}")
         flagged = False
         for r in rows:
@@ -373,13 +367,9 @@ def cmd_drift(args) -> int:
                 f"{str(r.l1x):>12}{'YES' if r.code_drift else '-':>7}"
             )
     else:
-        # int8 stores hold qvec (no raw embedding column); the report
-        # shape matches ivf's so one printer serves both
-        store_cols = spark.read.parquet(
-            os.path.join(args.index, "vectors")
-        ).columns
-        drift_fn = int8_index_drift if "qvec" in store_cols else ivf_index_drift
-        rows = drift_fn(spark, args.index).orderBy("cell").collect()
+        # the int8 report's shape matches ivf's, so one printer serves
+        # both
+        rows = report.orderBy("cell").collect()
         print(
             f"{'cell':>5}{'n_orig':>8}{'n_new':>8}{'share':>7}{'dist':>6}{'drift':>7}"
         )
@@ -572,7 +562,7 @@ def cmd_ann(args) -> int:
         )
         score_col = "cosine"
     elif wide:
-        from hadoop_search_spark.operators.similarity import _topk_per_query
+        from hadoop_search_spark.operators.similarity import _exact_rerank
 
         out = (int8_index_topk if int8 else ivfpq_index_topk)(
             spark, args.index, queries, args.w,
@@ -591,13 +581,13 @@ def cmd_ann(args) -> int:
 
             graph = spark.read.parquet(f"{args.index}/graph")
             cand = graph_expand(graph, cand, args.rounds)
-            if not external:
-                cand = cand.filter(F.col("vec_id") != F.col("query_id"))
-        q = queries.withColumnRenamed("embedding", "q_emb")
-        pairs = emb.join(F.broadcast(cand), "vec_id").join(
-            F.broadcast(q), "query_id"
+        out = _exact_rerank(
+            emb,
+            cand,
+            queries.withColumnRenamed("embedding", "q_emb"),
+            args.k,
+            exclude_self=not external,
         )
-        out = _topk_per_query(pairs, args.k)
         score_col = "cosine"
     else:
         out = (int8_index_topk if int8 else ivfpq_index_topk)(

@@ -4039,7 +4039,7 @@ WHERE rn <= 10
     "cross-engine) broadcasts, distance is 8 element_at lookups + a "
     "fixed decimal sum, one top-k window. The billion-scale ANN "
     "memory layout: 1 BIGINT/vector instead of 256 float bytes; "
-    "recall < 1 by design (pq_recall measures it).",
+    "recall < 1 by design (recall_at_k measures it).",
 )
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_search_spark.operators.similarity import pq_codebooks, pq_topk
@@ -4139,7 +4139,7 @@ WHERE rn <= 10
     "through packed PQ codes only (ADC over a broadcast per-query "
     "LUT, decimal pre-sum). The index is one BIGINT code + one cell "
     "id per vector; a query never reads a raw corpus vector. Both "
-    "approximations compound (ivf_pq_recall measures the product).",
+    "approximations compound (recall_at_k measures the product).",
 )
 def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_search_spark.operators.similarity import ivf_pq_topk
@@ -4427,7 +4427,7 @@ WHERE rn <= 10
     "integer, so the oracle is exact by construction — no rounding "
     "discipline needed. The billion-scale first-stage filter in "
     "front of PQ/exact rerank; recall vs exact cosine is the 1-bit "
-    "LSH bound (hamming_recall measures it).",
+    "LSH bound (recall_at_k measures it).",
 )
 def sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_search_spark.operators.similarity import hamming_topk

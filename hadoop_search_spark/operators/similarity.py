@@ -26,6 +26,8 @@ expression); top-k per query is a window over query-partitioned data.
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -251,6 +253,17 @@ def _py_pq_lut(vec: list, books, sub: int) -> list:
     return out
 
 
+def _topk_window(scored: DataFrame, k: int, order: F.Column) -> DataFrame:
+    """The per-query top-k every ranked path ends in: ``rn`` =
+    row_number over (``order``, vec_id asc) within each query_id, as
+    a BIGINT, kept while ``rn ≤ k`` — one definition of the window and
+    its vec_id tie-break."""
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
+    return scored.withColumn(
+        "rn", F.row_number().over(w).cast("bigint")
+    ).filter(F.col("rn") <= k)
+
+
 def _topk_per_query(pairs: DataFrame, k: int) -> DataFrame:
     """Shared (query_id, vec_id, cosine, rn) top-k tail for the exact,
     LSH, and IVF paths — one definition of the scoring projection and
@@ -261,11 +274,62 @@ def _topk_per_query(pairs: DataFrame, k: int) -> DataFrame:
         "vec_id",
         _cosine_names("embedding", "q_emb").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return _topk_window(scored, k, F.desc("cosine"))
+
+
+def _pick(frame: DataFrame, query_ids: list[int], *cols) -> DataFrame:
+    """The query pick-list: ``frame``'s rows whose vec_id is in
+    ``query_ids``, as (query_id, *cols). The ``limit`` is a no-op
+    bound (vec_id is unique) that pins maxRows in the logical plan,
+    so the plan-audit gate can PROVE a broadcast build side of a
+    non-equi join is bounded instead of trusting an IN-filter
+    heuristic."""
     return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k)
+        frame.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
+        .limit(len(query_ids))
+        .select(F.col("vec_id").alias("query_id"), *cols)
     )
+
+
+def _q_emb(embeddings: DataFrame, query_ids: list[int]) -> DataFrame:
+    """(query_id, q_emb) — the pick-list every exact-cosine rerank
+    joins."""
+    return _pick(embeddings, query_ids, F.col("embedding").alias("q_emb"))
+
+
+def _exact_rerank(
+    corpus: DataFrame,
+    cand: DataFrame,
+    q: DataFrame,
+    k: int,
+    exclude_self: bool = False,
+) -> DataFrame:
+    """Exact-cosine rerank of a request-sized (query_id, vec_id)
+    candidate set → (query_id, vec_id, cosine, rn): the candidate ids
+    broadcast against ``corpus`` (a point-lookup join on the primary
+    key), the (query_id, q_emb) frame ``q`` broadcast onto them, then
+    the shared top-k tail. The last stage of every cascade, of the
+    graph-refined serves and of the CLI's ``ann search --rerank``."""
+    pairs = corpus.join(F.broadcast(cand), "vec_id").join(
+        F.broadcast(q), "query_id"
+    )
+    if exclude_self:
+        pairs = pairs.filter(F.col("vec_id") != F.col("query_id"))
+    return _topk_per_query(pairs, k)
+
+
+def recall_at_k(
+    embeddings: DataFrame, query_ids: list[int], k: int, approx: DataFrame
+) -> float:
+    """Measured recall@k of an approximate top-k frame ``approx``
+    (query_id, vec_id, ...) against the exact :func:`cosine_topk` —
+    the one way every approximate path's "recall < 1" becomes a
+    number. 1.0 when the exact set is empty."""
+    exact = {
+        (r.query_id, r.vec_id) for r in cosine_topk(embeddings, query_ids, k).collect()
+    }
+    got = {(r.query_id, r.vec_id) for r in approx.collect()}
+    return len(exact & got) / len(exact) if exact else 1.0
 
 
 def cosine_topk(
@@ -279,17 +343,7 @@ def cosine_topk(
     The query set joins in as a broadcast — the big side streams."""
     from hadoop_search_spark.partitioning import spread
 
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        # no-op bound (vec_id is unique) that pins maxRows in the
-        # logical plan, so the plan-audit gate can PROVE the broadcast
-        # build side of the non-equi join is bounded instead of
-        # trusting an IN-filter heuristic
-        .limit(len(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-        )
-    )
+    q = _q_emb(embeddings, query_ids)
     corpus = spread(embeddings, "vec_id")
     pairs = corpus.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
     return _topk_per_query(pairs, k)
@@ -353,13 +407,11 @@ def ann_lsh_topk(
     bucketed = spread(embeddings, "vec_id").withColumn(
         "bucket", lsh_bucket(F.col("embedding"), num_planes, dim)
     )
-    q = (
-        bucketed.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("bucket").alias("q_bucket"),
-        )
+    q = _pick(
+        bucketed,
+        query_ids,
+        F.col("embedding").alias("q_emb"),
+        F.col("bucket").alias("q_bucket"),
     )
     pairs = bucketed.join(
         F.broadcast(q),
@@ -463,16 +515,13 @@ def ann_lsh_multiprobe_topk(
     bucketed = spread(embeddings, "vec_id").withColumn(
         "bucket", lsh_bucket(F.col("embedding"), num_planes, dim)
     )
-    q = (
-        bucketed.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            _probe_buckets(
-                F.col("embedding"), num_planes, dim, flips
-            ).alias("probes"),
-        )
+    q = _pick(
+        bucketed,
+        query_ids,
+        F.col("embedding").alias("q_emb"),
+        _probe_buckets(F.col("embedding"), num_planes, dim, flips).alias(
+            "probes"
+        ),
     )
     probes = q.select(
         "query_id", "q_emb", F.explode("probes").alias("q_bucket")
@@ -483,19 +532,6 @@ def ann_lsh_multiprobe_topk(
         & (F.col("vec_id") != F.col("query_id")),
     )
     return _topk_per_query(pairs, k)
-
-
-def ann_lsh_multiprobe_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    num_planes: int = NUM_HYPERPLANES,
-    flips: int = 4,
-) -> float:
-    """Measured recall@k of the multi-probe path — the flips dial
-    made a number (compare :func:`ann_recall` at flips=0)."""
-    approx = ann_lsh_multiprobe_topk(embeddings, query_ids, k, num_planes, flips)
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
 
 
 NUM_CENTROIDS = 8
@@ -909,9 +945,7 @@ def ann_ivf_topk(
         embeddings, num_centroids
     )
     corpus = ivf_assign(spread(embeddings, "vec_id"), cents)
-    q = embeddings.filter(
-        F.col("vec_id").isin(*[int(i) for i in query_ids])
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
+    q = _q_emb(embeddings, query_ids)
     ranking = _cell_ranking(F.col("q_emb"), cents)
     probes = q.select(
         "query_id",
@@ -999,21 +1033,6 @@ def embedding_dedup_pairs(
     )
 
 
-def ann_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    num_planes: int = NUM_HYPERPLANES,
-    dim: int = 64,
-) -> float:
-    """Measured recall@k of the LSH path against the exact top-k —
-    turns the documented "recall < 1" into a number for tuning
-    ``num_planes`` (fewer planes → bigger buckets → higher recall,
-    more verify work)."""
-    approx = ann_lsh_topk(embeddings, query_ids, k, num_planes, dim)
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
-
-
 def knn_graph(
     embeddings: DataFrame,
     g: int = 8,
@@ -1089,7 +1108,9 @@ def publish_knn_graph(
     the serve (``build_centroids`` / ``build_num_centroids``: the
     pair-budget recipe), and partitioning by those build cells would
     silently break the prune's exactness."""
-    cents = _ivf_centroids_cached(spark, index_path)
+    # every layout publishes its coarse quantizer as /centroids; the
+    # IVF record loads exactly that model
+    cents = _models(spark, index_path, LAYOUTS["ivf"]).cents
     bc = build_centroids
     if bc is None:
         bc = (
@@ -1175,52 +1196,13 @@ def graph_refine_topk(
         embeddings, query_ids, w, num_centroids, nprobe, centroids=centroids
     ).select("query_id", "vec_id")
     cand = graph_expand(graph, seeds, rounds)
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
-    )
-    pairs = (
-        spread(embeddings, "vec_id")
-        .join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    return _topk_per_query(pairs, k)
-
-
-def graph_refine_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    g: int = 8,
-    num_centroids: int = NUM_CENTROIDS,
-    nprobe: int = 1,
-    seed_w: int | None = None,
-    centroids=None,
-    rounds: int = 1,
-) -> float:
-    """Measured recall@k of the graph-refined IVF path — the
-    go/no-go observable for the expansion-vs-wider-probing trade.
-    The graph builds with nprobe=2: boundary edges are the whole
-    mechanism (a cell-restricted graph measured flat — its edges
-    never leave the cell the narrow probe already scans)."""
-    graph = knn_graph(embeddings, g, centroids, num_centroids, nprobe=2)
-    approx = graph_refine_topk(
-        embeddings,
-        graph,
-        query_ids,
+    return _exact_rerank(
+        spread(embeddings, "vec_id"),
+        cand,
+        _q_emb(embeddings, query_ids),
         k,
-        num_centroids,
-        nprobe,
-        seed_w,
-        centroids=centroids,
-        rounds=rounds,
+        exclude_self=True,
     )
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
 
 
 def ivfpq_index_refine_topk(
@@ -1296,7 +1278,7 @@ def ivfpq_index_refine_topk(
     ).select("query_id", "vec_id")
     graph = spark.read.parquet(f"{path}/graph")
     if "cell" in graph.columns:
-        cents, _books, _enc, _rot = _ivfpq_models_cached(spark, path)
+        cents = _models(spark, path, LAYOUTS["ivfpq"]).cents
         probed = sorted({
             int(c)
             for r in qrows
@@ -1313,14 +1295,9 @@ def ivfpq_index_refine_topk(
     q = queries_lit.select(
         "query_id", F.col("embedding").alias("q_emb")
     )
-    pairs = (
-        spread(embeddings, "vec_id")
-        .join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(q), "query_id")
+    return _exact_rerank(
+        spread(embeddings, "vec_id"), cand, q, k, exclude_self
     )
-    if exclude_self:
-        pairs = pairs.filter(F.col("vec_id") != F.col("query_id"))
-    return _topk_per_query(pairs, k)
 
 
 def graph_stale_report(spark: SparkSession, path: str) -> DataFrame:
@@ -1340,26 +1317,14 @@ def graph_stale_report(spark: SparkSession, path: str) -> DataFrame:
     per cell directory, stale_frac 9dp-rounded. A vector counts as
     IN the graph iff it appears as a source node (a zero-edge node
     never enters the adjacency, so it is unreachable and correctly
-    reports stale). Layout-generic: reads the ``/codes`` table
-    (IVF-PQ) or falls back to ``/vectors`` (plain-IVF / int8) —
-    detection via the read itself, never a local-filesystem probe
-    (the r10 rule: ``os.path`` cannot see a remote index)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        codes = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(f"{path}/codes")
-            .select("vec_id", "cell")
-        )
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc):
-            raise
-        codes = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(f"{path}/vectors")
-            .select("vec_id", "cell")
-        )
+    reports stale). Layout-generic: reads the row table of the
+    layout :func:`layout_of` finds at ``path`` (``/codes`` for
+    IVF-PQ, ``/vectors`` for plain-IVF / int8) through the lineage
+    read."""
+    layout = layout_of(spark, path)
+    if layout is None:
+        raise ValueError(f"no published index at {path}")
+    codes = _lineage(spark, path, layout.rows).select("vec_id", "cell")
     nodes = spark.read.parquet(f"{path}/graph").select("vec_id").distinct()
     stale = F.coalesce(F.col("n_stale"), F.lit(0).cast("bigint"))
     return (
@@ -1383,475 +1348,6 @@ def graph_stale_report(spark: SparkSession, path: str) -> DataFrame:
         )
     )
 
-
-def ivf_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    num_centroids: int = NUM_CENTROIDS,
-    nprobe: int = NPROBE,
-    centroids=None,
-) -> float:
-    """Measured recall@k of the IVF path against the exact top-k —
-    the nprobe/num_centroids tuning knob made observable. Pass
-    ``centroids`` to measure a trained quantizer."""
-    approx = ann_ivf_topk(
-        embeddings, query_ids, k, num_centroids, nprobe, centroids=centroids
-    )
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
-
-
-def _recall_vs_exact(
-    embeddings: DataFrame, query_ids: list[int], k: int, approx: DataFrame
-) -> float:
-    exact = {
-        (r.query_id, r.vec_id) for r in cosine_topk(embeddings, query_ids, k).collect()
-    }
-    got = {(r.query_id, r.vec_id) for r in approx.collect()}
-    return len(exact & got) / len(exact) if exact else 1.0
-
-
-# ----------------------------------------------- IVF index persistence
-
-
-def write_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    centroids=None,
-    num_centroids: int = NUM_CENTROIDS,
-):
-    """Build and persist the IVF index: vectors land in parquet
-    PARTITIONED BY their cell (``{path}/vectors/cell=N/``) with the
-    quantizer centroids alongside (``{path}/centroids``). Probing a
-    published index then touches only the ``nprobe`` probed cell
-    directories — partition pruning does the cell selection at the
-    FILE level, the on-disk analogue of an in-memory inverted list.
-    This is the offline-build / serve split the text index uses
-    (SURVEY.md §3.2), applied to ANN. Returns the centroid model."""
-    spark = embeddings.sparkSession
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(embeddings, num_centroids)
-    )
-    # gen=0 marks the build generation; appends stamp 1, 2, ... —
-    # the lineage ivf_index_drift uses to compare appended vectors
-    # against the distribution the quantizer was trained on. The
-    # current generation also lands in a tiny _GEN sidecar so appends
-    # don't scan the index to learn it (single-writer, like _CURRENT)
-    ivf_assign(embeddings, cents).withColumn(
-        "gen", F.lit(0).cast("bigint")
-    ).write.mode("overwrite").partitionBy("cell").parquet(f"{path}/vectors")
-    _write_gen(path, 0)
-    _model_frame(
-        spark,
-        [(int(c), [float(x) for x in v]) for c, v in cents],
-        "cell INT, centroid ARRAY<DOUBLE>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    # an in-place rebuild re-defines the frozen quantizer — drop any
-    # session-pinned copy (see _ivf_centroids_cached)
-    _IVF_CENTROID_CACHE.pop(
-        (spark.sparkContext.applicationId, path), None
-    )
-    return cents
-
-
-def ivf_index_add(
-    spark: SparkSession,
-    path: str,
-    new_embeddings: DataFrame,
-    check_ids: bool = True,
-) -> int:
-    """Incremental IVF index maintenance — the ANN analogue of the
-    text index's ``merge_index``: assign NEW vectors with the
-    published index's FROZEN quantizer and append them into their
-    cell partitions. Only the touched ``cell=N`` directories gain
-    files; existing files are never rewritten, so the operation is
-    O(|new|) regardless of index size, and a serve against the index
-    sees exactly what a full rebuild with the same centroids would
-    (pinned by test). Returns the number of vectors added.
-
-    The quantizer is intentionally NOT retrained here — cell
-    assignments of existing vectors must stay valid for the appended
-    files to compose with them. Quantizer drift under a shifting
-    embedding distribution is handled by an offline rebuild
-    (:func:`write_ivf_index`), the same offline/online split the
-    text index uses.
-
-    ``check_ids=True`` (default) fails fast on vec_id collisions with
-    the existing index — an append cannot replace a vector, and a
-    silent duplicate would surface as two rows for one id at serve
-    time. The check scans only the index's vec_id column (column
-    pruning); pass False when the caller guarantees fresh ids (e.g.
-    monotone ingest offsets) and the scan is not worth it."""
-    cents = _ivf_centroids_cached(spark, path)
-    # normalize to the INDEX's stored embedding type BEFORE assigning:
-    # appending ARRAY<DOUBLE> rows into an ARRAY<FLOAT> store makes
-    # the vectors dir unreadable under schema merge (float/double
-    # arrays don't reconcile), and assignment must run on the values
-    # AS STORED for append == rebuild to hold exactly
-    stored_type = spark.read.parquet(f"{path}/vectors").schema[
-        "embedding"
-    ].dataType
-    new_embeddings = new_embeddings.withColumn(
-        "embedding", F.col("embedding").cast(stored_type)
-    )
-    # pin the batch ONCE: it is evaluated by the dup checks, the
-    # append write and the returned count — a non-deterministic
-    # source (sampling, a mutating stream batch) could pass the
-    # checks yet append different rows if each consumer re-executed
-    # the plan
-    new_embeddings = new_embeddings.localCheckpoint()
-    if check_ids:
-        # duplicates WITHIN the batch (an ingest retry concatenated
-        # into one frame) would append silently and serve as two rows
-        # per id — the same failure the index-collision check guards
-        n_intra = (
-            new_embeddings.groupBy("vec_id")
-            .count()
-            .filter(F.col("count") > 1)
-            .count()
-        )
-        if n_intra:
-            raise ValueError(
-                f"{n_intra} vec_ids appear more than once in the new batch; "
-                "IVF append cannot deduplicate — distinct the batch first"
-            )
-        existing = spark.read.parquet(f"{path}/vectors").select("vec_id")
-        n_dup = new_embeddings.join(existing, "vec_id").count()
-        if n_dup:
-            raise ValueError(
-                f"{n_dup} vec_ids already exist in the index at {path}; "
-                "IVF append cannot replace vectors — rebuild, or use fresh ids"
-            )
-    gen = _read_gen(spark, path) + 1
-    assigned = ivf_assign(new_embeddings, cents).withColumn(
-        "gen", F.lit(gen).cast("bigint")
-    )
-    # claim the generation BEFORE the data lands: a crash between the
-    # two leaves a HOLE in the gen sequence (harmless — gens are
-    # lineage labels, not offsets), whereas the reverse order would
-    # leave a stale _GEN and MERGE the next append into this one's
-    # generation in the drift lineage
-    _write_gen(path, gen)
-    assigned.write.mode("append").partitionBy("cell").parquet(f"{path}/vectors")
-    # count the WRITTEN frame (recomputed over the checkpointed batch,
-    # so it equals what the write saw), not the raw input
-    return assigned.count()
-
-
-def _model_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """A tiny driver-side MODEL table (centroids/codebooks/rotation/
-    encoding) as a ONE-slice DataFrame. ``createDataFrame(list)``
-    parallelizes the rows into ``defaultParallelism`` pickled slices,
-    and the publish pattern's ``coalesce(1)`` then pulls every slice
-    through a SEQUENTIAL Python-worker roundtrip inside one task —
-    measured 4-6 s per KB-sized model write at local[32] (r13; guide
-    §4: the Python boundary). One explicit slice = one roundtrip
-    (~0.3 s), the SAME row-conversion path, bit-identical values
-    (pinned by ``tests/test_ops.py::test_model_frame_one_slice_
-    bit_identical``), and already a single output file — no coalesce
-    needed."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-
-
-def _write_gen(path: str, gen: int) -> None:
-    import os
-
-    tmp = os.path.join(path, "_GEN.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(int(gen)))
-    os.replace(tmp, os.path.join(path, "_GEN"))
-
-
-def _read_gen(spark: SparkSession, path: str, table: str = "vectors") -> int:
-    """Current index generation in O(1) from the _GEN sidecar;
-    pre-sidecar indexes (or ones written before gen lineage existed)
-    fall back to one pruned scan — max(gen) if the column exists,
-    else 0 (a gen-less index is all build-generation by definition,
-    so appends/drift keep working instead of failing on the missing
-    column). ``table`` is the row store under the index root:
-    ``vectors`` for plain IVF, ``codes`` for IVF-PQ."""
-    import os
-
-    marker = os.path.join(path, "_GEN")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            return int(f.read().strip())
-    # mergeSchema: a pre-lineage index that has since been appended to
-    # holds BOTH gen-less and gen-bearing files — a plain read may
-    # sample a legacy footer and drop the column entirely
-    rows = spark.read.option("mergeSchema", "true").parquet(
-        f"{path}/{table}"
-    )
-    if "gen" not in rows.columns:
-        return 0
-    return int(
-        rows.agg(F.coalesce(F.max("gen"), F.lit(0)).alias("g"))
-        .collect()[0]
-        .g
-    )
-
-
-def load_ivf_centroids(spark: SparkSession, path: str):
-    """Centroid model back from a published index (driver-side list,
-    same shape ivf_centroids/ivf_train_kmeans produce)."""
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    return [(int(r.cell), [float(x) for x in r.centroid]) for r in rows]
-
-
-_IVF_CENTROID_CACHE: dict = {}
-
-# Bounded model caches: a long-lived serving session pins at most
-# this many (session, path) model sets; beyond it the oldest entry is
-# evicted (per-mkdtemp test indexes would otherwise accumulate
-# forever — each entry is only KBs, but unbounded is unbounded).
-_MODEL_CACHE_MAX = 32
-
-
-def _model_fingerprint(spark: SparkSession, path: str, table: str = "centroids"):
-    """Cross-process staleness signal for a published model table:
-    the sorted (file name, length, mtime) tuple of ``{path}/{table}``
-    via the Hadoop FileSystem client — a driver-side metadata call
-    (no Spark job) that works on any filesystem the session reaches.
-    An in-place rebuild rewrites the part-files (new UUID names), so
-    the tuple changes even though the path does not. This is the
-    signal the in-process writer invalidation cannot give when the
-    rebuild happens in a DIFFERENT process (a CLI ``ann build`` next
-    to a long-lived serving session): the frozen models are re-read
-    the first serve after the fingerprint moves, never silently
-    served stale."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{table}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return tuple(
-        sorted(
-            (
-                st.getPath().getName(),
-                int(st.getLen()),
-                int(st.getModificationTime()),
-            )
-            for st in fs.listStatus(hpath)
-        )
-    )
-
-
-def _model_cache_get(cache: dict, key, fingerprint, loader):
-    """Fingerprint-validated cache read: hit only when the persisted
-    fingerprint still matches; otherwise (re)load and evict oldest
-    entries beyond :data:`_MODEL_CACHE_MAX` (dict preserves insertion
-    order)."""
-    hit = cache.get(key)
-    if hit is not None and hit[0] == fingerprint:
-        return hit[1]
-    value = loader()
-    cache.pop(key, None)
-    cache[key] = (fingerprint, value)
-    while len(cache) > _MODEL_CACHE_MAX:
-        cache.pop(next(iter(cache)))
-    return value
-
-
-def _ivf_centroids_cached(spark: SparkSession, path: str):
-    """:func:`load_ivf_centroids` pinned per (session, path) — the
-    :func:`_ivfpq_models_cached` argument applied to the
-    vector-layout indexes (ivf / int8 share the /centroids table):
-    appends serve under the FROZEN coarse quantizer by contract, so
-    the only staling mutation is a rebuild — in-process rebuilds
-    invalidate eagerly (the writers pop their key), cross-process
-    rebuilds are caught by the :func:`_model_fingerprint` check on
-    every read. Removes a model-load job from every cold
-    serve/append/drift call (the fingerprint is one driver-side
-    listStatus, not a job)."""
-    key = (spark.sparkContext.applicationId, path)
-    fp = _model_fingerprint(spark, path)
-    return _model_cache_get(
-        _IVF_CENTROID_CACHE, key, fp, lambda: load_ivf_centroids(spark, path)
-    )
-
-
-def ivf_index_topk(
-    spark: SparkSession,
-    path: str,
-    query_ids: list[int],
-    k: int = 10,
-    nprobe: int = NPROBE,
-) -> DataFrame:
-    """Serve approximate top-k from a PUBLISHED IVF index — the
-    read-side twin of :func:`ann_ivf_topk`, identical output for the
-    same quantizer and nprobe (pinned by test).
-
-    Probe cells are ranked ON THE DRIVER with
-    :func:`_py_cell_ranking` — the exact Python twin of the Catalyst
-    ranking expression (integer :func:`_py_qdot` sums feeding one
-    IEEE division; identical bit-for-bit, the equivalence every
-    golden replay and the r11 ivfpq oracle gates pin — so the old
-    "Python floats could diverge by an ulp" concern is closed by the
-    integer recipe, and the serve stops paying per-plan compilation
-    of the ranking expression). The vector scan then filters on the
-    LITERAL probed-cell set, so only those partition directories are
-    read (PartitionFilters in the scan, asserted in tests). The
-    query-vector lookup itself is an id filter over the index — ONE
-    job; a serving deployment would keep vectors also keyed by id
-    (the corpus sink pattern) for point fetch."""
-    vectors = spark.read.parquet(f"{path}/vectors")
-    cents = _ivf_centroids_cached(spark, path)
-    q_rows = vectors.filter(
-        F.col("vec_id").isin(*[int(i) for i in query_ids])
-    ).select("vec_id", "embedding").collect()
-    lit_rows = [
-        (int(r.vec_id), [float(x) for x in r.embedding], int(cell))
-        for r in q_rows
-        for cell in _py_cell_ranking(r.embedding, cents)[:nprobe]
-    ]
-    probes_lit = spark.createDataFrame(
-        lit_rows, "query_id BIGINT, q_emb ARRAY<FLOAT>, cell BIGINT"
-    )
-    probed_cells = sorted({c for _q, _e, c in lit_rows})
-    pruned = vectors.filter(F.col("cell").isin(probed_cells))
-    pairs = pruned.join(F.broadcast(probes_lit), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    return _topk_per_query(pairs, k)
-
-
-def ivf_drift_stats(
-    orig: DataFrame,
-    new: DataFrame,
-    centroids,
-    share_factor: int = 2,
-    dist_margin9: int = 50_000_000,
-) -> DataFrame:
-    """Quantizer drift report — the observability half of the
-    frozen-quantizer contract (:func:`ivf_index_add` appends with the
-    BUILD-time centroids; this answers "has the appended distribution
-    drifted far enough that the documented offline rebuild should
-    run?"). Per cell →
-    ``(cell, n_orig, n_new, sum_cos9_orig, sum_cos9_new,
-    share_drift, dist_drift, drifted)``:
-
-    * ``share_drift``: the cell's share of APPENDED vectors exceeds
-      ``share_factor`` × its share of ORIGINAL vectors (new data is
-      piling into cells the quantizer sized small — hot partitions at
-      probe time). A cell with appends but zero original vectors
-      always flags.
-    * ``dist_drift``: appended vectors sit materially farther from
-      their centroid than the originals — mean cosine-to-centroid of
-      the new slice is more than ``dist_margin9``/1e9 below the
-      original slice's (the quantizer no longer fits the data near
-      this cell).
-
-    Exactness: per-vector cosine-to-assigned-centroid derives from
-    :func:`_qdot` integer sums (dot and both squared norms — see _QS),
-    so the one IEEE division/sqrt sees bit-identical inputs in every
-    engine and run; the per-row value then quantizes via
-    ``floor(cos·1e9)`` (floor of an identical double is deterministic
-    cross-engine where round() is not) into an exact BIGINT sum. Both
-    drift tests are integer/DECIMAL(38) cross-multiplications — no
-    float sum, no division anywhere, so a DuckDB oracle reproduces
-    every flag bit-for-bit. Mean distances are derivable by the
-    consumer as sum_cos9 / n / 1e9.
-
-    Scale shape: one union + one per-cell aggregation (partial aggs
-    apply) + a 1-row broadcast of the global totals. The centroid
-    lookup is ``element_at`` on a C-sized literal array — map-only,
-    no join against the model."""
-    cvecs = _lit_double_matrix([vec for _, vec in centroids])
-    cqnorms = F.array(
-        *[F.lit(float(_py_qdot(vec, vec))) for _, vec in centroids]
-    )
-    idx = (F.col("cell") + 1).cast("int")
-    cosd = _qdot(F.col("embedding"), F.element_at(cvecs, idx)).cast(
-        "double"
-    ) / F.sqrt(
-        _qdot(F.col("embedding"), F.col("embedding")).cast("double")
-        * F.element_at(cqnorms, idx)
-    )
-    tagged = (
-        orig.select("embedding", "cell", F.lit(True).alias("is_orig"))
-        .unionByName(
-            new.select("embedding", "cell", F.lit(False).alias("is_orig"))
-        )
-        .withColumn("row9", F.floor(cosd * F.lit(1000000000.0)))
-    )
-    row9 = F.col("row9")
-
-    def sum9(cond):
-        return F.sum(F.when(cond, row9).otherwise(F.lit(0))).cast("bigint")
-
-    agg = tagged.groupBy("cell").agg(
-        F.sum(F.when(F.col("is_orig"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_orig"),
-        F.sum(F.when(~F.col("is_orig"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_new"),
-        sum9(F.col("is_orig")).alias("sum_cos9_orig"),
-        sum9(~F.col("is_orig")).alias("sum_cos9_new"),
-    )
-    tots = agg.agg(
-        F.sum("n_orig").cast("bigint").alias("tot_orig"),
-        F.sum("n_new").cast("bigint").alias("tot_new"),
-    )
-
-    def dec(c):
-        return c.cast("decimal(38,0)")
-
-    share_drift = dec(F.col("n_new")) * dec(F.col("tot_orig")) > F.lit(
-        share_factor
-    ) * dec(F.col("n_orig")) * dec(F.col("tot_new"))
-    dist_drift = (
-        (F.col("n_orig") > 0)
-        & (F.col("n_new") > 0)
-        & (
-            dec(F.col("sum_cos9_new")) * dec(F.col("n_orig"))
-            < dec(F.col("sum_cos9_orig")) * dec(F.col("n_new"))
-            - F.lit(dist_margin9) * dec(F.col("n_orig")) * dec(F.col("n_new"))
-        )
-    )
-    return (
-        agg.crossJoin(F.broadcast(tots))
-        .withColumn("share_drift", share_drift)
-        .withColumn("dist_drift", dist_drift)
-        .withColumn(
-            "drifted", F.col("share_drift") | F.col("dist_drift")
-        )
-        .drop("tot_orig", "tot_new")
-    )
-
-
-def ivf_index_drift(spark: SparkSession, path: str) -> DataFrame:
-    """Drift report over a PUBLISHED index: original = the ``gen=0``
-    build generation, appended = every :func:`ivf_index_add`
-    generation since. Vectors already carry their cell, so this is a
-    pure aggregation over the index — no re-assignment.
-
-    Lineage robustness: an index built BEFORE gen lineage existed and
-    appended to afterwards holds a mix of gen-less and gen-bearing
-    files. The read merges schemas (a plain read can sample a legacy
-    footer and lose the column) and legacy rows' NULL gen coalesces to
-    0 — they ARE the build generation, so the baseline slice keeps its
-    original vectors instead of silently dropping them and flagging
-    share_drift on every appended cell."""
-    vectors = spark.read.option("mergeSchema", "true").parquet(
-        f"{path}/vectors"
-    )
-    if "gen" not in vectors.columns:
-        # pre-lineage index: everything is build-generation
-        vectors = vectors.withColumn("gen", F.lit(0).cast("bigint"))
-    else:
-        vectors = vectors.withColumn(
-            "gen", F.coalesce(F.col("gen"), F.lit(0).cast("bigint"))
-        )
-    cents = _ivf_centroids_cached(spark, path)
-    return ivf_drift_stats(
-        vectors.filter(F.col("gen") == 0),
-        vectors.filter(F.col("gen") > 0),
-        cents,
-    )
-
-
-# ------------------------------------------------------------- PCA
 
 # ------------------------------------------------ product quantization
 
@@ -2180,20 +1676,13 @@ def pq_topk(
     per-query top-k window — the IVF probe pattern with codes instead
     of floats, i.e. the memory layout that makes billion-scale ANN
     serveable. Recall < 1 by design (quantization error), measured by
-    :func:`pq_recall`."""
+    :func:`recall_at_k`."""
     if books is None:
         books = pq_codebooks(embeddings, dim=dim)
     m, kc = len(books), len(books[0])
     sub = dim // m
     codes = pq_encode(embeddings, books, dim)
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        # no-op bound pinning maxRows so the plan gate can PROVE the
-        # broadcast build side of the non-equi join is bounded (the
-        # cosine_topk pattern)
-        .limit(len(query_ids))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
+    q = _pick(embeddings, query_ids, "embedding")
     # per-query LUT: m*kc integer-quantized distances, flattened
     # [s*kc + j] — exact and order-independent under addition, so the
     # oracle may add the same 8 values in any join order and still
@@ -2205,11 +1694,7 @@ def pq_topk(
         F.broadcast(qlut), F.col("vec_id") != F.col("query_id")
     )
     scored = pairs.select("query_id", "vec_id", _adc_score(m, kc))
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist9"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k_results)
-    )
+    return _topk_window(scored, k_results, F.asc("adist9"))
 
 
 def ivf_pq_topk(
@@ -2234,7 +1719,7 @@ def ivf_pq_topk(
     the only float work is the per-query LUT (m·k distances against
     the query's true subvectors, broadcast). Both reductions are
     approximate (cell recall × code quantization), measured by
-    :func:`ivf_pq_recall`."""
+    :func:`recall_at_k`."""
     cents = (
         centroids
         if centroids is not None
@@ -2251,11 +1736,7 @@ def ivf_pq_topk(
         "vec_id", "cell", _pq_code_expr(books, dim).alias("code")
     )
     # query side: probe cells (the ann_ivf_topk expression) + LUT
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
+    q = _pick(embeddings, query_ids, "embedding")
     ranking = _cell_ranking(F.col("embedding"), cents)
     lut = _pq_lut(F.col("embedding"), books, sub)
     probes = q.select(
@@ -2267,11 +1748,7 @@ def ivf_pq_topk(
         F.col("vec_id") != F.col("query_id")
     )
     scored = pairs.select("query_id", "vec_id", _adc_score(m, kc))
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist9"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k_results)
-    )
+    return _topk_window(scored, k_results, F.asc("adist9"))
 
 
 def _residual_expr(emb: F.Column, centroids) -> F.Column:
@@ -2393,11 +1870,7 @@ def ivf_pq_residual_topk(
         "residual_opq" if rotation is not None else "residual",
         rotation,
     )
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
+    q = _pick(embeddings, query_ids, "embedding")
     ranking = _cell_ranking(F.col("embedding"), cents)
     probes = q.select(
         "query_id",
@@ -2422,28 +1895,7 @@ def ivf_pq_residual_topk(
         F.col("vec_id") != F.col("query_id")
     )
     scored = pairs.select("query_id", "vec_id", _adc_score(m, kc))
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist9"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k_results)
-    )
-
-
-def ivf_pq_residual_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    num_centroids: int = NUM_CENTROIDS,
-    nprobe: int = NPROBE,
-) -> float:
-    """Measured recall@k of the residual IVFADC path vs the exact
-    top-k — comparable against :func:`ivf_pq_recall` at identical
-    (num_centroids, nprobe, m, k) to see what residual encoding
-    buys."""
-    approx = ivf_pq_residual_topk(
-        embeddings, query_ids, k, num_centroids, nprobe
-    )
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
+    return _topk_window(scored, k_results, F.asc("adist9"))
 
 
 def _ivfpq_encode_frame(
@@ -2654,555 +2106,7 @@ def cascade_ivfpq_residual_topk(
         embeddings, query_ids, w, num_centroids, nprobe, centroids,
         books, dim, rotation,
     ).select("query_id", "vec_id")
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
-    )
-    pairs = embeddings.join(F.broadcast(cand), "vec_id").join(
-        F.broadcast(q), "query_id"
-    )
-    return _topk_per_query(pairs, k)
-
-
-def write_ivfpq_index(
-    embeddings: DataFrame,
-    path: str,
-    centroids=None,
-    books=None,
-    num_centroids: int = NUM_CENTROIDS,
-    dim: int = 64,
-    encoding: str = "raw",
-    rotation=None,
-    exact_rotation: bool = True,
-):
-    """Persist the IVF-PQ index: ONE row per vector — (vec_id, code)
-    under ``{path}/codes/cell=N/`` — plus the two models
-    (``/centroids``, ``/codebooks``). No raw vectors are stored at
-    all: the serve path never needs them (ADC compares through codes),
-    so a 64-dim float32 corpus persists at ~1/32 the bytes before
-    columnar compression even starts. Probing prunes to cell
-    DIRECTORIES via partition filters, exactly like
-    :func:`write_ivf_index`. Codes carry the same ``gen`` lineage +
-    ``_GEN`` sidecar as the IVF vectors table (build = 0, appends
-    stamp next) so :func:`ivfpq_index_drift` can compare appended
-    code distributions against the build's.
-
-    ``encoding`` picks what the codes quantize (see
-    :func:`_ivfpq_encode_frame`): ``"raw"`` (the r8 layout, default),
-    ``"residual"`` (IVFADC), or ``"residual_opq"`` (rotation learned
-    on the residual population — the best stage-1 ordering per byte
-    in docs/ANN_QUALITY.md). The encoding kind is persisted under
-    ``/encoding`` and the rotation model under ``/rotation`` with the
-    allocation permutation PRE-APPLIED, so serve/append reconstruct
-    the exact expression; indexes written before the encoding table
-    existed load as ``"raw"``. Default books: seed codebooks in the
-    encoding's own space for raw/residual, the trained
-    :func:`pq_residual_opq_model` for residual_opq (which also
-    supplies the rotation). Returns (centroids, books) — plus the
-    rotation via the model call when the caller lets this function
-    train it."""
-    spark = embeddings.sparkSession
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(embeddings, num_centroids)
-    )
-    if encoding == "residual_opq" and books is None and rotation is None:
-        books, rotation = pq_residual_opq_model(
-            embeddings, cents, dim=dim, exact_rotation=exact_rotation
-        )
-    if books is None:
-        if encoding == "raw":
-            books = pq_codebooks(embeddings, dim=dim)
-        elif encoding == "residual_opq":
-            # rotation is non-None here (the both-None case trained the
-            # full model above); books must train in the ROTATED
-            # residual space the codes occupy (r10 ADVICE)
-            books = pq_residual_opq_books(
-                embeddings, cents, rotation, dim=dim,
-                exact_rotation=exact_rotation,
-            )
-        else:
-            books = pq_residual_codebooks(embeddings, cents, dim=dim)
-    # REBALANCE by cell before the write (guide §6): the encode frame
-    # is spread across the cluster for the expensive encode exprs, and
-    # writing it directly would emit one file per (task × cell) —
-    # 255 KB-sized files at local[32] on the fixture. The AQE
-    # rebalance shuffles only the TINY (vec_id, cell, code, gen) rows
-    # (the encode projection stays below the exchange), coalescing to
-    # advisory-sized files per cell directory and splitting a hot
-    # cell rather than funnelling it through one writer.
-    _ivfpq_encode_frame(
-        embeddings, cents, books, dim, encoding, rotation,
-        exact_rotation=exact_rotation,
-    ).withColumn("gen", F.lit(0).cast("bigint")).hint(
-        "rebalance", "cell"
-    ).write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
-    _write_gen(path, 0)
-    _model_frame(
-        spark,
-        [(int(c), [float(x) for x in v]) for c, v in cents],
-        "cell INT, centroid ARRAY<DOUBLE>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    _model_frame(
-        spark,
-        [
-            (s, j, [float(x) for x in books[s][j]])
-            for s in range(len(books))
-            for j in range(len(books[0]))
-        ],
-        "s INT, j INT, centroid ARRAY<DOUBLE>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    _model_frame(
-        spark, [(encoding,)], "kind STRING"
-    ).write.mode("overwrite").parquet(f"{path}/encoding")
-    if encoding == "residual_opq":
-        mean, comps, perm = rotation
-        _model_frame(
-            spark,
-            [
-                (pos, float(mean[pos]), [float(x) for x in comps[ci]])
-                for pos, ci in enumerate(perm)
-            ],
-            "pos INT, mean DOUBLE, comp ARRAY<DOUBLE>",
-        ).write.mode("overwrite").parquet(f"{path}/rotation")
-    # an in-place rebuild re-defines the frozen models — drop any
-    # session-pinned copy (see _ivfpq_models_cached)
-    _IVFPQ_MODEL_CACHE.pop(
-        (spark.sparkContext.applicationId, path), None
-    )
-    return cents, books
-
-
-def load_ivfpq_models(spark: SparkSession, path: str):
-    """(centroids, books) back from a published IVF-PQ index."""
-    cents = [
-        (int(r.cell), [float(x) for x in r.centroid])
-        for r in spark.read.parquet(f"{path}/centroids")
-        .orderBy("cell")
-        .collect()
-    ]
-    rows = spark.read.parquet(f"{path}/codebooks").orderBy("s", "j").collect()
-    m = max(r.s for r in rows) + 1
-    books = [[None] * (len(rows) // m) for _ in range(m)]
-    for r in rows:
-        books[r.s][r.j] = [float(x) for x in r.centroid]
-    return cents, books
-
-
-def load_ivfpq_encoding(spark: SparkSession, path: str):
-    """(encoding_kind, rotation_or_None) from a published IVF-PQ
-    index. Pre-r10 indexes have no ``/encoding`` table and load as
-    ``("raw", None)`` — the only layout that existed then. A
-    persisted rotation comes back with the permutation pre-applied
-    (identity perm), so callers feed it straight to
-    :func:`_opq_rotate_expr`.
-
-    Detection reads THROUGH Spark, so an index on any filesystem the
-    session can reach (HDFS/S3 URIs included) resolves its real
-    encoding — only a genuine path-not-found from the read maps to
-    the pre-r10 raw layout. (r10 ADVICE: the old ``os.path.exists``
-    probe made a reachable-but-remote residual index silently load
-    as raw — exactly the silent-fallback class the drift guards
-    exist to kill: raw LUTs against residual codes rank wrong, and
-    an append would corrupt the stored code meaning.)"""
-    from pyspark.errors import AnalysisException
-
-    try:
-        kind = spark.read.parquet(f"{path}/encoding").collect()[0].kind
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e):
-            return "raw", None
-        raise
-    if kind != "residual_opq":
-        return kind, None
-    rows = spark.read.parquet(f"{path}/rotation").orderBy("pos").collect()
-    mean = [float(r.mean) for r in rows]
-    comps = [[float(x) for x in r.comp] for r in rows]
-    return kind, (mean, comps, list(range(len(rows))))
-
-
-_IVFPQ_MODEL_CACHE: dict = {}
-
-
-def _ivfpq_models_cached(spark: SparkSession, path: str):
-    """(cents, books, enc_kind, rotation) for a published IVF-PQ
-    index, loaded at most once per (session, path) — CORRECT by the
-    frozen-models contract: appends never change centroids, codebooks,
-    encoding, or rotation (re-defining them would re-define every
-    stored code), so the only mutation that could stale the cache is
-    an in-place rebuild — :func:`write_ivfpq_index` invalidates the
-    key it writes in-process, and a CROSS-process rebuild (CLI build
-    beside a long-lived serving session) is caught by the
-    :func:`_model_fingerprint` check on every read. At real scale the
-    artifact is immutable-versioned (a rebuild publishes a NEW path)
-    and a serving process pins the models once — this cache is that
-    behavior, and it removes four small model-load jobs from every
-    cold serve (measured r11: 1.4 s → ~0.4 s fresh-plan serve at
-    nprobe=2; the fingerprint is one driver-side listStatus)."""
-    key = (spark.sparkContext.applicationId, path)
-    fp = _model_fingerprint(spark, path)
-
-    def _load():
-        cents, books = load_ivfpq_models(spark, path)
-        enc_kind, rotation = load_ivfpq_encoding(spark, path)
-        return (cents, books, enc_kind, rotation)
-
-    return _model_cache_get(_IVFPQ_MODEL_CACHE, key, fp, _load)
-
-
-def ivfpq_index_topk(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k_results: int = 10,
-    nprobe: int = NPROBE,
-    dim: int = 64,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Serve ADC top-k from a PUBLISHED IVF-PQ index. ``queries`` is a
-    (query_id, embedding) frame — the index stores no raw vectors, so
-    the query embedding arrives from the caller (an encoder service,
-    in production). Probe cells resolve from the tiny query frame via
-    the shared Catalyst ranking expression (collected — queries are
-    request-sized by definition), the code scan filters on the LITERAL
-    probed-cell set (PartitionFilters prune to those directories), and
-    scoring is the broadcast-LUT ADC sum. Pinned equal to the
-    in-memory :func:`ivf_pq_topk` for the same models.
-
-    Serves every persisted encoding (``/encoding``): for
-    ``residual``/``residual_opq`` layouts the LUT is per (query,
-    PROBED CELL) — the query's residual is taken against each probed
-    cell's centroid (rotated for OPQ) before the table builds,
-    exactly the :func:`ivf_pq_residual_topk` contract.
-
-    The whole query side (cell ranking, residual, rotation, LUT) is
-    computed ON THE DRIVER with the exact Python twins of the engine
-    expressions (``_py_cell_ranking``/``_py_opq_rotate``/
-    ``_py_pq_lut`` — the same arithmetic the golden replay pins
-    bit-identical). Queries are request-sized by definition, so this
-    is microseconds of driver work — and it removes the one real cost
-    the r10 form paid: COMPILING the ~dim² decimal-fold rotation +
-    m·k LUT expression per fresh plan (~6 s of driver-side Catalyst/
-    codegen at dim=64, measured r11 — the serving-path constant, not
-    the data). The distributed part of the serve is only what scales:
-    the partition-pruned code scan + broadcast-LUT ADC sum.
-
-    ``exclude_self=True`` (default) drops candidates whose vec_id
-    equals the query_id — right when queries come FROM the indexed
-    corpus (every pinned in-memory chain). Pass ``False`` for
-    EXTERNAL query ids (an encoder's request ids — the CLI
-    ``--queries`` file): an external id space is unrelated to corpus
-    vec_ids, and a numeric collision must not silently drop a true
-    neighbor."""
-    cents, books, enc_kind, rotation = _ivfpq_models_cached(spark, path)
-    m, kc = len(books), len(books[0])
-    sub = dim // m
-    cmap = {int(c): [float(x) for x in v] for c, v in cents}
-    lit_rows = []
-    for r in queries.select("query_id", "embedding").collect():
-        emb = [float(x) for x in r.embedding]
-        for cell in _py_cell_ranking(emb, cents)[:nprobe]:
-            if enc_kind == "raw":
-                qvec = emb
-            else:
-                qvec = [x - c for x, c in zip(emb, cmap[cell])]
-                if enc_kind == "residual_opq":
-                    qvec = _py_opq_rotate(qvec, rotation)
-            lit_rows.append(
-                (int(r.query_id), _py_pq_lut(qvec, books, sub), int(cell))
-            )
-    # the broadcast side is a literal frame (the ivf_index_topk
-    # pattern); the BIGINT schema round-trips the quantized LUT
-    # exactly — no float hop. verifySchema=False: the rows are built
-    # two lines up from int()/_py_pq_lut (ints by construction), and
-    # the per-element verifier walk costs ~0.1 s per serve on an
-    # m·k LUT × nprobe × queries (measured r12 — pure driver latency)
-    probes_lit = spark.createDataFrame(
-        lit_rows,
-        "query_id BIGINT, lut ARRAY<BIGINT>, cell BIGINT",
-        verifySchema=False,
-    )
-    probed_cells = sorted({c for _q, _l, c in lit_rows})
-    codes = spark.read.parquet(f"{path}/codes").filter(
-        F.col("cell").isin(probed_cells)
-    )
-    pairs = codes.join(F.broadcast(probes_lit), "cell")
-    if exclude_self:
-        pairs = pairs.filter(F.col("vec_id") != F.col("query_id"))
-    scored = pairs.select("query_id", "vec_id", _adc_score(m, kc))
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist9"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k_results)
-    )
-
-
-def ivfpq_index_add(
-    spark: SparkSession,
-    path: str,
-    new_embeddings: DataFrame,
-    check_ids: bool = True,
-    dim: int = 64,
-    exact_rotation: bool = True,
-) -> int:
-    """Incremental IVF-PQ index maintenance — :func:`ivf_index_add`
-    for the codes-only layout: assign NEW vectors with the published
-    index's FROZEN coarse centroids AND frozen codebooks, encode, and
-    append (vec_id, code, gen) rows into their cell partitions. Only
-    touched ``cell=N`` directories gain files — O(|new|) regardless
-    of index size — and a serve sees exactly what a full rebuild with
-    the same models would (pinned by test). Returns rows added.
-
-    Both models are intentionally frozen: cell assignments AND code
-    meanings of existing rows must stay valid for appended files to
-    compose with them (re-trained codebooks would silently re-define
-    every stored nibble). Model drift is observability + offline
-    rebuild, exactly the IVF contract — :func:`ivfpq_index_drift`
-    watches the CODE distribution per cell, the layout's analogue of
-    the vector-space drift report.
-
-    Gen lineage follows ivf_index_add's crash ordering: the ``_GEN``
-    claim lands BEFORE the data write (a crashed append leaves a gen
-    hole, never merges into the previous generation).
-
-    Appends under the index's persisted ENCODING (raw / residual /
-    residual_opq) via the single-sourced :func:`_ivfpq_encode_frame`
-    — for the rotated layout the frozen-model set includes the
-    rotation (re-learning it would silently re-define every stored
-    code, same contract as the codebooks). ``exact_rotation=False``
-    is the same production-build knob :func:`write_ivfpq_index`
-    carries (r10 ADVICE: appends previously always paid the ~3.7
-    ms/row decimal fold): the numpy matmul per Arrow batch, last-ulp
-    different — keep the exact default wherever a golden replays the
-    appended codes."""
-    cents, books, enc_kind, rotation = _ivfpq_models_cached(spark, path)
-    new_embeddings = new_embeddings.localCheckpoint()
-    if check_ids:
-        n_intra = (
-            new_embeddings.groupBy("vec_id")
-            .count()
-            .filter(F.col("count") > 1)
-            .count()
-        )
-        if n_intra:
-            raise ValueError(
-                f"{n_intra} vec_ids appear more than once in the new batch; "
-                "IVF-PQ append cannot deduplicate — distinct the batch first"
-            )
-        existing = spark.read.parquet(f"{path}/codes").select("vec_id")
-        n_dup = new_embeddings.join(existing, "vec_id").count()
-        if n_dup:
-            raise ValueError(
-                f"{n_dup} vec_ids already exist in the index at {path}; "
-                "IVF-PQ append cannot replace vectors — rebuild, or use "
-                "fresh ids"
-            )
-    gen = _read_gen(spark, path, table="codes") + 1
-    assigned = _ivfpq_encode_frame(
-        new_embeddings, cents, books, dim, enc_kind, rotation,
-        exact_rotation=exact_rotation,
-    ).withColumn("gen", F.lit(gen).cast("bigint"))
-    _write_gen(path, gen)
-    # same rebalance-by-cell as write_ivfpq_index: without it an append
-    # writes one small file per (task × touched cell)
-    assigned.hint("rebalance", "cell").write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{path}/codes")
-    return assigned.count()
-
-
-def ivfpq_drift_stats(
-    orig_codes: DataFrame,
-    new_codes: DataFrame,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    l1_permille: int = 1000,
-    min_new: int = 50,
-) -> DataFrame:
-    """Code-space drift report for an IVF-PQ index — the
-    observability half of the frozen-codebook contract: per
-    (cell, subspace), how far has the APPENDED rows' code histogram
-    moved from the BUILD generation's? Inputs are two (cell, code)
-    frames; output one row per (cell, s) →
-    ``(cell, s, n_orig, n_new, l1x, code_drift)``:
-
-    * the per-subspace code ``j`` unpacks from the packed BIGINT by
-      integer div/mod (explode of the m subspace indexes + scalar
-      arithmetic — no float anywhere);
-    * ``l1x = Σ_j |n_new_j·T_orig − n_orig_j·T_new|`` over the k code
-      bins, with ``T_*`` the (cell, s) totals — the cross-multiplied
-      numerator of the L1 histogram distance (÷ T_orig·T_new would
-      give the usual [0,2] value; no division keeps it bit-exact).
-      The SUM runs in DECIMAL(38,0) but the published column is
-      BIGINT: each |·| term is ≤ T_o·T_n and the triangle inequality
-      bounds the sum, ``l1x ≤ 2·T_o·T_n``, which fits int64 whenever
-      T_o·T_n < 2^62 — i.e. up to ~2·10^9 build AND append rows per
-      (cell, subspace), far past any per-cell population this index
-      layout would tolerate before a rebuild. (A uniform BIGINT
-      output schema also avoids decimal-vs-int64 value-rendering
-      skew across Arrow consumers — the column was DECIMAL(38,0)
-      through r8 and that rendering difference was the localized
-      cause of a persistent driver-side hash divergence.) The
-      ``code_drift`` predicate reads the PRE-CAST decimal sum and the
-      publish cast is guarded by ``raise_error``: under non-ANSI
-      Spark an out-of-bound BIGINT cast silently NULLs — which would
-      suppress the very alert the report exists to raise — while the
-      DuckDB twin's CAST errors loudly; the guard makes both engines
-      fail the same way past the documented bound;
-    * ``code_drift`` flags when the normalized L1 exceeds
-      ``l1_permille``/1000 — i.e. ``1000·l1x > l1_permille·T_o·T_n``
-      — or when a (cell, s) has appends but no build rows at all.
-      Both require ``n_new ≥ min_new``: the empirical L1 of an
-      n-sample histogram against its own source distribution is
-      ~√(2k/πn) (≈1.0 at n=11, k=16 — pure sampling noise), so small
-      appends carry no evidence either way; the default pair
-      (1000‰, 50) sits well above the noise floor at the minimum
-      sample and tightens as appends accumulate.
-
-    A flagged subspace means appended vectors exercise codebook
-    entries the build distribution didn't — quantization error is no
-    longer what the build measured, and the documented offline
-    rebuild (with retrained codebooks) should run.
-
-    Scale shape: one union + one m-way explode (constant fan-out) +
-    two aggregations over (cell, s[, j]) — bins are C·m·k regardless
-    of corpus size; the totals join-back is against that tiny frame.
-    Pure aggregation, no division, SQL-oracle-exact."""
-    powk = [int(k**s) for s in range(m)]
-    tagged = orig_codes.select(
-        "cell", "code", F.lit(True).alias("is_orig")
-    ).unionByName(
-        new_codes.select("cell", "code", F.lit(False).alias("is_orig"))
-    )
-    # posexplode the subspace power array: s = position, p = k^s;
-    # IntegralDivide (`div`) keeps the unpack in exact long arithmetic
-    # for ANY k — float `/` would only be exact for power-of-two k
-    subs = tagged.select(
-        "cell",
-        "is_orig",
-        F.posexplode(F.array(*[F.lit(p) for p in powk])).alias("s", "p"),
-        "code",
-    ).withColumn("j", F.expr(f"(code div p) % {int(k)}"))
-    counts = subs.groupBy("cell", "s", "j").agg(
-        F.sum(F.when(F.col("is_orig"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_orig_j"),
-        F.sum(F.when(~F.col("is_orig"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_new_j"),
-    )
-
-    def dec(c):
-        return c.cast("decimal(38,0)")
-
-    tots = counts.groupBy("cell", "s").agg(
-        F.sum("n_orig_j").cast("bigint").alias("t_orig"),
-        F.sum("n_new_j").cast("bigint").alias("t_new"),
-    )
-    joined = counts.join(F.broadcast(tots), ["cell", "s"])
-    agg = joined.groupBy("cell", "s").agg(
-        F.max("t_orig").alias("n_orig"),
-        F.max("t_new").alias("n_new"),
-        F.sum(
-            F.abs(
-                dec(F.col("n_new_j")) * dec(F.col("t_orig"))
-                - dec(F.col("n_orig_j")) * dec(F.col("t_new"))
-            )
-        ).alias("l1x_dec"),
-    )
-    # the drift decision reads the PRE-CAST decimal sum (1000·l1x ≤
-    # 2000·T_o·T_n ≪ 10^38, never overflows where the predicate is
-    # defined); the BIGINT publish is guarded — a silent non-ANSI
-    # NULL here would erase both the value AND the flag
-    drift = (F.col("n_new") >= min_new) & (
-        ((F.col("n_orig") == 0) & (F.col("n_new") > 0))
-        | (
-            F.lit(1000).cast("decimal(38,0)") * F.col("l1x_dec")
-            > F.lit(l1_permille).cast("decimal(38,0)")
-            * dec(F.col("n_orig"))
-            * dec(F.col("n_new"))
-        )
-    )
-    l1x_pub = F.when(
-        F.col("l1x_dec") > F.lit((1 << 63) - 1).cast("decimal(38,0)"),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "ivfpq_drift_stats: l1x exceeds int64 (l1x="
-                ),
-                F.col("l1x_dec").cast("string"),
-                F.lit(
-                    "); per-(cell,s) populations passed the ~2e9-row "
-                    "documented bound — rebuild the index before "
-                    "re-running drift"
-                ),
-            )
-        ).cast("bigint"),
-    ).otherwise(F.col("l1x_dec").cast("bigint"))
-    return agg.select(
-        "cell",
-        "s",
-        "n_orig",
-        "n_new",
-        l1x_pub.alias("l1x"),
-        drift.alias("code_drift"),
-    )
-
-
-def ivfpq_index_drift(spark: SparkSession, path: str) -> DataFrame:
-    """Code-space drift over a PUBLISHED IVF-PQ index: build
-    generation (gen=0) vs every append since — a pure aggregation
-    over the codes table, no raw vectors anywhere (the index stores
-    none). Same lineage robustness as :func:`ivf_index_drift`:
-    merge-schema read, legacy NULL gen coalesces to the build
-    generation."""
-    codes = spark.read.option("mergeSchema", "true").parquet(
-        f"{path}/codes"
-    )
-    if "gen" not in codes.columns:
-        codes = codes.withColumn("gen", F.lit(0).cast("bigint"))
-    else:
-        codes = codes.withColumn(
-            "gen", F.coalesce(F.col("gen"), F.lit(0).cast("bigint"))
-        )
-    _, books = load_ivfpq_models(spark, path)
-    return ivfpq_drift_stats(
-        codes.filter(F.col("gen") == 0),
-        codes.filter(F.col("gen") > 0),
-        m=len(books),
-        k=len(books[0]),
-    )
-
-
-def ivf_pq_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    num_centroids: int = NUM_CENTROIDS,
-    nprobe: int = NPROBE,
-) -> float:
-    """Measured recall@k of the composed IVF+PQ path against the
-    exact top-k — the product of the two approximation knobs made
-    observable."""
-    approx = ivf_pq_topk(embeddings, query_ids, k, num_centroids, nprobe)
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
-
-
-def pq_recall(
-    embeddings: DataFrame, query_ids: list[int], k: int = 10, books=None
-) -> float:
-    """Measured recall@k of ADC-PQ search against the exact cosine
-    top-k — the m/k tuning knob made observable (same contract as
-    :func:`ivf_recall`; note PQ ranks by L2 over raw vectors while
-    the exact baseline ranks by cosine, so recall reflects both
-    quantization AND metric mismatch on unnormalized corpora)."""
-    approx = pq_topk(embeddings, query_ids, k, books)
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
+    return _exact_rerank(embeddings, cand, _q_emb(embeddings, query_ids), k)
 
 
 def binary_sketch_exprs(vec_col: str = "embedding", dim: int = 64):
@@ -3264,38 +2168,19 @@ def hamming_topk(
 
     hi, lo = binary_sketch_exprs(dim=dim)
     sk = spread(embeddings, "vec_id").select("vec_id", hi, lo)
-    q = (
-        sk.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("sketch_hi").alias("q_hi"),
-            F.col("sketch_lo").alias("q_lo"),
-        )
+    q = _pick(
+        sk,
+        query_ids,
+        F.col("sketch_hi").alias("q_hi"),
+        F.col("sketch_lo").alias("q_lo"),
     )
     pairs = sk.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
     ham = (
         F.bit_count(F.col("sketch_hi").bitwiseXOR(F.col("q_hi")))
         + F.bit_count(F.col("sketch_lo").bitwiseXOR(F.col("q_lo")))
     ).cast("bigint")
-    scored = pairs.select(
-        "query_id", "vec_id", ham.alias("hamming")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("vec_id")
-    )
-    return scored.withColumn(
-        "rn", F.row_number().over(w).cast("bigint")
-    ).filter(F.col("rn") <= k)
-
-
-def hamming_recall(
-    embeddings: DataFrame, query_ids: list[int], k: int = 10
-) -> float:
-    """Measured recall@k of the sign-sketch Hamming path against the
-    exact cosine top-k — the 1-bit quantization loss made a number."""
-    approx = hamming_topk(embeddings, query_ids, k)
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
+    scored = pairs.select("query_id", "vec_id", ham.alias("hamming"))
+    return _topk_window(scored, k, F.asc("hamming"))
 
 
 def cascade_topk(
@@ -3318,38 +2203,14 @@ def cascade_topk(
     REQUEST-SIZED candidate id list against the corpus (a point-lookup
     join on the primary key — at 100 TB, an id-sorted/bucketed vector
     store serves it with file pruning). Recall vs the exact top-k is
-    the prefilter-width knob (:func:`cascade_recall`) — wider floor,
+    the prefilter-width knob (measured by :func:`recall_at_k`) — wider floor,
     same exact rerank; at prefilter = corpus size the cascade IS
     cosine_topk. Deterministic end to end: the Hamming cutoff ties
     break on vec_id, the rerank ties on (cosine desc, vec_id)."""
     cand = hamming_topk(embeddings, query_ids, prefilter, dim).select(
         "query_id", "vec_id"
     )
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
-    )
-    pairs = embeddings.join(F.broadcast(cand), "vec_id").join(
-        F.broadcast(q), "query_id"
-    )
-    return _topk_per_query(pairs, k)
-
-
-def cascade_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    prefilter: int = 100,
-) -> float:
-    """Measured recall@k of the Hamming→exact cascade — strictly ≥
-    plain :func:`hamming_recall` at the same k (the rerank can only
-    fix stage-1 ordering mistakes inside the candidate set)."""
-    approx = cascade_topk(embeddings, query_ids, k, prefilter)
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
+    return _exact_rerank(embeddings, cand, _q_emb(embeddings, query_ids), k)
 
 
 def cascade3_topk(
@@ -3386,11 +2247,7 @@ def cascade3_topk(
     c1 = hamming_topk(embeddings, query_ids, w1, dim).select(
         "query_id", "vec_id"
     )
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
+    q = _pick(embeddings, query_ids, "embedding")
     qlut = q.select(
         "query_id", _pq_lut(F.col("embedding"), books, sub).alias("lut")
     )
@@ -3399,33 +2256,14 @@ def cascade3_topk(
         .select("query_id", "vec_id", _pq_code_expr(books, dim).alias("code"))
         .join(F.broadcast(qlut), "query_id")
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.asc("adist9"), F.asc("vec_id")
+    c2 = _topk_window(
+        cand_codes.select("query_id", "vec_id", _adc_score(m, kc)),
+        w2,
+        F.asc("adist9"),
+    ).select("query_id", "vec_id")
+    return _exact_rerank(
+        embeddings, c2, q.withColumnRenamed("embedding", "q_emb"), k
     )
-    c2 = (
-        cand_codes.select("query_id", "vec_id", _adc_score(m, kc))
-        .withColumn("arn", F.row_number().over(w_adc))
-        .filter(F.col("arn") <= w2)
-        .select("query_id", "vec_id")
-    )
-    pairs = embeddings.join(F.broadcast(c2), "vec_id").join(
-        F.broadcast(q.select("query_id", F.col("embedding").alias("q_emb"))),
-        "query_id",
-    )
-    return _topk_per_query(pairs, k)
-
-
-def cascade3_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    w1: int = 200,
-    w2: int = 40,
-) -> float:
-    """Measured recall@k of the three-stage funnel vs the exact
-    top-k — the (w1, w2) width dial made a number."""
-    approx = cascade3_topk(embeddings, query_ids, k, w1, w2)
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
 
 
 def cascade_ivfpq_topk(
@@ -3460,18 +2298,7 @@ def cascade_ivfpq_topk(
         embeddings, query_ids, w, num_centroids, nprobe, centroids,
         books, dim,
     ).select("query_id", "vec_id")
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
-    )
-    pairs = embeddings.join(F.broadcast(cand), "vec_id").join(
-        F.broadcast(q), "query_id"
-    )
-    return _topk_per_query(pairs, k)
+    return _exact_rerank(embeddings, cand, _q_emb(embeddings, query_ids), k)
 
 
 # int8 stage-1 quantization scale: Σ floor((xᵢ·qᵢ)·1e9) per pair —
@@ -3479,6 +2306,43 @@ def cascade_ivfpq_topk(
 # 64-dim sum ≤ ~8.3e12, far inside int64; 1e-9 absolute per-element
 # resolution is below any cosine gap the rerank can't fix.
 _QS8 = 1_000_000_000.0  # 1e9
+
+
+def _qdot8(a: F.Column, qvec: F.Column) -> F.Column:
+    """Σ floor((aᵢ·qvecᵢ)·1e9) as one exact BIGINT — the int8 paths'
+    float-against-code dot product (see _QS8): query against code on
+    the serve side, centroid against code in the drift report."""
+    return F.aggregate(
+        F.zip_with(
+            a,
+            qvec,
+            lambda x, qi: F.floor(
+                (x.cast("double") * qi.cast("double")) * F.lit(_QS8)
+            ),
+        ),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc + v,
+    )
+
+
+def _qn_expr(qvec: F.Column) -> F.Column:
+    """Σ codeᵢ² as exact BIGINT — the int8 store's per-vector squared
+    norm (the only per-vector statistic the scale-free ranking
+    needs; amax cancels, see :func:`int8_topk`)."""
+    return F.aggregate(
+        qvec,
+        F.lit(0).cast("bigint"),
+        lambda acc, qi: acc + (qi * qi).cast("bigint"),
+    )
+
+
+def _s8(qn: F.Column) -> F.Column:
+    """The scale-free int8 score sdot/√qn of a ``q_emb`` query against
+    a stored ``qvec`` with squared norm ``qn`` — one IEEE division and
+    sqrt of exact integers per row (see :func:`int8_topk`)."""
+    return _qdot8(F.col("q_emb"), F.col("qvec")).cast("double") / F.sqrt(
+        qn.cast("double")
+    )
 
 
 def int8_topk(
@@ -3515,41 +2379,16 @@ def int8_topk(
     qz = quantized
     if qz is None:
         qz = embedding_quantize_int8(embeddings).select("vec_id", "qvec")
-    qz = spread(qz, "vec_id").withColumn(
-        "_qn",
-        F.aggregate(
-            F.col("qvec"),
-            F.lit(0).cast("bigint"),
-            lambda acc, qi: acc + (qi * qi).cast("bigint"),
-        ),
-    )
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
-    )
-    sdot = F.aggregate(
-        F.zip_with(
-            F.col("q_emb"),
-            F.col("qvec"),
-            lambda x, qi: F.floor(
-                (x.cast("double") * qi.cast("double")) * F.lit(_QS8)
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    s8 = sdot.cast("double") / F.sqrt(F.col("_qn").cast("double"))
+    qz = spread(qz, "vec_id").withColumn("_qn", _qn_expr(F.col("qvec")))
     pairs = (
         qz.filter(F.col("_qn") > 0)  # zero vectors have no cosine
-        .join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", s8.alias("s8"))
+        .join(
+            F.broadcast(_q_emb(embeddings, query_ids)),
+            F.col("vec_id") != F.col("query_id"),
+        )
+        .select("query_id", "vec_id", _s8(F.col("_qn")).alias("s8"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("s8"), F.asc("vec_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k)
-    )
+    return _topk_window(pairs, k, F.desc("s8"))
 
 
 def cascade_int8_topk(
@@ -3568,29 +2407,7 @@ def cascade_int8_topk(
     cosine ORDER, so recall at small w runs far above the PQ tiers
     (measured in docs/ANN_QUALITY.md) at 8× their storage."""
     cand = int8_topk(embeddings, query_ids, w).select("query_id", "vec_id")
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
-    )
-    pairs = embeddings.join(F.broadcast(cand), "vec_id").join(
-        F.broadcast(q), "query_id"
-    )
-    return _topk_per_query(pairs, k)
-
-
-def cascade_int8_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    w: int = 50,
-) -> float:
-    """Measured recall@k of the int8→exact cascade."""
-    approx = cascade_int8_topk(embeddings, query_ids, k, w)
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
+    return _exact_rerank(embeddings, cand, _q_emb(embeddings, query_ids), k)
 
 
 def ivf_int8_topk(
@@ -3615,7 +2432,8 @@ def ivf_int8_topk(
     into a single scan); at scale it persists cell-partitioned like
     :func:`write_ivfpq_index`, so probing prunes files. Both
     approximations (cell miss × int8 ordering) are measured by
-    :func:`cascade_ivf_int8_recall`'s exact-rerank composition."""
+    :func:`recall_at_k` over the :func:`cascade_ivf_int8_topk`
+    exact-rerank composition."""
     cents = (
         centroids
         if centroids is not None
@@ -3626,20 +2444,9 @@ def ivf_int8_topk(
         ivf_assign(embeddings, cents)
         .select("vec_id", "cell")
         .join(qz, "vec_id")
-        .withColumn(
-            "_qn",
-            F.aggregate(
-                F.col("qvec"),
-                F.lit(0).cast("bigint"),
-                lambda acc, qi: acc + (qi * qi).cast("bigint"),
-            ),
-        )
+        .withColumn("_qn", _qn_expr(F.col("qvec")))
     )
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    )
+    q = _pick(embeddings, query_ids, "embedding")
     ranking = _cell_ranking(F.col("embedding"), cents)
     probes = q.select(
         F.col("query_id"),
@@ -3649,26 +2456,10 @@ def ivf_int8_topk(
     pairs = indexed.join(F.broadcast(probes), "cell").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    sdot = F.aggregate(
-        F.zip_with(
-            F.col("q_emb"),
-            F.col("qvec"),
-            lambda x, qi: F.floor(
-                (x.cast("double") * qi.cast("double")) * F.lit(_QS8)
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    s8 = sdot.cast("double") / F.sqrt(F.col("_qn").cast("double"))
     scored = pairs.filter(F.col("_qn") > 0).select(
-        "query_id", "vec_id", s8.alias("s8")
+        "query_id", "vec_id", _s8(F.col("_qn")).alias("s8")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("s8"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k)
-    )
+    return _topk_window(scored, k, F.desc("s8"))
 
 
 def cascade_ivf_int8_topk(
@@ -3687,420 +2478,7 @@ def cascade_ivf_int8_topk(
     cand = ivf_int8_topk(
         embeddings, query_ids, w, num_centroids, nprobe
     ).select("query_id", "vec_id")
-    q = (
-        embeddings.filter(F.col("vec_id").isin(*[int(i) for i in query_ids]))
-        .limit(len(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
-    )
-    pairs = embeddings.join(F.broadcast(cand), "vec_id").join(
-        F.broadcast(q), "query_id"
-    )
-    return _topk_per_query(pairs, k)
-
-
-def cascade_ivf_int8_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    w: int = 50,
-    num_centroids: int = NUM_CENTROIDS,
-    nprobe: int = NPROBE,
-) -> float:
-    """Measured recall@k of the IVF-SQ8→exact stack — upper-bounded
-    by the IVF cell recall at the same nprobe, approached as w grows
-    (int8 ordering error → 0 under the rerank)."""
-    approx = cascade_ivf_int8_topk(
-        embeddings, query_ids, k, w, num_centroids, nprobe
-    )
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
-
-
-def _qn_expr(qvec: F.Column) -> F.Column:
-    """Σ codeᵢ² as exact BIGINT — the int8 store's per-vector squared
-    norm (the only per-vector statistic the scale-free ranking
-    needs; amax cancels, see :func:`int8_topk`)."""
-    return F.aggregate(
-        qvec,
-        F.lit(0).cast("bigint"),
-        lambda acc, qi: acc + (qi * qi).cast("bigint"),
-    )
-
-
-def write_int8_index(
-    embeddings: DataFrame,
-    path: str,
-    centroids=None,
-    num_centroids: int = NUM_CENTROIDS,
-):
-    """Build and persist the IVF-SQ8 index — the 64 B/vec serving
-    tier as a durable artifact (the int8 twin of
-    :func:`write_ivfpq_index`): one row per vector ``(vec_id, amax9,
-    qvec, qn, gen)`` under ``{path}/vectors/cell=N/`` plus the coarse
-    centroid model (``/centroids``, the :func:`write_ivf_index`
-    layout, so :func:`load_ivf_centroids` reads it unchanged). No raw
-    floats are stored: the scan side of :func:`int8_index_topk` reads
-    codes + the precomputed BIGINT norm (``qn``, materialized at
-    build so serving never re-folds it), and ``amax9`` rides along
-    for consumers that need approximate dequantization
-    (``x ≈ q·amax/127``). Probing prunes to cell DIRECTORIES via
-    partition filters. Same ``gen`` lineage + ``_GEN`` sidecar as
-    every index in this module (build = 0, appends stamp next).
-    Returns the centroid model."""
-    spark = embeddings.sparkSession
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(embeddings, num_centroids)
-    )
-    from hadoop_search_spark.partitioning import spread
-
-    # r13: assign + quantize are both MAP-ONLY projections of the
-    # same row — the previous assign⋈quantize self-join on vec_id was
-    # an accidental shuffle of both subtrees (guide §2.4); the fused
-    # single projection is value-identical (the join was 1:1 on the
-    # unique vec_id). spread parallelizes the quantize folds on a
-    # small-file scan (no-op at cluster-wide scans) and the rebalance
-    # compacts the write to advisory-sized files per cell (guide §6),
-    # the write_ivfpq_index pattern.
-    (
-        embedding_quantize_int8(
-            ivf_assign(spread(embeddings, "vec_id"), cents),
-            extra_cols=("cell",),
-        )
-        .select("vec_id", "cell", "amax9", "qvec")
-        .withColumn("qn", _qn_expr(F.col("qvec")))
-        .withColumn("gen", F.lit(0).cast("bigint"))
-        .hint("rebalance", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors")
-    )
-    _write_gen(path, 0)
-    _model_frame(
-        spark,
-        [(int(c), [float(x) for x in v]) for c, v in cents],
-        "cell INT, centroid ARRAY<DOUBLE>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    # an in-place rebuild re-defines the frozen quantizer — drop any
-    # session-pinned copy (see _ivf_centroids_cached)
-    _IVF_CENTROID_CACHE.pop(
-        (spark.sparkContext.applicationId, path), None
-    )
-    return cents
-
-
-def int8_index_add(
-    spark: SparkSession,
-    path: str,
-    new_embeddings: DataFrame,
-    check_ids: bool = True,
-) -> int:
-    """Incremental IVF-SQ8 maintenance — :func:`ivf_index_add` for
-    the int8 layout: quantize NEW vectors, assign them with the
-    published index's FROZEN coarse centroids, and append
-    ``(vec_id, amax9, qvec, qn, gen)`` rows into their cell
-    partitions. O(|new|) regardless of index size; a serve sees
-    exactly what a full rebuild with the same centroids would
-    (pinned by test). int8 quantization is PER-VECTOR (each row's
-    own amax), so unlike PQ there is no trained codebook to freeze —
-    the only frozen model is the coarse quantizer, and the drift
-    story is :func:`ivf_index_drift`'s cell-distribution watch.
-    Returns rows added. Gen lineage follows the module's crash
-    ordering: the ``_GEN`` claim lands BEFORE the data write."""
-    cents = _ivf_centroids_cached(spark, path)
-    new_embeddings = new_embeddings.withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    ).localCheckpoint()
-    if check_ids:
-        n_intra = (
-            new_embeddings.groupBy("vec_id")
-            .count()
-            .filter(F.col("count") > 1)
-            .count()
-        )
-        if n_intra:
-            raise ValueError(
-                f"{n_intra} vec_ids appear more than once in the new batch; "
-                "int8 append cannot deduplicate — distinct the batch first"
-            )
-        existing = spark.read.parquet(f"{path}/vectors").select("vec_id")
-        n_dup = new_embeddings.join(existing, "vec_id").count()
-        if n_dup:
-            raise ValueError(
-                f"{n_dup} vec_ids already exist in the index at {path}; "
-                "int8 append cannot replace vectors — rebuild, or use "
-                "fresh ids"
-            )
-    gen = _read_gen(spark, path) + 1
-    # fused map-only assign+quantize projection — see write_int8_index
-    # (the join was an accidental shuffle, 1:1 on the unique vec_id)
-    assigned = (
-        embedding_quantize_int8(
-            ivf_assign(new_embeddings, cents), extra_cols=("cell",)
-        )
-        .select("vec_id", "cell", "amax9", "qvec")
-        .withColumn("qn", _qn_expr(F.col("qvec")))
-        .withColumn("gen", F.lit(gen).cast("bigint"))
-    )
-    _write_gen(path, gen)
-    assigned.write.mode("append").partitionBy("cell").parquet(
-        f"{path}/vectors"
-    )
-    return assigned.count()
-
-
-def int8_index_topk(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k_results: int = 10,
-    nprobe: int = NPROBE,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Serve stage-1 top-k from a PUBLISHED IVF-SQ8 index.
-    ``queries`` is a (query_id, embedding) frame (the index stores no
-    raw floats — query embeddings arrive from the caller, as in
-    :func:`ivfpq_index_topk`). Probe cells resolve from the tiny
-    query frame via the shared ranking expression (collected —
-    queries are request-sized), the store scan filters on the LITERAL
-    probed-cell set (PartitionFilters prune to those directories),
-    and scoring is the scale-free integer ranking: sdot (exact BIGINT
-    fold of floor(qᵢ·codeᵢ·1e9)) / √qn (the precomputed BIGINT norm)
-    — one IEEE div/sqrt of identical integers per row. Zero vectors
-    (qn = 0) have no cosine and are excluded. Returns
-    (query_id, vec_id, s8, rn) — :func:`ivf_int8_topk`'s shape,
-    pinned equal to it for the same centroids; compose with an exact
-    rerank against the raw corpus for the
-    :func:`cascade_ivf_int8_topk` serving stack. ``exclude_self``
-    follows the :func:`ivfpq_index_topk` contract — default True for
-    corpus-sourced query ids, False for external id spaces where a
-    numeric collision must not drop a true neighbor."""
-    cents = _ivf_centroids_cached(spark, path)
-    # probe ranking on the driver via the exact Python twin (the
-    # ivf_index_topk / ivfpq_index_topk serving treatment, r11):
-    # queries are request-sized, and the ranking expression's
-    # per-plan compile was the serving constant
-    lit_rows = [
-        (int(r.query_id), [float(x) for x in r.embedding], int(cell))
-        for r in queries.select("query_id", "embedding").collect()
-        for cell in _py_cell_ranking(r.embedding, cents)[:nprobe]
-    ]
-    probes_lit = spark.createDataFrame(
-        lit_rows, "query_id BIGINT, q_emb ARRAY<DOUBLE>, cell BIGINT"
-    )
-    probed_cells = sorted({c for _q, _e, c in lit_rows})
-    store = spark.read.parquet(f"{path}/vectors").filter(
-        F.col("cell").isin(probed_cells)
-    )
-    pairs = store.join(F.broadcast(probes_lit), "cell")
-    if exclude_self:
-        pairs = pairs.filter(F.col("vec_id") != F.col("query_id"))
-    sdot = F.aggregate(
-        F.zip_with(
-            F.col("q_emb"),
-            F.col("qvec"),
-            lambda x, qi: F.floor(
-                (x.cast("double") * qi.cast("double")) * F.lit(_QS8)
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    s8 = sdot.cast("double") / F.sqrt(F.col("qn").cast("double"))
-    scored = pairs.filter(F.col("qn") > 0).select(
-        "query_id", "vec_id", s8.alias("s8")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("s8"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k_results)
-    )
-
-
-def int8_drift_stats(
-    store: DataFrame,
-    centroids,
-    share_factor: int = 2,
-    dist_margin9: int = 50_000_000,
-) -> DataFrame:
-    """Quantizer drift report for an IVF-SQ8 store — the
-    observability half of the frozen-coarse-quantizer contract for
-    the int8 layout, computed from the STORE ALONE (no raw floats
-    anywhere in the index): the per-vector scale cancels out of
-    cosine, so cos(x̂, c) of the DEQUANTIZED vector equals
-    cos(qvec, c) exactly — amax is never read. ``store`` is the
-    published (cell, qvec, qn, is_orig) frame; per cell →
-    ``(cell, n_orig, n_new, sum_dq9_orig, sum_dq9_new, share_drift,
-    dist_drift, drifted)`` with the :func:`ivf_drift_stats`
-    semantics:
-
-    * ``share_drift``: appended share exceeds ``share_factor`` × the
-      build share (appends piling into cells the quantizer sized
-      small); a cell with appends but no build rows always flags;
-    * ``dist_drift``: mean dequantized cosine-to-centroid of the
-      appended slice sits more than ``dist_margin9``/1e9 below the
-      build slice's.
-
-    Exactness: the numerator is Σ floor(cᵢ·qvecᵢ·1e9) (exact BIGINT —
-    the _QS8 recipe over int codes), the denominator
-    √qn·√(qc/1e12) with qn the store's precomputed BIGINT norm and
-    qc the centroid's _py_qdot integer literal — every IEEE op sees
-    bit-identical integers, the per-row value floors to ``dq9`` (an
-    exact BIGINT sum), and both drift tests are DECIMAL(38,0)
-    cross-multiplications. Fully SQL-oracle-exact, every published
-    column BIGINT/BOOLEAN (the r9 l1x lesson). Scale shape: one
-    per-cell aggregation + a 1-row broadcast of totals; the centroid
-    lookup is ``element_at`` on a C-sized literal — map-only.
-
-    Zero-norm convention: a stored row with ``qn = 0`` (the all-zero
-    vector) contributes ``dq9 = 0`` and IS counted in
-    ``n_orig``/``n_new`` — unlike the SERVE path, which excludes
-    zero-norm rows from ranking (cosine undefined). The report is a
-    census of the store, so every stored row counts; an appended
-    batch dominated by zero vectors therefore drags the appended
-    slice's mean cosine toward 0, which is the correct alarm — those
-    rows ARE unservable quantization junk. The SQL oracle mirrors the
-    cos:=0 convention deliberately.
-
-    The centroid model must be dense 0..C-1 (checked at plan time —
-    ``element_at`` keys by LIST POSITION) and every store cell must
-    be in range (checked per row via ``raise_error`` — a non-ANSI
-    out-of-range ``element_at`` returns NULL, which would silently
-    drop those rows from the drift sums)."""
-    cells = [c for c, _ in centroids]
-    if cells != list(range(len(cells))):
-        raise ValueError(
-            "int8_drift_stats: centroid cells must be dense 0..C-1 "
-            f"(element_at keys by list position), got {cells}"
-        )
-    n_cells = len(centroids)
-    cvecs = _lit_double_matrix([vec for _, vec in centroids])
-    cqn = F.array(
-        *[F.lit(float(_py_qdot(vec, vec))) for _, vec in centroids]
-    )
-    idx = (F.col("cell") + 1).cast("int")
-    sdotc = F.aggregate(
-        F.zip_with(
-            F.element_at(cvecs, idx),
-            F.col("qvec"),
-            lambda c, qi: F.floor(
-                (c.cast("double") * qi.cast("double")) * F.lit(_QS8)
-            ),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    dq = sdotc.cast("double") / (
-        F.sqrt(F.col("qn").cast("double"))
-        * F.sqrt(F.element_at(cqn, idx) / F.lit(float(_QS)))
-    )
-    tagged = store.withColumn(
-        "dq9",
-        F.when(
-            (F.col("cell") < 0) | (F.col("cell") >= n_cells),
-            F.raise_error(
-                F.concat(
-                    F.lit("int8_drift_stats: store cell "),
-                    F.col("cell").cast("string"),
-                    F.lit(
-                        f" outside the centroid model's 0..{n_cells - 1}"
-                        " — store and model are from different builds"
-                    ),
-                )
-            ).cast("bigint"),
-        )
-        .when(F.col("qn") > 0, F.floor(dq))
-        .otherwise(F.lit(0)),
-    )
-    dq9 = F.col("dq9")
-
-    def sum9(cond):
-        return F.sum(F.when(cond, dq9).otherwise(F.lit(0))).cast("bigint")
-
-    agg = tagged.groupBy("cell").agg(
-        F.sum(F.when(F.col("is_orig"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_orig"),
-        F.sum(F.when(~F.col("is_orig"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_new"),
-        sum9(F.col("is_orig")).alias("sum_dq9_orig"),
-        sum9(~F.col("is_orig")).alias("sum_dq9_new"),
-    )
-    tots = agg.agg(
-        F.sum("n_orig").cast("bigint").alias("tot_orig"),
-        F.sum("n_new").cast("bigint").alias("tot_new"),
-    )
-
-    def dec(c):
-        return c.cast("decimal(38,0)")
-
-    share_drift = dec(F.col("n_new")) * dec(F.col("tot_orig")) > F.lit(
-        share_factor
-    ) * dec(F.col("n_orig")) * dec(F.col("tot_new"))
-    dist_drift = (
-        (F.col("n_orig") > 0)
-        & (F.col("n_new") > 0)
-        & (
-            dec(F.col("sum_dq9_new")) * dec(F.col("n_orig"))
-            < dec(F.col("sum_dq9_orig")) * dec(F.col("n_new"))
-            - F.lit(dist_margin9) * dec(F.col("n_orig")) * dec(F.col("n_new"))
-        )
-    )
-    return (
-        agg.crossJoin(F.broadcast(tots))
-        .withColumn("share_drift", share_drift)
-        .withColumn("dist_drift", dist_drift)
-        .withColumn("drifted", F.col("share_drift") | F.col("dist_drift"))
-        .drop("tot_orig", "tot_new")
-    )
-
-
-def int8_index_drift(spark: SparkSession, path: str) -> DataFrame:
-    """Drift report over a PUBLISHED IVF-SQ8 index: build generation
-    (gen=0) vs every :func:`int8_index_add` since — a pure
-    aggregation over the store (rows already carry cell, qvec, and
-    the precomputed qn; no raw vectors exist to scan). Same lineage
-    robustness as the other index drifts: merge-schema read, legacy
-    NULL gen coalesces to the build generation."""
-    rows = spark.read.option("mergeSchema", "true").parquet(
-        f"{path}/vectors"
-    )
-    gen = (
-        F.coalesce(F.col("gen"), F.lit(0))
-        if "gen" in rows.columns
-        else F.lit(0)
-    )
-    store = rows.select(
-        # partition-column cell reads back as INT — widen to BIGINT so
-        # the published schema matches every other index report
-        F.col("cell").cast("bigint").alias("cell"),
-        "qvec",
-        "qn",
-        (gen == 0).alias("is_orig"),
-    )
-    return int8_drift_stats(store, _ivf_centroids_cached(spark, path))
-
-
-def cascade_ivfpq_recall(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    w: int = 50,
-    num_centroids: int = NUM_CENTROIDS,
-    nprobe: int = NPROBE,
-) -> float:
-    """Measured recall@k of the IVF-PQ→exact cascade — strictly ≥
-    :func:`ivf_pq_recall` at the same (num_centroids, nprobe) for
-    w ≥ k (the rerank can only fix ADC ordering inside the
-    candidate set)."""
-    approx = cascade_ivfpq_topk(
-        embeddings, query_ids, k, w, num_centroids, nprobe
-    )
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
+    return _exact_rerank(embeddings, cand, _q_emb(embeddings, query_ids), k)
 
 
 def embedding_quantize_int8(
@@ -4604,13 +2982,1264 @@ def opq_pq_topk(
     return pq_topk(rot, query_ids, k_results, books=books, dim=dim)
 
 
-def opq_pq_recall(
+
+
+# ------------------------------------ published ANN indexes: one core
+#
+# The three persisted layouts — plain IVF (float vectors), IVF-SQ8
+# (int8 codes) and IVF-PQ (packed PQ codes) — share one lifecycle, the
+# one the text index has: an offline build PUBLISHES cell-partitioned
+# rows plus frozen models, appends add rows under those frozen models
+# with gen lineage, and a serve ranks the probe cells on the driver
+# and scans only those partition directories. The core below is that
+# lifecycle written once; an IndexLayout record supplies only what
+# differs between the layouts.
+
+
+class _Models(NamedTuple):
+    """The frozen models of a published index: the coarse quantizer
+    (every layout) and, for IVF-PQ, the codebooks, the encoding kind
+    and the OPQ rotation."""
+
+    cents: list
+    books: list | None = None
+    encoding: str = "raw"
+    rotation: tuple | None = None
+
+
+@dataclass(frozen=True)
+class IndexLayout:
+    """What one published ANN layout supplies to the shared core:
+
+    * ``rows`` — the row table under the index root (``vectors`` or
+      ``codes``); ``marker`` — a column only this layout's rows carry
+      (how :func:`layout_of` tells layouts apart); ``label``/
+      ``builder`` — how errors name the layout and its build;
+    * ``load``/``tables`` — the model load, and the model tables a
+      publish writes besides ``/centroids``;
+    * ``prepare``/``encode`` — the append's cast to the stored types,
+      and the (vec_id, cell, ...) row projection build and append
+      share;
+    * ``probe_col``/``probe`` — the per-(query, probed cell) payload
+      the serve broadcasts; ``score``/``score_col``/``descending`` —
+      the score over the joined pairs and its ordering;
+    * ``report`` — the drift report over the lineage-read rows."""
+
+    name: str
+    rows: str
+    marker: str
+    label: str
+    builder: str
+    load: Callable
+    tables: Callable
+    prepare: Callable
+    encode: Callable
+    probe_col: str
+    probe: Callable
+    score: Callable
+    score_col: str
+    descending: bool
+    report: Callable
+
+    def append(
+        self,
+        spark: SparkSession,
+        path: str,
+        new_embeddings: DataFrame,
+        check_ids: bool = True,
+        exact_rotation: bool = True,
+    ) -> int:
+        """Incremental index maintenance — the ANN analogue of the text
+        index's ``merge_index``: encode NEW vectors under the published
+        index's FROZEN models and append them into their cell partitions.
+        Only the touched ``cell=N`` directories gain files (one per cell,
+        rebalanced like the build); existing files are never rewritten,
+        so the operation is O(|new|) regardless of index size, and a
+        serve sees exactly what a full rebuild with the same models would.
+        Returns the number of rows added.
+
+        The batch is pinned ONCE (``localCheckpoint``): it is evaluated
+        by the id checks, the append write and the returned count — a
+        non-deterministic source (sampling, a mutating stream batch)
+        could pass the checks yet append different rows if each consumer
+        re-executed the plan. ``check_ids`` fails fast on vec_ids repeated
+        within the batch (an ingest retry concatenated into one frame) or
+        colliding with the index — an append cannot replace a vector, and
+        a silent duplicate would serve as two rows for one id; the index
+        check scans only the vec_id column.
+
+        The generation is claimed in ``_GEN`` BEFORE the data lands: a
+        crash between the two leaves a HOLE in the gen sequence (harmless
+        — gens are lineage labels, not offsets), whereas the reverse
+        order would leave a stale _GEN and MERGE the next append into
+        this one's generation in the drift lineage."""
+        models = _models(spark, path, self)
+        batch = self.prepare(spark, path, new_embeddings).localCheckpoint()
+        if check_ids:
+            n_intra = (
+                batch.groupBy("vec_id").count().filter(F.col("count") > 1).count()
+            )
+            if n_intra:
+                raise ValueError(
+                    f"{n_intra} vec_ids appear more than once in the new batch; "
+                    f"{self.label} append cannot deduplicate — distinct the "
+                    "batch first"
+                )
+            existing = spark.read.parquet(f"{path}/{self.rows}").select("vec_id")
+            n_dup = batch.join(existing, "vec_id").count()
+            if n_dup:
+                raise ValueError(
+                    f"{n_dup} vec_ids already exist in the index at {path}; "
+                    f"{self.label} append cannot replace vectors — rebuild, "
+                    "or use fresh ids"
+                )
+        gen = _read_gen(spark, path, self.rows) + 1
+        rows = self.encode(batch, models, exact_rotation).withColumn(
+            "gen", F.lit(gen).cast("bigint")
+        )
+        _write_gen(path, gen)
+        _write_rows(rows, path, self.rows, "append")
+        # count the WRITTEN frame (recomputed over the checkpointed batch,
+        # so it equals what the write saw), not the raw input
+        return rows.count()
+
+    def drift(self, spark: SparkSession, path: str) -> DataFrame:
+        """This layout's drift report over the index at ``path``:
+        build generation (gen=0) against every append since — a pure
+        aggregation over the published rows, no re-assignment."""
+        rows = _lineage(spark, path, self.rows)
+        return self.report(rows, _models(spark, path, self))
+
+
+def _model_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A tiny driver-side MODEL table (centroids/codebooks/rotation/
+    encoding) as a ONE-slice DataFrame. ``createDataFrame(list)``
+    parallelizes the rows into ``defaultParallelism`` pickled slices,
+    and the publish pattern's ``coalesce(1)`` then pulls every slice
+    through a SEQUENTIAL Python-worker roundtrip inside one task —
+    measured 4-6 s per KB-sized model write at local[32] (r13; guide
+    §4: the Python boundary). One explicit slice = one roundtrip
+    (~0.3 s), the SAME row-conversion path, bit-identical values
+    (pinned by ``tests/test_ops.py::test_model_frame_one_slice_
+    bit_identical``), and already a single output file — no coalesce
+    needed."""
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
+def _write_gen(path: str, gen: int) -> None:
+    """Claim generation ``gen`` in the ``_GEN`` sidecar (tmp file +
+    atomic rename; single-writer, like ``_CURRENT``)."""
+    import os
+
+    tmp = os.path.join(path, "_GEN.tmp")
+    with open(tmp, "w") as f:
+        f.write(str(int(gen)))
+    os.replace(tmp, os.path.join(path, "_GEN"))
+
+
+def _lineage(spark: SparkSession, path: str, table: str) -> DataFrame:
+    """The index's row table with its gen lineage. An index built
+    BEFORE gen lineage existed and appended to afterwards holds a mix
+    of gen-less and gen-bearing files: the read merges schemas (a
+    plain read can sample a legacy footer and lose the column) and
+    legacy rows' NULL gen coalesces to 0 — they ARE the build
+    generation, so a drift baseline keeps its original vectors
+    instead of silently dropping them."""
+    rows = spark.read.option("mergeSchema", "true").parquet(f"{path}/{table}")
+    zero = F.lit(0).cast("bigint")
+    gen = F.coalesce(F.col("gen"), zero) if "gen" in rows.columns else zero
+    return rows.withColumn("gen", gen)
+
+
+def _read_gen(spark: SparkSession, path: str, table: str) -> int:
+    """Current index generation in O(1) from the _GEN sidecar;
+    pre-sidecar indexes (or ones written before gen lineage existed)
+    fall back to one pruned scan of the lineage read — max(gen), 0
+    for a gen-less index (all build generation by definition, so
+    appends/drift keep working instead of failing on the missing
+    column)."""
+    import os
+
+    marker = os.path.join(path, "_GEN")
+    if os.path.exists(marker):
+        with open(marker) as f:
+            return int(f.read().strip())
+    return int(
+        _lineage(spark, path, table)
+        .agg(F.coalesce(F.max("gen"), F.lit(0)).alias("g"))
+        .collect()[0]
+        .g
+    )
+
+
+def _write_rows(rows: DataFrame, path: str, table: str, mode: str) -> None:
+    """Write index rows partitioned by cell, REBALANCED by cell first
+    (guide §6): the encode frame may be spread across the cluster for
+    its expressions, and writing it directly would emit one file per
+    (task × cell). The AQE rebalance shuffles only the encoded rows
+    (the encode projection stays below the exchange), coalescing to
+    advisory-sized files per cell directory and splitting a hot cell
+    rather than funnelling it through one writer."""
+    rows.hint("rebalance", "cell").write.mode(mode).partitionBy("cell").parquet(
+        f"{path}/{table}"
+    )
+
+
+_MODEL_CACHE: dict = {}
+
+# Bounded: a long-lived serving session pins at most this many
+# (session, path) model sets; beyond it the oldest entry is evicted
+# (per-mkdtemp test indexes would otherwise accumulate forever — each
+# entry is only KBs, but unbounded is unbounded).
+_MODEL_CACHE_MAX = 32
+
+
+def _model_fingerprint(spark: SparkSession, path: str, table: str = "centroids"):
+    """Cross-process staleness signal for a published model table:
+    the sorted (file name, length, mtime) tuple of ``{path}/{table}``
+    via the Hadoop FileSystem client — a driver-side metadata call
+    (no Spark job) that works on any filesystem the session reaches.
+    An in-place rebuild rewrites the part-files (new UUID names), so
+    the tuple changes even though the path does not. This is the
+    signal the in-process writer invalidation cannot give when the
+    rebuild happens in a DIFFERENT process (a CLI ``ann build`` next
+    to a long-lived serving session): the frozen models are re-read
+    the first serve after the fingerprint moves, never silently
+    served stale."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{table}")
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return tuple(
+        sorted(
+            (
+                st.getPath().getName(),
+                int(st.getLen()),
+                int(st.getModificationTime()),
+            )
+            for st in fs.listStatus(hpath)
+        )
+    )
+
+
+def _model_cache_get(key, fingerprint, loader):
+    """Fingerprint-validated read of :data:`_MODEL_CACHE`: hit only
+    when the stored fingerprint still matches; otherwise (re)load and
+    evict oldest entries beyond :data:`_MODEL_CACHE_MAX` (dict
+    preserves insertion order)."""
+    hit = _MODEL_CACHE.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return hit[1]
+    value = loader()
+    _MODEL_CACHE.pop(key, None)
+    _MODEL_CACHE[key] = (fingerprint, value)
+    while len(_MODEL_CACHE) > _MODEL_CACHE_MAX:
+        _MODEL_CACHE.pop(next(iter(_MODEL_CACHE)))
+    return value
+
+
+def _models(spark: SparkSession, path: str, layout: IndexLayout) -> _Models:
+    """The frozen models of the index at ``path``, loaded at most once
+    per (session, path) — CORRECT by the frozen-models contract:
+    appends never change centroids, codebooks, encoding or rotation
+    (re-defining them would re-define every stored row), so the only
+    mutation that could stale the cache is a rebuild. :func:`_publish`
+    drops the key it writes in-process, and a CROSS-process rebuild
+    is caught by the :func:`_model_fingerprint` check on every read
+    (the layout name is part of the validated fingerprint, since a
+    layout loads only the models it serves with). At real scale the
+    artifact is immutable-versioned and a serving process pins the
+    models once — this cache is that behavior, and it removes the
+    model-load jobs from every cold serve/append/drift (measured r11:
+    1.4 s → ~0.4 s fresh-plan IVF-PQ serve at nprobe=2; the
+    fingerprint is one driver-side listStatus, not a job)."""
+    return _model_cache_get(
+        (spark.sparkContext.applicationId, path),
+        (layout.name, _model_fingerprint(spark, path)),
+        lambda: layout.load(spark, path),
+    )
+
+
+def _publish(
+    layout: IndexLayout,
+    path: str,
     embeddings: DataFrame,
+    models: _Models,
+    exact_rotation: bool = True,
+) -> None:
+    """Build and persist an index: the encoded rows PARTITIONED BY
+    cell under ``{path}/{layout.rows}`` stamped ``gen=0`` (the build
+    generation; appends stamp 1, 2, ... — the lineage the drift
+    reports compare against), the ``_GEN`` sidecar, the coarse
+    quantizer under ``/centroids`` and the layout's other model
+    tables. Probing a published index then touches only the probed
+    cell directories — partition pruning does the cell selection at
+    the FILE level, the on-disk analogue of an in-memory inverted
+    list. An in-place rebuild re-defines the frozen models, so any
+    session-pinned copy is dropped."""
+    spark = embeddings.sparkSession
+    rows = layout.encode(embeddings, models, exact_rotation)
+    _write_rows(
+        rows.withColumn("gen", F.lit(0).cast("bigint")), path, layout.rows, "overwrite"
+    )
+    _write_gen(path, 0)
+    centroids = (
+        "centroids",
+        [(int(c), [float(x) for x in v]) for c, v in models.cents],
+        "cell INT, centroid ARRAY<DOUBLE>",
+    )
+    for table, model_rows, schema in [centroids, *layout.tables(models)]:
+        _model_frame(spark, model_rows, schema).write.mode("overwrite").parquet(
+            f"{path}/{table}"
+        )
+    _MODEL_CACHE.pop((spark.sparkContext.applicationId, path), None)
+
+
+def _serve(
+    spark: SparkSession,
+    path: str,
+    layout: IndexLayout,
+    qrows: list,
+    k: int,
+    nprobe: int,
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Serve top-k from a published index for request-sized query rows
+    (query_id, embedding). The whole query side runs ON THE DRIVER:
+    probe cells rank with :func:`_py_cell_ranking` — the exact Python
+    twin of the Catalyst ranking expression (integer :func:`_py_qdot`
+    sums feeding one IEEE division; bit-identical, the equivalence
+    every golden replay pins) — and the layout builds each (query,
+    probed cell) payload with its own exact twins. That removes the
+    per-plan compilation of the query-side expressions (the serving
+    constant, measured r11); the distributed part is only what scales:
+    the row scan filtered on the LITERAL probed-cell set (so only
+    those partition directories are read — PartitionFilters in the
+    scan, asserted in tests), a broadcast join of the payload frame,
+    and the per-query top-k window.
+
+    ``exclude_self`` drops candidates whose vec_id equals the
+    query_id — right when queries come FROM the indexed corpus. An
+    EXTERNAL id space (an encoder's request ids) is unrelated to
+    corpus vec_ids, and a numeric collision must not silently drop a
+    true neighbor."""
+    models = _models(spark, path, layout)
+    lit_rows = []
+    for r in qrows:
+        emb = [float(x) for x in r.embedding]
+        for cell in _py_cell_ranking(emb, models.cents)[:nprobe]:
+            lit_rows.append(
+                (int(r.query_id), layout.probe(models, emb, cell), int(cell))
+            )
+    # verifySchema=False: the rows are built just above from int()/
+    # float() and the twins (typed by construction), and the
+    # per-element verifier walk costs ~0.1 s per serve on an m·k LUT
+    # × nprobe × queries (measured r12 — pure driver latency)
+    probes_lit = spark.createDataFrame(
+        lit_rows,
+        f"query_id BIGINT, {layout.probe_col}, cell BIGINT",
+        verifySchema=False,
+    )
+    probed_cells = sorted({c for _q, _p, c in lit_rows})
+    rows = spark.read.parquet(f"{path}/{layout.rows}").filter(
+        F.col("cell").isin(probed_cells)
+    )
+    pairs = rows.join(F.broadcast(probes_lit), "cell")
+    if exclude_self:
+        pairs = pairs.filter(F.col("vec_id") != F.col("query_id"))
+    order = F.desc if layout.descending else F.asc
+    return _topk_window(layout.score(pairs, models), k, order(layout.score_col))
+
+
+def layout_of(spark: SparkSession, path: str) -> IndexLayout | None:
+    """The layout of the index published at ``path`` — ``None`` when
+    there is none: the first layout whose row table carries its
+    marker column. Detection reads THROUGH Spark, so an index on any
+    filesystem the session reaches resolves; only a genuine
+    path-not-found from the read counts as absent (the r10 rule:
+    ``os.path`` cannot see a remote index)."""
+    from pyspark.errors import AnalysisException
+
+    columns: dict[str, list] = {}
+    for layout in LAYOUTS.values():
+        if layout.rows not in columns:
+            try:
+                columns[layout.rows] = spark.read.parquet(
+                    f"{path}/{layout.rows}"
+                ).columns
+            except AnalysisException as exc:
+                if "PATH_NOT_FOUND" not in str(exc):
+                    raise
+                columns[layout.rows] = []
+        if layout.marker in columns[layout.rows]:
+            return layout
+    return None
+
+
+def _dec(c: F.Column) -> F.Column:
+    return c.cast("decimal(38,0)")
+
+
+def _cell_drift(
+    tagged: DataFrame,
+    v9: str,
+    sums: str,
+    share_factor: int,
+    dist_margin9: int,
+) -> DataFrame:
+    """The per-cell tail both quantizer drift reports share, over a
+    (cell, is_orig, ``v9``) frame whose ``v9`` is a row's floored
+    cosine-to-centroid ×1e9 → ``(cell, n_orig, n_new, {sums}_orig,
+    {sums}_new, share_drift, dist_drift, drifted)``:
+
+    * ``share_drift``: the cell's share of APPENDED vectors exceeds
+      ``share_factor`` × its share of ORIGINAL vectors (new data is
+      piling into cells the quantizer sized small — hot partitions at
+      probe time). A cell with appends but zero original vectors
+      always flags.
+    * ``dist_drift``: appended vectors sit materially farther from
+      their centroid than the originals — the mean ``v9`` of the new
+      slice is more than ``dist_margin9``/1e9 below the original
+      slice's (the quantizer no longer fits the data near this cell).
+
+    Both tests are integer/DECIMAL(38) cross-multiplications of exact
+    BIGINT sums — no float sum, no division anywhere, so a DuckDB
+    oracle reproduces every flag bit-for-bit. Scale shape: one
+    per-cell aggregation (partial aggs apply) + a 1-row broadcast of
+    the global totals."""
+    col = F.col(v9)
+
+    def sum9(cond):
+        return F.sum(F.when(cond, col).otherwise(F.lit(0))).cast("bigint")
+
+    agg = tagged.groupBy("cell").agg(
+        F.sum(F.when(F.col("is_orig"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_orig"),
+        F.sum(F.when(~F.col("is_orig"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_new"),
+        sum9(F.col("is_orig")).alias(f"{sums}_orig"),
+        sum9(~F.col("is_orig")).alias(f"{sums}_new"),
+    )
+    tots = agg.agg(
+        F.sum("n_orig").cast("bigint").alias("tot_orig"),
+        F.sum("n_new").cast("bigint").alias("tot_new"),
+    )
+    share_drift = _dec(F.col("n_new")) * _dec(F.col("tot_orig")) > F.lit(
+        share_factor
+    ) * _dec(F.col("n_orig")) * _dec(F.col("tot_new"))
+    dist_drift = (
+        (F.col("n_orig") > 0)
+        & (F.col("n_new") > 0)
+        & (
+            _dec(F.col(f"{sums}_new")) * _dec(F.col("n_orig"))
+            < _dec(F.col(f"{sums}_orig")) * _dec(F.col("n_new"))
+            - F.lit(dist_margin9) * _dec(F.col("n_orig")) * _dec(F.col("n_new"))
+        )
+    )
+    return (
+        agg.crossJoin(F.broadcast(tots))
+        .withColumn("share_drift", share_drift)
+        .withColumn("dist_drift", dist_drift)
+        .withColumn("drifted", F.col("share_drift") | F.col("dist_drift"))
+        .drop("tot_orig", "tot_new")
+    )
+
+
+# ---------------------------------------------- layout: plain IVF
+
+
+def load_ivf_centroids(spark: SparkSession, path: str):
+    """Centroid model back from a published index (driver-side list,
+    same shape ivf_centroids/ivf_train_kmeans produce)."""
+    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
+    return [(int(r.cell), [float(x) for x in r.centroid]) for r in rows]
+
+
+def _load_centroids(spark: SparkSession, path: str) -> _Models:
+    return _Models(load_ivf_centroids(spark, path))
+
+
+def _no_tables(models: _Models) -> list:
+    return []
+
+
+def _ivf_prepare(spark: SparkSession, path: str, frame: DataFrame) -> DataFrame:
+    # normalize to the INDEX's stored embedding type BEFORE assigning:
+    # appending ARRAY<DOUBLE> rows into an ARRAY<FLOAT> store makes
+    # the vectors dir unreadable under schema merge (float/double
+    # arrays don't reconcile), and assignment must run on the values
+    # AS STORED for append == rebuild to hold exactly
+    stored = spark.read.parquet(f"{path}/vectors").schema["embedding"].dataType
+    return frame.withColumn("embedding", F.col("embedding").cast(stored))
+
+
+def _ivf_encode(frame: DataFrame, models: _Models, exact_rotation=True) -> DataFrame:
+    return ivf_assign(frame, models.cents)
+
+
+def _query_probe(models: _Models, emb: list, cell: int) -> list:
+    return emb
+
+
+def _ivf_score(pairs: DataFrame, models: _Models) -> DataFrame:
+    return pairs.select(
+        "query_id", "vec_id", _cosine_names("embedding", "q_emb").alias("cosine")
+    )
+
+
+def _ivf_report(rows: DataFrame, models: _Models) -> DataFrame:
+    return ivf_drift_stats(
+        rows.filter(F.col("gen") == 0), rows.filter(F.col("gen") > 0), models.cents
+    )
+
+
+def write_ivf_index(
+    embeddings: DataFrame,
+    path: str,
+    centroids=None,
+    num_centroids: int = NUM_CENTROIDS,
+):
+    """Build and persist the IVF index: vectors land in parquet
+    PARTITIONED BY their cell (``{path}/vectors/cell=N/``) with the
+    quantizer centroids alongside (``{path}/centroids``) — the
+    :func:`_publish` lifecycle. This is the offline-build / serve
+    split the text index uses (SURVEY.md §3.2), applied to ANN.
+    Returns the centroid model."""
+    cents = (
+        centroids
+        if centroids is not None
+        else ivf_centroids(embeddings, num_centroids)
+    )
+    _publish(LAYOUTS["ivf"], path, embeddings, _Models(cents))
+    return cents
+
+
+def ivf_index_add(
+    spark: SparkSession,
+    path: str,
+    new_embeddings: DataFrame,
+    check_ids: bool = True,
+) -> int:
+    """Append NEW vectors to a published IVF index under its FROZEN
+    quantizer (:meth:`IndexLayout.append`; returns the number of vectors added).
+    The quantizer is intentionally NOT retrained here — cell
+    assignments of existing vectors must stay valid for the appended
+    files to compose with them. Quantizer drift under a shifting
+    embedding distribution is watched by :func:`ivf_index_drift` and
+    handled by an offline rebuild (:func:`write_ivf_index`). Pass
+    ``check_ids=False`` when the caller guarantees fresh ids (e.g.
+    monotone ingest offsets) and the id scan is not worth it."""
+    return LAYOUTS["ivf"].append(spark, path, new_embeddings, check_ids)
+
+
+def ivf_index_topk(
+    spark: SparkSession,
+    path: str,
     query_ids: list[int],
     k: int = 10,
-) -> float:
-    """Measured recall@k of the OPQ path vs the exact cosine top-k —
-    directly comparable to :func:`pq_recall` with trained books (same
-    bits, rotated space)."""
-    approx = opq_pq_topk(embeddings, query_ids, k)
-    return _recall_vs_exact(embeddings, query_ids, k, approx)
+    nprobe: int = NPROBE,
+) -> DataFrame:
+    """Serve approximate top-k from a PUBLISHED IVF index
+    (:func:`_serve`) — the read-side twin of :func:`ann_ivf_topk`,
+    identical output for the same quantizer and nprobe (pinned by
+    test). The query-vector lookup itself is an id filter over the
+    index — ONE job; a serving deployment would keep vectors also
+    keyed by id (the corpus sink pattern) for point fetch."""
+    qrows = _pick(
+        spark.read.parquet(f"{path}/vectors"), query_ids, "embedding"
+    ).collect()
+    return _serve(spark, path, LAYOUTS["ivf"], qrows, k, nprobe)
+
+
+def ivf_drift_stats(
+    orig: DataFrame,
+    new: DataFrame,
+    centroids,
+    share_factor: int = 2,
+    dist_margin9: int = 50_000_000,
+) -> DataFrame:
+    """Quantizer drift report — the observability half of the
+    frozen-quantizer contract (:func:`ivf_index_add` appends with the
+    BUILD-time centroids; this answers "has the appended distribution
+    drifted far enough that the documented offline rebuild should
+    run?"). Per cell → ``(cell, n_orig, n_new, sum_cos9_orig,
+    sum_cos9_new, share_drift, dist_drift, drifted)`` with the
+    :func:`_cell_drift` flags over each vector's cosine to its
+    assigned centroid.
+
+    Exactness: per-vector cosine-to-assigned-centroid derives from
+    :func:`_qdot` integer sums (dot and both squared norms — see _QS),
+    so the one IEEE division/sqrt sees bit-identical inputs in every
+    engine and run; the per-row value then quantizes via
+    ``floor(cos·1e9)`` (floor of an identical double is deterministic
+    cross-engine where round() is not) into an exact BIGINT sum. Mean
+    distances are derivable by the consumer as sum_cos9 / n / 1e9.
+    The centroid lookup is ``element_at`` on a C-sized literal array
+    — map-only, no join against the model."""
+    cvecs = _lit_double_matrix([vec for _, vec in centroids])
+    cqnorms = F.array(
+        *[F.lit(float(_py_qdot(vec, vec))) for _, vec in centroids]
+    )
+    idx = (F.col("cell") + 1).cast("int")
+    cosd = _qdot(F.col("embedding"), F.element_at(cvecs, idx)).cast(
+        "double"
+    ) / F.sqrt(
+        _qdot(F.col("embedding"), F.col("embedding")).cast("double")
+        * F.element_at(cqnorms, idx)
+    )
+    tagged = (
+        orig.select("embedding", "cell", F.lit(True).alias("is_orig"))
+        .unionByName(
+            new.select("embedding", "cell", F.lit(False).alias("is_orig"))
+        )
+        .withColumn("row9", F.floor(cosd * F.lit(1000000000.0)))
+    )
+    return _cell_drift(tagged, "row9", "sum_cos9", share_factor, dist_margin9)
+
+
+def ivf_index_drift(spark: SparkSession, path: str) -> DataFrame:
+    """Drift report over a PUBLISHED IVF index: original = the
+    ``gen=0`` build generation, appended = every :func:`ivf_index_add`
+    generation since (:meth:`IndexLayout.drift`). Vectors already
+    carry their cell, so this is a pure aggregation over the index —
+    no re-assignment."""
+    return LAYOUTS["ivf"].drift(spark, path)
+
+
+# ------------------------------------------- layout: IVF-SQ8 (int8)
+
+
+def _int8_prepare(spark: SparkSession, path: str, frame: DataFrame) -> DataFrame:
+    return frame.withColumn("embedding", F.col("embedding").cast("array<double>"))
+
+
+def _int8_encode(frame: DataFrame, models: _Models, exact_rotation=True) -> DataFrame:
+    # r13: assign + quantize are both MAP-ONLY projections of the
+    # same row (a self-join on vec_id would shuffle both subtrees,
+    # guide §2.4); spread parallelizes the quantize folds on a
+    # small-file scan (a no-op at cluster-wide scans)
+    from hadoop_search_spark.partitioning import spread
+
+    return (
+        embedding_quantize_int8(
+            ivf_assign(spread(frame, "vec_id"), models.cents),
+            extra_cols=("cell",),
+        )
+        .select("vec_id", "cell", "amax9", "qvec")
+        .withColumn("qn", _qn_expr(F.col("qvec")))
+    )
+
+
+def _int8_score(pairs: DataFrame, models: _Models) -> DataFrame:
+    # zero vectors (qn = 0) have no cosine and are excluded
+    return pairs.filter(F.col("qn") > 0).select(
+        "query_id", "vec_id", _s8(F.col("qn")).alias("s8")
+    )
+
+
+def _int8_report(rows: DataFrame, models: _Models) -> DataFrame:
+    store = rows.select(
+        # partition-column cell reads back as INT — widen to BIGINT so
+        # the published schema matches every other index report
+        F.col("cell").cast("bigint").alias("cell"),
+        "qvec",
+        "qn",
+        (F.col("gen") == 0).alias("is_orig"),
+    )
+    return int8_drift_stats(store, models.cents)
+
+
+def write_int8_index(
+    embeddings: DataFrame,
+    path: str,
+    centroids=None,
+    num_centroids: int = NUM_CENTROIDS,
+):
+    """Build and persist the IVF-SQ8 index — the 64 B/vec serving
+    tier as a durable artifact (the int8 twin of
+    :func:`write_ivfpq_index`): one row per vector ``(vec_id, amax9,
+    qvec, qn, gen)`` under ``{path}/vectors/cell=N/`` plus the coarse
+    centroid model (``/centroids``, the :func:`write_ivf_index`
+    layout, so :func:`load_ivf_centroids` reads it unchanged). No raw
+    floats are stored: the scan side of :func:`int8_index_topk` reads
+    codes + the precomputed BIGINT norm (``qn``, materialized at
+    build so serving never re-folds it), and ``amax9`` rides along
+    for consumers that need approximate dequantization
+    (``x ≈ q·amax/127``). Returns the centroid model."""
+    cents = (
+        centroids
+        if centroids is not None
+        else ivf_centroids(embeddings, num_centroids)
+    )
+    _publish(LAYOUTS["int8"], path, embeddings, _Models(cents))
+    return cents
+
+
+def int8_index_add(
+    spark: SparkSession,
+    path: str,
+    new_embeddings: DataFrame,
+    check_ids: bool = True,
+) -> int:
+    """Incremental IVF-SQ8 maintenance (:meth:`IndexLayout.append`): quantize NEW
+    vectors, assign them with the published index's FROZEN coarse
+    centroids, and append ``(vec_id, amax9, qvec, qn, gen)`` rows into
+    their cell partitions. int8 quantization is PER-VECTOR (each
+    row's own amax), so unlike PQ there is no trained codebook to
+    freeze — the only frozen model is the coarse quantizer, and the
+    drift story is :func:`int8_index_drift`'s cell-distribution
+    watch. Returns rows added."""
+    return LAYOUTS["int8"].append(spark, path, new_embeddings, check_ids)
+
+
+def int8_index_topk(
+    spark: SparkSession,
+    path: str,
+    queries: DataFrame,
+    k_results: int = 10,
+    nprobe: int = NPROBE,
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Serve stage-1 top-k from a PUBLISHED IVF-SQ8 index
+    (:func:`_serve`). ``queries`` is a (query_id, embedding) frame
+    (the index stores no raw floats — query embeddings arrive from
+    the caller). Scoring is the scale-free integer ranking: sdot
+    (exact BIGINT fold of floor(qᵢ·codeᵢ·1e9)) / √qn (the precomputed
+    BIGINT norm) — one IEEE div/sqrt of identical integers per row.
+    Zero vectors (qn = 0) have no cosine and are excluded. Returns
+    (query_id, vec_id, s8, rn) — :func:`ivf_int8_topk`'s shape,
+    pinned equal to it for the same centroids; compose with an exact
+    rerank against the raw corpus for the
+    :func:`cascade_ivf_int8_topk` serving stack."""
+    qrows = queries.select("query_id", "embedding").collect()
+    return _serve(
+        spark, path, LAYOUTS["int8"], qrows, k_results, nprobe, exclude_self
+    )
+
+
+def int8_drift_stats(
+    store: DataFrame,
+    centroids,
+    share_factor: int = 2,
+    dist_margin9: int = 50_000_000,
+) -> DataFrame:
+    """Quantizer drift report for an IVF-SQ8 store — the
+    observability half of the frozen-coarse-quantizer contract for
+    the int8 layout, computed from the STORE ALONE (no raw floats
+    anywhere in the index): the per-vector scale cancels out of
+    cosine, so cos(x̂, c) of the DEQUANTIZED vector equals
+    cos(qvec, c) exactly — amax is never read. ``store`` is the
+    published (cell, qvec, qn, is_orig) frame; per cell →
+    ``(cell, n_orig, n_new, sum_dq9_orig, sum_dq9_new, share_drift,
+    dist_drift, drifted)`` with the :func:`_cell_drift` flags over the
+    dequantized cosine-to-centroid.
+
+    Exactness: the numerator is Σ floor(cᵢ·qvecᵢ·1e9) (exact BIGINT —
+    the _QS8 recipe over int codes), the denominator
+    √qn·√(qc/1e12) with qn the store's precomputed BIGINT norm and
+    qc the centroid's _py_qdot integer literal — every IEEE op sees
+    bit-identical integers, and the per-row value floors to ``dq9``
+    (an exact BIGINT sum). Every published column is BIGINT/BOOLEAN
+    (the r9 l1x lesson).
+
+    Zero-norm convention: a stored row with ``qn = 0`` (the all-zero
+    vector) contributes ``dq9 = 0`` and IS counted in
+    ``n_orig``/``n_new`` — unlike the SERVE path, which excludes
+    zero-norm rows from ranking (cosine undefined). The report is a
+    census of the store, so every stored row counts; an appended
+    batch dominated by zero vectors therefore drags the appended
+    slice's mean cosine toward 0, which is the correct alarm — those
+    rows ARE unservable quantization junk. The SQL oracle mirrors the
+    cos:=0 convention deliberately.
+
+    The centroid model must be dense 0..C-1 (checked at plan time —
+    ``element_at`` keys by LIST POSITION) and every store cell must
+    be in range (checked per row via ``raise_error`` — a non-ANSI
+    out-of-range ``element_at`` returns NULL, which would silently
+    drop those rows from the drift sums)."""
+    cells = [c for c, _ in centroids]
+    if cells != list(range(len(cells))):
+        raise ValueError(
+            "int8_drift_stats: centroid cells must be dense 0..C-1 "
+            f"(element_at keys by list position), got {cells}"
+        )
+    n_cells = len(centroids)
+    cvecs = _lit_double_matrix([vec for _, vec in centroids])
+    cqn = F.array(
+        *[F.lit(float(_py_qdot(vec, vec))) for _, vec in centroids]
+    )
+    idx = (F.col("cell") + 1).cast("int")
+    dq = _qdot8(F.element_at(cvecs, idx), F.col("qvec")).cast("double") / (
+        F.sqrt(F.col("qn").cast("double"))
+        * F.sqrt(F.element_at(cqn, idx) / F.lit(float(_QS)))
+    )
+    tagged = store.withColumn(
+        "dq9",
+        F.when(
+            (F.col("cell") < 0) | (F.col("cell") >= n_cells),
+            F.raise_error(
+                F.concat(
+                    F.lit("int8_drift_stats: store cell "),
+                    F.col("cell").cast("string"),
+                    F.lit(
+                        f" outside the centroid model's 0..{n_cells - 1}"
+                        " — store and model are from different builds"
+                    ),
+                )
+            ).cast("bigint"),
+        )
+        .when(F.col("qn") > 0, F.floor(dq))
+        .otherwise(F.lit(0)),
+    )
+    return _cell_drift(tagged, "dq9", "sum_dq9", share_factor, dist_margin9)
+
+
+def int8_index_drift(spark: SparkSession, path: str) -> DataFrame:
+    """Drift report over a PUBLISHED IVF-SQ8 index: build generation
+    (gen=0) vs every :func:`int8_index_add` since
+    (:meth:`IndexLayout.drift`) — a pure aggregation over the store
+    (rows already carry cell, qvec, and the precomputed qn; no raw
+    vectors exist to scan)."""
+    return LAYOUTS["int8"].drift(spark, path)
+
+
+# ------------------------------------------------- layout: IVF-PQ
+
+
+def load_ivfpq_models(spark: SparkSession, path: str):
+    """(centroids, books) back from a published IVF-PQ index."""
+    cents = load_ivf_centroids(spark, path)
+    rows = spark.read.parquet(f"{path}/codebooks").orderBy("s", "j").collect()
+    m = max(r.s for r in rows) + 1
+    books = [[None] * (len(rows) // m) for _ in range(m)]
+    for r in rows:
+        books[r.s][r.j] = [float(x) for x in r.centroid]
+    return cents, books
+
+
+def load_ivfpq_encoding(spark: SparkSession, path: str):
+    """(encoding_kind, rotation_or_None) from a published IVF-PQ
+    index. Pre-r10 indexes have no ``/encoding`` table and load as
+    ``("raw", None)`` — the only layout that existed then. A
+    persisted rotation comes back with the permutation pre-applied
+    (identity perm), so callers feed it straight to
+    :func:`_opq_rotate_expr`.
+
+    Detection reads THROUGH Spark, so an index on any filesystem the
+    session can reach (HDFS/S3 URIs included) resolves its real
+    encoding — only a genuine path-not-found from the read maps to
+    the pre-r10 raw layout. (r10 ADVICE: the old ``os.path.exists``
+    probe made a reachable-but-remote residual index silently load
+    as raw — exactly the silent-fallback class the drift guards
+    exist to kill: raw LUTs against residual codes rank wrong, and
+    an append would corrupt the stored code meaning.)"""
+    from pyspark.errors import AnalysisException
+
+    try:
+        kind = spark.read.parquet(f"{path}/encoding").collect()[0].kind
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(e):
+            return "raw", None
+        raise
+    if kind != "residual_opq":
+        return kind, None
+    rows = spark.read.parquet(f"{path}/rotation").orderBy("pos").collect()
+    mean = [float(r.mean) for r in rows]
+    comps = [[float(x) for x in r.comp] for r in rows]
+    return kind, (mean, comps, list(range(len(rows))))
+
+
+def _load_ivfpq(spark: SparkSession, path: str) -> _Models:
+    return _Models(
+        *load_ivfpq_models(spark, path), *load_ivfpq_encoding(spark, path)
+    )
+
+
+def _ivfpq_tables(models: _Models) -> list:
+    """The codebooks and the encoding kind, plus the rotation (with
+    the allocation permutation PRE-APPLIED, so serve/append
+    reconstruct the exact expression) for a residual_opq index."""
+    books = models.books
+    tables = [
+        (
+            "codebooks",
+            [
+                (s, j, [float(x) for x in books[s][j]])
+                for s in range(len(books))
+                for j in range(len(books[0]))
+            ],
+            "s INT, j INT, centroid ARRAY<DOUBLE>",
+        ),
+        ("encoding", [(models.encoding,)], "kind STRING"),
+    ]
+    if models.encoding == "residual_opq":
+        mean, comps, perm = models.rotation
+        tables.append(
+            (
+                "rotation",
+                [
+                    (pos, float(mean[pos]), [float(x) for x in comps[ci]])
+                    for pos, ci in enumerate(perm)
+                ],
+                "pos INT, mean DOUBLE, comp ARRAY<DOUBLE>",
+            )
+        )
+    return tables
+
+
+def _keep_frame(spark: SparkSession, path: str, frame: DataFrame) -> DataFrame:
+    return frame
+
+
+def _ivfpq_encode(frame: DataFrame, models: _Models, exact_rotation=True) -> DataFrame:
+    # the corpus dim is the codebooks' m × subvector length
+    books = models.books
+    return _ivfpq_encode_frame(
+        frame,
+        models.cents,
+        books,
+        len(books) * len(books[0][0]),
+        models.encoding,
+        models.rotation,
+        exact_rotation=exact_rotation,
+    )
+
+
+def _ivfpq_probe(models: _Models, emb: list, cell: int) -> list:
+    """The (query, probed cell) ADC lookup table, built on the driver
+    with the exact twins: for ``residual``/``residual_opq`` codes the
+    query's residual is taken against the probed cell's centroid
+    (rotated for OPQ) before the table builds — exactly the
+    :func:`ivf_pq_residual_topk` contract."""
+    qvec = emb
+    if models.encoding != "raw":
+        qvec = [x - c for x, c in zip(emb, dict(models.cents)[cell])]
+        if models.encoding == "residual_opq":
+            qvec = _py_opq_rotate(qvec, models.rotation)
+    return _py_pq_lut(qvec, models.books, len(models.books[0][0]))
+
+
+def _ivfpq_score(pairs: DataFrame, models: _Models) -> DataFrame:
+    return pairs.select(
+        "query_id", "vec_id", _adc_score(len(models.books), len(models.books[0]))
+    )
+
+
+def _ivfpq_report(rows: DataFrame, models: _Models) -> DataFrame:
+    return ivfpq_drift_stats(
+        rows.filter(F.col("gen") == 0),
+        rows.filter(F.col("gen") > 0),
+        m=len(models.books),
+        k=len(models.books[0]),
+    )
+
+
+def write_ivfpq_index(
+    embeddings: DataFrame,
+    path: str,
+    centroids=None,
+    books=None,
+    num_centroids: int = NUM_CENTROIDS,
+    dim: int = 64,
+    encoding: str = "raw",
+    rotation=None,
+    exact_rotation: bool = True,
+):
+    """Persist the IVF-PQ index: ONE row per vector — (vec_id, code)
+    under ``{path}/codes/cell=N/`` — plus the models (``/centroids``,
+    ``/codebooks``, ``/encoding``). No raw vectors are stored at all:
+    the serve path never needs them (ADC compares through codes), so
+    a 64-dim float32 corpus persists at ~1/32 the bytes before
+    columnar compression even starts. Same :func:`_publish`
+    lifecycle as :func:`write_ivf_index`.
+
+    ``encoding`` picks what the codes quantize (see
+    :func:`_ivfpq_encode_frame`): ``"raw"`` (the r8 layout, default),
+    ``"residual"`` (IVFADC), or ``"residual_opq"`` (rotation learned
+    on the residual population — the best stage-1 ordering per byte
+    in docs/ANN_QUALITY.md), persisted under ``/encoding`` with the
+    rotation model under ``/rotation``; indexes written before the
+    encoding table existed load as ``"raw"``. Default books: seed
+    codebooks in the encoding's own space for raw/residual, the
+    trained :func:`pq_residual_opq_model` for residual_opq (which
+    also supplies the rotation). Returns (centroids, books)."""
+    cents = (
+        centroids
+        if centroids is not None
+        else ivf_centroids(embeddings, num_centroids)
+    )
+    if encoding == "residual_opq" and books is None and rotation is None:
+        books, rotation = pq_residual_opq_model(
+            embeddings, cents, dim=dim, exact_rotation=exact_rotation
+        )
+    if books is None:
+        if encoding == "raw":
+            books = pq_codebooks(embeddings, dim=dim)
+        elif encoding == "residual_opq":
+            # rotation is non-None here (the both-None case trained the
+            # full model above); books must train in the ROTATED
+            # residual space the codes occupy (r10 ADVICE)
+            books = pq_residual_opq_books(
+                embeddings, cents, rotation, dim=dim,
+                exact_rotation=exact_rotation,
+            )
+        else:
+            books = pq_residual_codebooks(embeddings, cents, dim=dim)
+    _publish(
+        LAYOUTS["ivfpq"],
+        path,
+        embeddings,
+        _Models(cents, books, encoding, rotation),
+        exact_rotation,
+    )
+    return cents, books
+
+
+def ivfpq_index_topk(
+    spark: SparkSession,
+    path: str,
+    queries: DataFrame,
+    k_results: int = 10,
+    nprobe: int = NPROBE,
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Serve ADC top-k from a PUBLISHED IVF-PQ index (:func:`_serve`).
+    ``queries`` is a (query_id, embedding) frame — the index stores no
+    raw vectors, so the query embedding arrives from the caller (an
+    encoder service, in production). Each (query, probed cell) LUT is
+    built on the driver (:func:`_ivfpq_probe` — residual and rotation
+    included for those encodings), and scoring is the broadcast-LUT
+    ADC sum over the partition-pruned code scan. Pinned equal to the
+    in-memory :func:`ivf_pq_topk` for the same models. The corpus dim
+    comes from the stored codebooks."""
+    qrows = queries.select("query_id", "embedding").collect()
+    return _serve(
+        spark, path, LAYOUTS["ivfpq"], qrows, k_results, nprobe, exclude_self
+    )
+
+
+def ivfpq_index_add(
+    spark: SparkSession,
+    path: str,
+    new_embeddings: DataFrame,
+    check_ids: bool = True,
+    exact_rotation: bool = True,
+) -> int:
+    """Incremental IVF-PQ index maintenance (:meth:`IndexLayout.append`): assign
+    NEW vectors with the published index's FROZEN coarse centroids
+    AND frozen codebooks, encode under its persisted ENCODING (raw /
+    residual / residual_opq — for the rotated layout the frozen set
+    includes the rotation), and append (vec_id, code, gen) rows into
+    their cell partitions. Re-trained models would silently
+    re-define every stored nibble; model drift is observability
+    (:func:`ivfpq_index_drift` watches the CODE distribution per
+    cell) + offline rebuild. ``exact_rotation=False`` is the
+    production-build knob :func:`write_ivfpq_index` carries: the
+    numpy matmul per Arrow batch, last-ulp different — keep the exact
+    default wherever a golden replays the appended codes. Returns
+    rows added."""
+    return LAYOUTS["ivfpq"].append(
+        spark, path, new_embeddings, check_ids, exact_rotation
+    )
+
+
+def ivfpq_drift_stats(
+    orig_codes: DataFrame,
+    new_codes: DataFrame,
+    m: int = PQ_M,
+    k: int = PQ_K,
+    l1_permille: int = 1000,
+    min_new: int = 50,
+) -> DataFrame:
+    """Code-space drift report for an IVF-PQ index — the
+    observability half of the frozen-codebook contract: per
+    (cell, subspace), how far has the APPENDED rows' code histogram
+    moved from the BUILD generation's? Inputs are two (cell, code)
+    frames; output one row per (cell, s) →
+    ``(cell, s, n_orig, n_new, l1x, code_drift)``:
+
+    * the per-subspace code ``j`` unpacks from the packed BIGINT by
+      integer div/mod (explode of the m subspace indexes + scalar
+      arithmetic — no float anywhere);
+    * ``l1x = Σ_j |n_new_j·T_orig − n_orig_j·T_new|`` over the k code
+      bins, with ``T_*`` the (cell, s) totals — the cross-multiplied
+      numerator of the L1 histogram distance (÷ T_orig·T_new would
+      give the usual [0,2] value; no division keeps it bit-exact).
+      The SUM runs in DECIMAL(38,0) but the published column is
+      BIGINT: each |·| term is ≤ T_o·T_n and the triangle inequality
+      bounds the sum, ``l1x ≤ 2·T_o·T_n``, which fits int64 whenever
+      T_o·T_n < 2^62 — i.e. up to ~2·10^9 build AND append rows per
+      (cell, subspace), far past any per-cell population this index
+      layout would tolerate before a rebuild. (A uniform BIGINT
+      output schema also avoids decimal-vs-int64 value-rendering
+      skew across Arrow consumers — the column was DECIMAL(38,0)
+      through r8 and that rendering difference was the localized
+      cause of a persistent driver-side hash divergence.) The
+      ``code_drift`` predicate reads the PRE-CAST decimal sum and the
+      publish cast is guarded by ``raise_error``: under non-ANSI
+      Spark an out-of-bound BIGINT cast silently NULLs — which would
+      suppress the very alert the report exists to raise — while the
+      DuckDB twin's CAST errors loudly; the guard makes both engines
+      fail the same way past the documented bound;
+    * ``code_drift`` flags when the normalized L1 exceeds
+      ``l1_permille``/1000 — i.e. ``1000·l1x > l1_permille·T_o·T_n``
+      — or when a (cell, s) has appends but no build rows at all.
+      Both require ``n_new ≥ min_new``: the empirical L1 of an
+      n-sample histogram against its own source distribution is
+      ~√(2k/πn) (≈1.0 at n=11, k=16 — pure sampling noise), so small
+      appends carry no evidence either way; the default pair
+      (1000‰, 50) sits well above the noise floor at the minimum
+      sample and tightens as appends accumulate.
+
+    A flagged subspace means appended vectors exercise codebook
+    entries the build distribution didn't — quantization error is no
+    longer what the build measured, and the documented offline
+    rebuild (with retrained codebooks) should run.
+
+    Scale shape: one union + one m-way explode (constant fan-out) +
+    two aggregations over (cell, s[, j]) — bins are C·m·k regardless
+    of corpus size; the totals join-back is against that tiny frame.
+    Pure aggregation, no division, SQL-oracle-exact."""
+    powk = [int(k**s) for s in range(m)]
+    tagged = orig_codes.select(
+        "cell", "code", F.lit(True).alias("is_orig")
+    ).unionByName(
+        new_codes.select("cell", "code", F.lit(False).alias("is_orig"))
+    )
+    # posexplode the subspace power array: s = position, p = k^s;
+    # IntegralDivide (`div`) keeps the unpack in exact long arithmetic
+    # for ANY k — float `/` would only be exact for power-of-two k
+    subs = tagged.select(
+        "cell",
+        "is_orig",
+        F.posexplode(F.array(*[F.lit(p) for p in powk])).alias("s", "p"),
+        "code",
+    ).withColumn("j", F.expr(f"(code div p) % {int(k)}"))
+    counts = subs.groupBy("cell", "s", "j").agg(
+        F.sum(F.when(F.col("is_orig"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_orig_j"),
+        F.sum(F.when(~F.col("is_orig"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_new_j"),
+    )
+    tots = counts.groupBy("cell", "s").agg(
+        F.sum("n_orig_j").cast("bigint").alias("t_orig"),
+        F.sum("n_new_j").cast("bigint").alias("t_new"),
+    )
+    joined = counts.join(F.broadcast(tots), ["cell", "s"])
+    agg = joined.groupBy("cell", "s").agg(
+        F.max("t_orig").alias("n_orig"),
+        F.max("t_new").alias("n_new"),
+        F.sum(
+            F.abs(
+                _dec(F.col("n_new_j")) * _dec(F.col("t_orig"))
+                - _dec(F.col("n_orig_j")) * _dec(F.col("t_new"))
+            )
+        ).alias("l1x_dec"),
+    )
+    # the drift decision reads the PRE-CAST decimal sum (1000·l1x ≤
+    # 2000·T_o·T_n ≪ 10^38, never overflows where the predicate is
+    # defined); the BIGINT publish is guarded — a silent non-ANSI
+    # NULL here would erase both the value AND the flag
+    drift = (F.col("n_new") >= min_new) & (
+        ((F.col("n_orig") == 0) & (F.col("n_new") > 0))
+        | (
+            F.lit(1000).cast("decimal(38,0)") * F.col("l1x_dec")
+            > F.lit(l1_permille).cast("decimal(38,0)")
+            * _dec(F.col("n_orig"))
+            * _dec(F.col("n_new"))
+        )
+    )
+    l1x_pub = F.when(
+        F.col("l1x_dec") > F.lit((1 << 63) - 1).cast("decimal(38,0)"),
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    "ivfpq_drift_stats: l1x exceeds int64 (l1x="
+                ),
+                F.col("l1x_dec").cast("string"),
+                F.lit(
+                    "); per-(cell,s) populations passed the ~2e9-row "
+                    "documented bound — rebuild the index before "
+                    "re-running drift"
+                ),
+            )
+        ).cast("bigint"),
+    ).otherwise(F.col("l1x_dec").cast("bigint"))
+    return agg.select(
+        "cell",
+        "s",
+        "n_orig",
+        "n_new",
+        l1x_pub.alias("l1x"),
+        drift.alias("code_drift"),
+    )
+
+
+def ivfpq_index_drift(spark: SparkSession, path: str) -> DataFrame:
+    """Code-space drift over a PUBLISHED IVF-PQ index: build
+    generation (gen=0) vs every append since
+    (:meth:`IndexLayout.drift`) — a pure aggregation over the codes
+    table, no raw vectors anywhere (the index stores none)."""
+    return LAYOUTS["ivfpq"].drift(spark, path)
+
+
+# Every published layout, in the order layout_of tries them.
+LAYOUTS = {
+    layout.name: layout
+    for layout in (
+        IndexLayout(
+            name="ivf",
+            rows="vectors",
+            marker="embedding",
+            label="IVF",
+            builder="write_ivf_index",
+            load=_load_centroids,
+            tables=_no_tables,
+            prepare=_ivf_prepare,
+            encode=_ivf_encode,
+            probe_col="q_emb ARRAY<FLOAT>",
+            probe=_query_probe,
+            score=_ivf_score,
+            score_col="cosine",
+            descending=True,
+            report=_ivf_report,
+        ),
+        IndexLayout(
+            name="int8",
+            rows="vectors",
+            marker="qvec",
+            label="int8",
+            builder="write_int8_index",
+            load=_load_centroids,
+            tables=_no_tables,
+            prepare=_int8_prepare,
+            encode=_int8_encode,
+            probe_col="q_emb ARRAY<DOUBLE>",
+            probe=_query_probe,
+            score=_int8_score,
+            score_col="s8",
+            descending=True,
+            report=_int8_report,
+        ),
+        IndexLayout(
+            name="ivfpq",
+            rows="codes",
+            marker="code",
+            label="IVF-PQ",
+            builder="write_ivfpq_index",
+            load=_load_ivfpq,
+            tables=_ivfpq_tables,
+            prepare=_keep_frame,
+            encode=_ivfpq_encode,
+            probe_col="lut ARRAY<BIGINT>",
+            probe=_ivfpq_probe,
+            score=_ivfpq_score,
+            score_col="adist9",
+            descending=False,
+            report=_ivfpq_report,
+        ),
+    )
+}

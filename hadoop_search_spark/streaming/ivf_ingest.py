@@ -45,12 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_search_spark.operators.similarity import (
-    int8_index_add,
-    int8_index_drift,
-    ivf_index_add,
-    ivf_index_drift,
-)
+from hadoop_search_spark.operators.similarity import LAYOUTS, layout_of
 from hadoop_search_spark.streaming import store
 from hadoop_search_spark.streaming.vector_ingest import (
     VECS_SCHEMA,  # noqa: F401  (re-export: the composed schema is the same)
@@ -58,17 +53,15 @@ from hadoop_search_spark.streaming.vector_ingest import (
 )
 
 
-def _ivfpq_cell_drift(spark: SparkSession, path: str) -> DataFrame:
-    """:func:`ivfpq_index_drift` rolled up to the per-CELL shape the
-    loop's drift ledger uses for every layout — (cell, n_orig, n_new,
-    drifted) with ``drifted`` = any subspace's code_drift. The
-    per-(cell, s) counts are identical across s (every vector
-    contributes one row per subspace), so max() recovers the cell
-    population exactly; the full per-subspace report stays available
-    directly from ivfpq_index_drift when the trigger fires."""
-    from hadoop_search_spark.operators.similarity import ivfpq_index_drift
-
-    rep = ivfpq_index_drift(spark, path)
+def _ivfpq_cell_drift(rep: DataFrame) -> DataFrame:
+    """:func:`ivfpq_index_drift`'s per-(cell, s) report rolled up to
+    the per-CELL shape the loop's drift ledger uses for every layout —
+    (cell, n_orig, n_new, drifted) with ``drifted`` = any subspace's
+    code_drift. The per-(cell, s) counts are identical across s
+    (every vector contributes one row per subspace), so max()
+    recovers the cell population exactly; the full per-subspace
+    report stays available directly from ivfpq_index_drift when the
+    trigger fires."""
     return rep.groupBy("cell").agg(
         F.max("n_orig").alias("n_orig"),
         F.max("n_new").alias("n_new"),
@@ -76,20 +69,6 @@ def _ivfpq_cell_drift(spark: SparkSession, path: str) -> DataFrame:
             F.sum(F.when(F.col("code_drift"), 1).otherwise(0)) > 0
         ).alias("drifted"),
     )
-
-
-_LAYOUTS = {
-    # every layout publishes the coarse model under {index}/centroids,
-    # so the ledger/presence-probe machinery is layout-blind — only
-    # the rows directory (vectors/ vs codes/), the append, and the
-    # drift functions differ (r9: the IVF-SQ8 artifact joined the
-    # lifecycle; r10: the IVF-PQ codes layouts — raw/residual/
-    # residual_opq encodings all append through ivfpq_index_add, which
-    # reads the persisted /encoding itself)
-    "ivf": (ivf_index_add, ivf_index_drift, "write_ivf_index", "vectors"),
-    "int8": (int8_index_add, int8_index_drift, "write_int8_index", "vectors"),
-    "ivfpq": (None, _ivfpq_cell_drift, "write_ivfpq_index", "codes"),
-}
 
 
 class StreamingIvfIndexer(store.BatchSink):
@@ -124,34 +103,26 @@ class StreamingIvfIndexer(store.BatchSink):
         self.spark = spark
         self.root = root
         self.index_path = index_path
-        if layout not in _LAYOUTS:
+        if layout not in LAYOUTS:
             raise ValueError(
-                f"unknown index layout {layout!r}; one of {sorted(_LAYOUTS)}"
+                f"unknown index layout {layout!r}; one of {sorted(LAYOUTS)}"
             )
-        self._add, self._drift, builder, self._rows_dir = _LAYOUTS[layout]
-        if self._add is None:
-            # ivfpq appends need the corpus dim threaded through (the
-            # code expression slices dim//m subvectors); bind it here
-            # so _append_epoch stays layout-blind
-            from hadoop_search_spark.operators.similarity import (
-                ivfpq_index_add,
-            )
-
-            # exact_rotation=False is the production-build knob for
-            # residual_opq indexes (numpy matmul instead of the
-            # decimal fold — r10 ADVICE: appends had no way to skip
-            # the ~3.7 ms/row exact form); keep the exact default
-            # wherever a golden replays the appended codes
-            self._add = (
-                lambda spark_, path_, df, check_ids=False: ivfpq_index_add(
-                    spark_, path_, df, check_ids=check_ids, dim=dim,
-                    exact_rotation=exact_rotation,
-                )
-            )
-        if not os.path.exists(os.path.join(index_path, "centroids")):
+        self._layout = LAYOUTS[layout]
+        # exact_rotation=False is the production-build knob for
+        # residual_opq indexes (numpy matmul instead of the decimal
+        # fold); keep the exact default wherever a golden replays the
+        # appended codes
+        self._exact_rotation = exact_rotation
+        found = layout_of(spark, index_path)
+        if found is None:
             raise ValueError(
                 f"no published index at {index_path}; build one with "
-                f"{builder} first (the frozen-quantizer contract)"
+                f"{self._layout.builder} first (the frozen-quantizer contract)"
+            )
+        if found is not self._layout:
+            raise ValueError(
+                f"the index at {index_path} has layout {found.name!r}, "
+                f"not {layout!r}"
             )
         self.deduper = StreamingVectorDeduper(
             spark, os.path.join(root, "store"), threshold, num_planes, dim
@@ -177,18 +148,19 @@ class StreamingIvfIndexer(store.BatchSink):
         n_kept = ids.count()
         if n_kept:
             index_ids = self.spark.read.parquet(
-                f"{self.index_path}/{self._rows_dir}"
+                f"{self.index_path}/{self._layout.rows}"
             ).select("vec_id")
             n_present = ids.join(index_ids, "vec_id").count()
             if n_present == n_kept:
                 pass  # append committed, marker write crashed: self-heal
             elif n_present == 0:
                 # ids proven fresh above — skip the O(index) re-check
-                self._add(
+                self._layout.append(
                     self.spark,
                     self.index_path,
                     admitted.select("vec_id", "embedding"),
                     check_ids=False,
+                    exact_rotation=self._exact_rotation,
                 )
             else:
                 raise RuntimeError(
@@ -204,7 +176,10 @@ class StreamingIvfIndexer(store.BatchSink):
     def _drift_epoch(self, epoch_id: int) -> None:
         out = store.open_epoch(os.path.join(self.root, "drift"), epoch_id)
         if out is not None:
-            self._drift(self.spark, self.index_path).write.parquet(out)
+            rep = self._layout.drift(self.spark, self.index_path)
+            if self._layout.name == "ivfpq":
+                rep = _ivfpq_cell_drift(rep)
+            rep.write.parquet(out)
 
     # -- the composed batch body ---------------------------------------
 

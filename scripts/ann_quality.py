@@ -67,30 +67,28 @@ SWEEP_ROWS = [
 
 
 def measure(spark, sf_dir: str) -> list[tuple[str, float, float]]:
-    from hadoop_search_spark.operators.similarity import (
-        ann_lsh_multiprobe_recall,
-        ann_recall,
-        cascade3_recall,
-        cascade_int8_recall,
-        cascade_ivf_int8_recall,
-        cascade_ivfpq_recall,
-        cascade_recall,
-        hamming_recall,
-        ivf_centroids,
-        ivf_assign,
-        ivf_pq_recall,
-        ivf_pq_residual_recall,
-        ivf_recall,
-        ivf_train_kmeans,
-        opq_pq_recall,
-        pq_recall,
-        pq_train_codebooks,
-    )
     import pyspark.sql.functions as F
+
     from hadoop_search_spark.operators.similarity import (
-        _recall_vs_exact,
         _residual_expr,
+        ann_ivf_topk,
+        ann_lsh_multiprobe_topk,
+        ann_lsh_topk,
+        cascade3_topk,
+        cascade_int8_topk,
+        cascade_ivf_int8_topk,
+        cascade_ivfpq_topk,
+        cascade_topk,
+        hamming_topk,
+        ivf_assign,
+        ivf_centroids,
         ivf_pq_residual_topk,
+        ivf_pq_topk,
+        ivf_train_kmeans,
+        opq_pq_topk,
+        pq_topk,
+        pq_train_codebooks,
+        recall_at_k,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
@@ -98,25 +96,29 @@ def measure(spark, sf_dir: str) -> list[tuple[str, float, float]]:
     trained_cent = ivf_train_kmeans(emb)
     trained_books = pq_train_codebooks(emb)
 
+    def recall(topk, *args, **kwargs) -> float:
+        approx = topk(emb, QUERY_IDS, K, *args, **kwargs)
+        return recall_at_k(emb, QUERY_IDS, K, approx)
+
     runs = [
         ("exact cosine (baseline)", lambda: 1.0),
-        ("LSH buckets", lambda: ann_recall(emb, QUERY_IDS, K)),
+        ("LSH buckets", lambda: recall(ann_lsh_topk)),
         (
             "LSH multi-probe (16 probes)",
-            lambda: ann_lsh_multiprobe_recall(emb, QUERY_IDS, K, flips=4),
+            lambda: recall(ann_lsh_multiprobe_topk, flips=4),
         ),
         (
             "LSH multi-probe (64 probes)",
-            lambda: ann_lsh_multiprobe_recall(emb, QUERY_IDS, K, flips=6),
+            lambda: recall(ann_lsh_multiprobe_topk, flips=6),
         ),
-        ("IVF (seed grid)", lambda: ivf_recall(emb, QUERY_IDS, K)),
+        ("IVF (seed grid)", lambda: recall(ann_ivf_topk)),
         (
             "IVF (trained k-means)",
-            lambda: ivf_recall(emb, QUERY_IDS, K, centroids=trained_cent),
+            lambda: recall(ann_ivf_topk, centroids=trained_cent),
         ),
         (
             "IVF (seed grid) nprobe=1",
-            lambda: ivf_recall(emb, QUERY_IDS, K, nprobe=1),
+            lambda: recall(ann_ivf_topk, nprobe=1),
         ),
         (
             "IVF+graph refine (seed cells)",
@@ -124,7 +126,7 @@ def measure(spark, sf_dir: str) -> list[tuple[str, float, float]]:
         ),
         (
             "IVF (trained) nprobe=1",
-            lambda: ivf_recall(emb, QUERY_IDS, K, nprobe=1, centroids=trained_cent),
+            lambda: recall(ann_ivf_topk, nprobe=1, centroids=trained_cent),
         ),
         (
             "IVF+graph refine (trained cells)",
@@ -134,41 +136,41 @@ def measure(spark, sf_dir: str) -> list[tuple[str, float, float]]:
             "IVF+graph refine 2-hop (trained cells)",
             lambda: _graph_refine_recall(trained_cent, rounds=2),
         ),
-        ("PQ ADC (seed books)", lambda: pq_recall(emb, QUERY_IDS, K)),
+        ("PQ ADC (seed books)", lambda: recall(pq_topk)),
         (
             "PQ ADC (trained books)",
-            lambda: pq_recall(emb, QUERY_IDS, K, books=trained_books),
+            lambda: recall(pq_topk, books=trained_books),
         ),
         (
             "OPQ parametric (PCA-rotated PQ)",
-            lambda: opq_pq_recall(emb, QUERY_IDS, K),
+            lambda: recall(opq_pq_topk),
         ),
-        ("IVF+PQ", lambda: ivf_pq_recall(emb, QUERY_IDS, K)),
+        ("IVF+PQ", lambda: recall(ivf_pq_topk)),
         (
             "IVF+PQ residual (IVFADC)",
-            lambda: ivf_pq_residual_recall(emb, QUERY_IDS, K),
+            lambda: recall(ivf_pq_residual_topk),
         ),
         (
             "IVF+PQ residual (trained books)",
             lambda: _trained_residual_recall(),
         ),
-        ("sign-bit Hamming", lambda: hamming_recall(emb, QUERY_IDS, K)),
-        ("cascade (hamming→exact)", lambda: cascade_recall(emb, QUERY_IDS, K)),
+        ("sign-bit Hamming", lambda: recall(hamming_topk)),
+        ("cascade (hamming→exact)", lambda: recall(cascade_topk)),
         (
             "cascade3 (sign→PQ→exact)",
-            lambda: cascade3_recall(emb, QUERY_IDS, K),
+            lambda: recall(cascade3_topk),
         ),
         (
             "cascade (IVF+PQ→exact)",
-            lambda: cascade_ivfpq_recall(emb, QUERY_IDS, K, w=50),
+            lambda: recall(cascade_ivfpq_topk, w=50),
         ),
         (
             "cascade (int8→exact)",
-            lambda: cascade_int8_recall(emb, QUERY_IDS, K, w=50),
+            lambda: recall(cascade_int8_topk, w=50),
         ),
         (
             "cascade (IVF+int8→exact)",
-            lambda: cascade_ivf_int8_recall(emb, QUERY_IDS, K, w=50),
+            lambda: recall(cascade_ivf_int8_topk, w=50),
         ),
         (
             "IVF+PQ residual (k-means cells)",
@@ -243,11 +245,10 @@ def measure(spark, sf_dir: str) -> list[tuple[str, float, float]]:
             books, rot = _res_cache["plain"], None
         fn = cascade_ivfpq_residual_topk if cascade else ivf_pq_residual_topk
         kwargs = {"w": w} if cascade else {}
-        approx = fn(
-            emb, QUERY_IDS, K, num_centroids=8, nprobe=nprobe,
-            centroids=cents, books=books, rotation=rot, **kwargs,
+        return recall(
+            fn, num_centroids=8, nprobe=nprobe, centroids=cents,
+            books=books, rotation=rot, **kwargs,
         )
-        return _recall_vs_exact(emb, QUERY_IDS, K, approx)
 
     def _graph_refine_recall(cents, rounds: int = 1) -> float:
         # the sim_graph_refine_topk recipe (r12 rung): offline top-8
@@ -259,7 +260,7 @@ def measure(spark, sf_dir: str) -> list[tuple[str, float, float]]:
         )
 
         graph = knn_graph(emb, g=8, centroids=cents, nprobe=2)
-        return _recall_vs_exact(
+        return recall_at_k(
             emb,
             QUERY_IDS,
             K,
@@ -278,10 +279,7 @@ def measure(spark, sf_dir: str) -> list[tuple[str, float, float]]:
             _residual_expr(F.col("embedding"), cents).alias("embedding"),
         )
         books = pq_train_codebooks(res, iterations=2)
-        approx = ivf_pq_residual_topk(
-            emb, QUERY_IDS, K, centroids=cents, books=books
-        )
-        return _recall_vs_exact(emb, QUERY_IDS, K, approx)
+        return recall(ivf_pq_residual_topk, centroids=cents, books=books)
     out = []
     for label, fn in runs:
         t0 = time.time()

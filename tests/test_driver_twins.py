@@ -195,7 +195,7 @@ def test_cell_ranking_zero_norm_centroid_raises():
 
 
 def test_model_cache_cross_process_rebuild(spark, tmp_path):
-    """The model caches detect an in-place rebuild performed by a
+    """The model cache detects an in-place rebuild performed by a
     DIFFERENT process (r11 ADVICE): the in-process writer pop can't
     fire there, so the cache validates a persisted fingerprint
     (file listing of /centroids) on every read. Simulated by
@@ -203,32 +203,36 @@ def test_model_cache_cross_process_rebuild(spark, tmp_path):
     fingerprint after the rebuild — exactly the state a long-lived
     serving session is in after a CLI rebuild."""
     from hadoop_search_spark.operators.similarity import (
-        _IVF_CENTROID_CACHE,
-        _ivf_centroids_cached,
+        _MODEL_CACHE,
+        LAYOUTS,
         _model_fingerprint,
+        _models,
         write_ivf_index,
     )
 
+    ivf = LAYOUTS["ivf"]
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     path = str(tmp_path / "ivf")
     write_ivf_index(emb, path, num_centroids=4)
-    old_fp = _model_fingerprint(spark, path)
-    old_model = _ivf_centroids_cached(spark, path)
     key = (spark.sparkContext.applicationId, path)
+    old_model = _models(spark, path, ivf)
+    old_fp = _MODEL_CACHE[key][0]
+    assert old_fp == ("ivf", _model_fingerprint(spark, path))
 
     # in-place rebuild with a different quantizer (8 cells)
-    new_model = write_ivf_index(emb, path, num_centroids=8)
+    new_cents = write_ivf_index(emb, path, num_centroids=8)
+    assert key not in _MODEL_CACHE  # the publish dropped its key
     # simulate "other process rebuilt": restore the stale entry the
     # writer pop just removed, under the old fingerprint
-    _IVF_CENTROID_CACHE[key] = (old_fp, old_model)
+    _MODEL_CACHE[key] = (old_fp, old_model)
 
-    served = _ivf_centroids_cached(spark, path)
-    assert served == new_model and len(served) == 8
+    served = _models(spark, path, ivf)
+    assert served.cents == new_cents and len(served.cents) == 8
 
     # unchanged artifact → stable fingerprint → true cache hit
     fp2 = _model_fingerprint(spark, path)
     assert fp2 == _model_fingerprint(spark, path)
-    assert _ivf_centroids_cached(spark, path) is served
+    assert _models(spark, path, ivf) is served
 
 
 def test_model_cache_bounded():
@@ -236,8 +240,16 @@ def test_model_cache_bounded():
     first) — per-mkdtemp test indexes must not accumulate forever."""
     from hadoop_search_spark.operators import similarity as sim
 
-    cache: dict = {}
-    for i in range(sim._MODEL_CACHE_MAX + 8):
-        sim._model_cache_get(cache, f"k{i}", ("fp",), lambda i=i: i)
-    assert len(cache) == sim._MODEL_CACHE_MAX
-    assert "k0" not in cache and f"k{sim._MODEL_CACHE_MAX + 7}" in cache
+    saved = dict(sim._MODEL_CACHE)
+    sim._MODEL_CACHE.clear()
+    try:
+        for i in range(sim._MODEL_CACHE_MAX + 8):
+            sim._model_cache_get(f"k{i}", ("fp",), lambda i=i: i)
+        cache = sim._MODEL_CACHE
+        assert len(cache) == sim._MODEL_CACHE_MAX
+        assert "k0" not in cache and f"k{sim._MODEL_CACHE_MAX + 7}" in cache
+        assert sim._model_cache_get("k8", ("fp",), lambda: "reloaded") == 8
+        assert sim._model_cache_get("k8", ("fp2",), lambda: "new") == "new"
+    finally:
+        sim._MODEL_CACHE.clear()
+        sim._MODEL_CACHE.update(saved)

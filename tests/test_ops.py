@@ -212,11 +212,21 @@ def test_embedding_dedup_finds_planted_near_dups(spark):
 
 
 def test_ann_recall_tunable(spark):
-    from hadoop_search_spark.operators.similarity import ann_recall
+    from hadoop_search_spark.operators.similarity import (
+        ann_lsh_topk,
+        recall_at_k,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    r8 = ann_recall(emb, [0, 1, 2], k=5, num_planes=8)
-    r2 = ann_recall(emb, [0, 1, 2], k=5, num_planes=2)
+
+    def ann_recall(num_planes):
+        q = [0, 1, 2]
+        return recall_at_k(
+            emb, q, 5, ann_lsh_topk(emb, q, k=5, num_planes=num_planes)
+        )
+
+    r8 = ann_recall(8)
+    r2 = ann_recall(2)
     assert 0.0 <= r8 <= 1.0
     assert r2 >= r8  # fewer planes -> bigger buckets -> recall no worse
 
@@ -250,7 +260,7 @@ def test_ivf_assign_and_probe(spark):
         ann_ivf_topk,
         ivf_assign,
         ivf_centroids,
-        ivf_recall,
+        recall_at_k,
     )
 
     # two well-separated clusters; centroids = vec_ids 0 and 1
@@ -272,7 +282,8 @@ def test_ivf_assign_and_probe(spark):
     assert all(r.rn <= 3 for r in got)
 
     # probing every cell makes IVF exact
-    assert ivf_recall(emb, [0, 1], k=3, num_centroids=2, nprobe=2) == 1.0
+    approx = ann_ivf_topk(emb, [0, 1], k=3, num_centroids=2, nprobe=2)
+    assert recall_at_k(emb, [0, 1], 3, approx) == 1.0
 
 
 def test_cell_argmax_exact_matches_rational_arithmetic(spark):
@@ -971,6 +982,7 @@ def test_ivf_index_persist_and_serve(spark, tmp_path):
     from hadoop_search_spark.operators.similarity import (
         ann_ivf_topk,
         ivf_index_topk,
+        layout_of,
         load_ivf_centroids,
         write_ivf_index,
     )
@@ -978,8 +990,10 @@ def test_ivf_index_persist_and_serve(spark, tmp_path):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qids = [3, 17, 41]
     path = str(tmp_path / "ivf")
+    assert layout_of(spark, path) is None  # nothing published yet
     cents = write_ivf_index(emb, path)
     assert load_ivf_centroids(spark, path) == cents
+    assert layout_of(spark, path).name == "ivf"
 
     served = ivf_index_topk(spark, path, qids, k=5, nprobe=2)
     direct = ann_ivf_topk(emb, qids, k=5, nprobe=2, centroids=cents)
@@ -1003,7 +1017,9 @@ def test_ivf_index_add_equals_full_rebuild(spark, tmp_path):
     append the last 100, and serving must return EXACTLY what an
     index built on all 500 with the same frozen quantizer returns —
     for every query and probe width. Appending a colliding vec_id
-    must fail fast; only touched cell partitions gain files."""
+    must fail fast; only touched cell partitions gain files, one per
+    touched cell (the append is rebalanced by cell like the build)."""
+    import collections
     import os
 
     from hadoop_search_spark.operators.similarity import (
@@ -1033,6 +1049,14 @@ def test_ivf_index_add_equals_full_rebuild(spark, tmp_path):
         if f.endswith(".parquet")
     }
     assert files_before <= files_after and len(files_after) > len(files_before)
+
+    def per_cell(files):
+        return collections.Counter(os.path.dirname(f) for f in files)
+
+    # the append is rebalanced by cell like the build: no touched cell
+    # partition gains more files than the build wrote into one
+    added = per_cell(files_after - files_before)
+    assert max(added.values()) <= max(per_cell(files_before).values())
 
     full_path = str(tmp_path / "ivf_full")
     write_ivf_index(emb, full_path, centroids=cents)
@@ -1593,8 +1617,8 @@ def test_pq_encode_matches_numpy_argmin_and_topk_is_adc(spark):
     from hadoop_search_spark.operators.similarity import (
         pq_codebooks,
         pq_encode,
-        pq_recall,
         pq_topk,
+        recall_at_k,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1631,7 +1655,8 @@ def test_pq_encode_matches_numpy_argmin_and_topk_is_adc(spark):
         assert r.adist9 == want / 1e12
     # quantized search still finds a meaningful fraction of true
     # neighbors on near-random vectors
-    assert pq_recall(emb, [0, 1, 2, 3, 4], 10, books) > 0.15
+    q = [0, 1, 2, 3, 4]
+    assert recall_at_k(emb, q, 10, pq_topk(emb, q, 10, books)) > 0.15
 
 
 def test_ivf_pq_composed_candidates_and_distances(spark):
@@ -1793,6 +1818,7 @@ def test_ivfpq_index_add_equals_rebuild_and_code_drift_flags(
         ivfpq_index_add,
         ivfpq_index_drift,
         ivfpq_index_topk,
+        layout_of,
         write_ivfpq_index,
     )
 
@@ -1801,6 +1827,7 @@ def test_ivfpq_index_add_equals_rebuild_and_code_drift_flags(
     rest = emb.filter(F.col("vec_id") >= 400)
     path = str(tmp_path / "ivfpq_inc")
     cents, books = write_ivfpq_index(first, path)
+    assert layout_of(spark, path).name == "ivfpq"
     files_before = {
         f"{d}/{f}"
         for d, _, fs in os.walk(f"{path}/codes")
@@ -1893,11 +1920,12 @@ def test_opq_beats_plain_pq_on_anisotropic_fixture(spark):
     import os
 
     from hadoop_search_spark.operators.similarity import (
-        ivf_recall,
+        ann_ivf_topk,
         ivf_train_kmeans,
-        opq_pq_recall,
-        pq_recall,
+        opq_pq_topk,
+        pq_topk,
         pq_train_codebooks,
+        recall_at_k,
     )
 
     path = os.path.join(
@@ -1908,12 +1936,13 @@ def test_opq_beats_plain_pq_on_anisotropic_fixture(spark):
     try:
         q = list(range(10))
         books = pq_train_codebooks(emb)  # iterations=2, same as OPQ's
-        pq = pq_recall(emb, q, 10, books=books)
-        opq = opq_pq_recall(emb, q, 10)
+        pq = recall_at_k(emb, q, 10, pq_topk(emb, q, 10, books=books))
+        opq = recall_at_k(emb, q, 10, opq_pq_topk(emb, q, 10))
         assert opq > pq, f"OPQ {opq} must beat trained PQ {pq}"
         assert opq >= 0.4 and pq <= 0.35  # measured 0.41 vs 0.30
         cents = ivf_train_kmeans(emb)
-        assert ivf_recall(emb, q, 10, nprobe=1, centroids=cents) == 1.0
+        ivf = ann_ivf_topk(emb, q, 10, nprobe=1, centroids=cents)
+        assert recall_at_k(emb, q, 10, ivf) == 1.0
     finally:
         emb.unpersist()
 
@@ -1926,13 +1955,15 @@ def test_int8_index_roundtrip_append_and_serve(spark, tmp_path):
     same centroids (append == rebuild for the int8 layout, since
     int8 quantization is per-vector — no trained codebook exists to
     go stale). Collisions fail fast; only touched cell dirs gain
-    files; gen lineage stamps appends."""
+    files, one per touched cell; gen lineage stamps appends."""
+    import collections
     import os
 
     from hadoop_search_spark.operators.similarity import (
         int8_index_add,
         int8_index_topk,
         ivf_int8_topk,
+        layout_of,
         load_ivf_centroids,
         write_int8_index,
     )
@@ -1942,6 +1973,7 @@ def test_int8_index_roundtrip_append_and_serve(spark, tmp_path):
     rest = emb.filter(F.col("vec_id") >= 400)
     path = str(tmp_path / "int8_idx")
     write_int8_index(first, path)
+    assert layout_of(spark, path).name == "int8"
     files_before = {
         f"{d}/{f}"
         for d, _, fs in os.walk(f"{path}/vectors")
@@ -1956,6 +1988,14 @@ def test_int8_index_roundtrip_append_and_serve(spark, tmp_path):
         if f.endswith(".parquet")
     }
     assert files_before <= files_after and len(files_after) > len(files_before)
+
+    def per_cell(files):
+        return collections.Counter(os.path.dirname(f) for f in files)
+
+    # the append is rebalanced by cell like the build: no touched cell
+    # partition gains more files than the build wrote into one
+    added = per_cell(files_after - files_before)
+    assert max(added.values()) <= max(per_cell(files_before).values())
     # appended rows carry the next generation
     gens = {
         r.gen
@@ -2056,11 +2096,10 @@ def test_cascade_ivfpq_candidates_and_exact_scores(spark):
     cascade's recall is >= plain IVF+PQ at identical (C, nprobe) —
     the rerank can only fix ADC ordering inside the candidate set."""
     from hadoop_search_spark.operators.similarity import (
-        cascade_ivfpq_recall,
         cascade_ivfpq_topk,
         cosine_topk,
-        ivf_pq_recall,
         ivf_pq_topk,
+        recall_at_k,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -2079,9 +2118,9 @@ def test_cascade_ivfpq_candidates_and_exact_scores(spark):
         assert exact[(r.query_id, r.vec_id)] == r.cosine
 
     qs = [0, 1, 2, 3, 4]
-    assert cascade_ivfpq_recall(emb, qs, 10, w=50) >= ivf_pq_recall(
-        emb, qs, 10
-    )
+    assert recall_at_k(
+        emb, qs, 10, cascade_ivfpq_topk(emb, qs, 10, w=50)
+    ) >= recall_at_k(emb, qs, 10, ivf_pq_topk(emb, qs, 10))
 
 
 def test_cascade_int8_candidates_exact_scores_and_high_recall(spark):
@@ -2092,11 +2131,11 @@ def test_cascade_int8_candidates_exact_scores_and_high_recall(spark):
     barely perturbs cosine order, so recall@10 at w=50 beats every
     PQ-tier cascade on the same fixture."""
     from hadoop_search_spark.operators.similarity import (
-        cascade_int8_recall,
         cascade_int8_topk,
         cosine_topk,
         int8_topk,
-        ivf_pq_recall,
+        ivf_pq_topk,
+        recall_at_k,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -2115,9 +2154,9 @@ def test_cascade_int8_candidates_exact_scores_and_high_recall(spark):
         assert exact[(r.query_id, r.vec_id)] == r.cosine
 
     qs = [0, 1, 2, 3, 4]
-    r_int8 = cascade_int8_recall(emb, qs, 10, w=50)
+    r_int8 = recall_at_k(emb, qs, 10, cascade_int8_topk(emb, qs, 10, w=50))
     assert r_int8 >= 0.9  # near-exact at 1/4 the scan bytes
-    assert r_int8 >= ivf_pq_recall(emb, qs, 10)
+    assert r_int8 >= recall_at_k(emb, qs, 10, ivf_pq_topk(emb, qs, 10))
 
 
 def test_opq_allocation_and_rotation_invariants(spark):
@@ -2180,13 +2219,13 @@ def test_cascade_ivf_int8_candidates_and_recall_ceiling(spark):
     (the int8 ordering error vanishes under the rerank; the cell miss
     cannot)."""
     from hadoop_search_spark.operators.similarity import (
-        cascade_ivf_int8_recall,
+        ann_ivf_topk,
         cascade_ivf_int8_topk,
         cosine_topk,
         ivf_assign,
         ivf_centroids,
         ivf_int8_topk,
-        ivf_recall,
+        recall_at_k,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -2209,8 +2248,11 @@ def test_cascade_ivf_int8_candidates_and_recall_ceiling(spark):
         assert exact[(r.query_id, r.vec_id)] == r.cosine
 
     qs = [0, 1, 2, 3, 4]
-    r_stack = cascade_ivf_int8_recall(emb, qs, 10, w=50)
-    r_cells = ivf_recall(emb, qs, 10)  # raw-float IVF at same nprobe
+    r_stack = recall_at_k(
+        emb, qs, 10, cascade_ivf_int8_topk(emb, qs, 10, w=50)
+    )
+    # raw-float IVF at same nprobe
+    r_cells = recall_at_k(emb, qs, 10, ann_ivf_topk(emb, qs, 10))
     assert r_stack <= r_cells + 1e-9  # cell recall is the ceiling
     assert r_stack >= r_cells - 0.15  # int8+w=50 sits near it
 
@@ -2257,8 +2299,8 @@ def test_hamming_topk_matches_numpy_and_recall_floor(spark):
     import numpy as np
 
     from hadoop_search_spark.operators.similarity import (
-        hamming_recall,
         hamming_topk,
+        recall_at_k,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -2280,19 +2322,20 @@ def test_hamming_topk_matches_numpy_and_recall_floor(spark):
     }
     assert got == want
 
-    rec = hamming_recall(emb, qids, 10)
+    rec = recall_at_k(emb, qids, 10, hamming_topk(emb, qids, 10))
     assert rec > 0.15  # 1-bit proxy beats the 10/499 random floor
 
     # the cascade reranks hamming candidates with EXACT cosine: recall
     # at equal k is >= the plain hamming path, and every returned row
     # carries the true cosine (subset of the exact all-pairs scores)
     from hadoop_search_spark.operators.similarity import (
-        cascade_recall,
         cascade_topk,
         cosine_topk,
     )
 
-    crec = cascade_recall(emb, qids, 10, prefilter=100)
+    crec = recall_at_k(
+        emb, qids, 10, cascade_topk(emb, qids, 10, prefilter=100)
+    )
     assert crec >= rec
     exact = {
         (r.query_id, r.vec_id): r.cosine
@@ -2557,11 +2600,10 @@ def test_ann_lsh_multiprobe_dials_from_single_bucket_to_exact(spark):
     supersets so measured recall never drops as flips grow; no
     (query, vec) pair is ever produced twice (buckets are disjoint)."""
     from hadoop_search_spark.operators.similarity import (
-        ann_lsh_multiprobe_recall,
         ann_lsh_multiprobe_topk,
         ann_lsh_topk,
-        ann_recall,
         cosine_topk,
+        recall_at_k,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -2579,10 +2621,13 @@ def test_ann_lsh_multiprobe_dials_from_single_bucket_to_exact(spark):
         cosine_topk(emb, qids, 5)
     )
 
-    base = ann_recall(emb, qids, 10)
-    r2 = ann_lsh_multiprobe_recall(emb, qids, 10, flips=2)
-    r4 = ann_lsh_multiprobe_recall(emb, qids, 10, flips=4)
-    r6 = ann_lsh_multiprobe_recall(emb, qids, 10, flips=6)
+    def recall(flips):
+        return recall_at_k(
+            emb, qids, 10, ann_lsh_multiprobe_topk(emb, qids, 10, flips=flips)
+        )
+
+    base = recall_at_k(emb, qids, 10, ann_lsh_topk(emb, qids, 10))
+    r2, r4, r6 = recall(2), recall(4), recall(6)
     assert base <= r2 <= r4 <= r6 <= 1.0
 
     out = ann_lsh_multiprobe_topk(emb, qids, 10, flips=4).collect()
@@ -2734,7 +2779,7 @@ def test_residual_opq_beats_plain_on_aniso(spark):
     at w=50. Deterministic end to end, so the floors are exact-value
     regression pins, not statistical ones."""
     from hadoop_search_spark.operators.similarity import (
-        _recall_vs_exact,
+        recall_at_k,
         _residual_expr,
         cascade_ivfpq_residual_topk,
         ivf_assign,
@@ -2755,14 +2800,14 @@ def test_residual_opq_beats_plain_on_aniso(spark):
     books_p = pq_train_codebooks(res, iterations=2)
     books_o, rot = pq_residual_opq_model(emb, cents, iterations=2)
 
-    r_plain = _recall_vs_exact(
+    r_plain = recall_at_k(
         emb, qids, 10,
         ivf_pq_residual_topk(
             emb, qids, 10, num_centroids=8, nprobe=2, centroids=cents,
             books=books_p,
         ),
     )
-    r_opq = _recall_vs_exact(
+    r_opq = recall_at_k(
         emb, qids, 10,
         ivf_pq_residual_topk(
             emb, qids, 10, num_centroids=8, nprobe=2, centroids=cents,
@@ -2772,14 +2817,14 @@ def test_residual_opq_beats_plain_on_aniso(spark):
     assert r_opq >= r_plain + 0.10, (r_plain, r_opq)
     assert r_opq >= 0.45 and r_plain >= 0.25, (r_plain, r_opq)
 
-    c_plain = _recall_vs_exact(
+    c_plain = recall_at_k(
         emb, qids, 10,
         cascade_ivfpq_residual_topk(
             emb, qids, 10, 50, num_centroids=8, nprobe=2, centroids=cents,
             books=books_p,
         ),
     )
-    c_opq = _recall_vs_exact(
+    c_opq = recall_at_k(
         emb, qids, 10,
         cascade_ivfpq_residual_topk(
             emb, qids, 10, 50, num_centroids=8, nprobe=2, centroids=cents,
@@ -3152,11 +3197,11 @@ def test_graph_refine_beats_narrow_probe(spark):
     single boundary hit across hosts; the INVARIANT asserted is the
     expansion's win over the identical narrow probe."""
     from hadoop_search_spark.operators.similarity import (
-        _recall_vs_exact,
+        ann_ivf_topk,
         graph_refine_topk,
-        ivf_recall,
         ivf_train_kmeans,
         knn_graph,
+        recall_at_k,
     )
 
     emb = spark.read.parquet(
@@ -3164,9 +3209,11 @@ def test_graph_refine_beats_narrow_probe(spark):
     ).select("vec_id", "embedding")
     qids = list(range(10))
     cents = ivf_train_kmeans(emb, k=8, iterations=2)
-    narrow = ivf_recall(emb, qids, 10, 8, nprobe=1, centroids=cents)
+    narrow = recall_at_k(
+        emb, qids, 10, ann_ivf_topk(emb, qids, 10, 8, nprobe=1, centroids=cents)
+    )
     graph = knn_graph(emb, g=16, centroids=cents, nprobe=2)
-    refined = _recall_vs_exact(
+    refined = recall_at_k(
         emb,
         qids,
         10,
@@ -3210,11 +3257,11 @@ def test_graph_refine_two_hop_walk(spark):
     nprobe=2's 0.81 and nprobe=4's 0.89), while candidates stay
     bounded by w*(1+g)^rounds — never corpus-shaped."""
     from hadoop_search_spark.operators.similarity import (
-        _recall_vs_exact,
+        ann_ivf_topk,
         graph_refine_topk,
-        ivf_recall,
         ivf_train_kmeans,
         knn_graph,
+        recall_at_k,
     )
 
     emb = spark.read.parquet(
@@ -3225,7 +3272,7 @@ def test_graph_refine_two_hop_walk(spark):
     graph = knn_graph(emb, g=8, centroids=cents, nprobe=2)
 
     def refine(rounds):
-        return _recall_vs_exact(
+        return recall_at_k(
             emb, qids, 10,
             graph_refine_topk(
                 emb, graph, qids, 10, nprobe=1, seed_w=10,
@@ -3234,7 +3281,9 @@ def test_graph_refine_two_hop_walk(spark):
         )
 
     one, two = refine(1), refine(2)
-    wide = ivf_recall(emb, qids, 10, 8, nprobe=2, centroids=cents)
+    wide = recall_at_k(
+        emb, qids, 10, ann_ivf_topk(emb, qids, 10, 8, nprobe=2, centroids=cents)
+    )
     assert two >= one + 0.08, (one, two)
     assert two >= wide + 0.05, (two, wide)  # beats the wider probe
     assert two >= 0.88
@@ -3283,7 +3332,7 @@ def test_ivfpq_index_refine_topk_published_lifecycle(spark, tmp_path):
     import re
 
     from hadoop_search_spark.operators.similarity import (
-        _recall_vs_exact,
+        recall_at_k,
         _topk_per_query,
         ivfpq_index_refine_topk,
         ivfpq_index_topk,
@@ -3339,8 +3388,8 @@ def test_ivfpq_index_refine_topk_published_lifecycle(spark, tmp_path):
                                                     "query_id"),
         10,
     )
-    r_ref = _recall_vs_exact(emb, qids, 10, out)
-    r_base = _recall_vs_exact(emb, qids, 10, base)
+    r_ref = recall_at_k(emb, qids, 10, out)
+    r_base = recall_at_k(emb, qids, 10, base)
     assert r_ref >= r_base, (r_base, r_ref)
     with pytest.raises(ValueError, match="raw-vector"):
         ivfpq_index_refine_topk(spark, path, queries, k=10)

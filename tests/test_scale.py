@@ -230,16 +230,22 @@ def test_ivf_trained_recall_sf01(spark):
     give — the floor asserts the trained quantizer still beats the
     probed-mass baseline (~nprobe/C = 0.25), measured 0.46 here."""
     from hadoop_search_spark.operators.similarity import (
-        ivf_recall,
+        ann_ivf_topk,
         ivf_train_kmeans,
+        recall_at_k,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     cents = ivf_train_kmeans(emb, k=8, iterations=3, sample_fraction=0.25)
     qids = [3, 17, 42, 99, 123]
-    r2 = ivf_recall(emb, qids, k=10, num_centroids=8, nprobe=2, centroids=cents)
-    r4 = ivf_recall(emb, qids, k=10, num_centroids=8, nprobe=4, centroids=cents)
-    r8 = ivf_recall(emb, qids, k=10, num_centroids=8, nprobe=8, centroids=cents)
+
+    def ivf_recall(nprobe):
+        approx = ann_ivf_topk(
+            emb, qids, k=10, num_centroids=8, nprobe=nprobe, centroids=cents
+        )
+        return recall_at_k(emb, qids, 10, approx)
+
+    r2, r4, r8 = ivf_recall(2), ivf_recall(4), ivf_recall(8)
     assert r2 >= 0.35
     assert r2 <= r4 <= r8
     assert r8 == 1.0  # probing every cell covers the whole corpus

@@ -248,6 +248,14 @@ def test_streaming_int8_indexer_layout(spark, tmp_path):
         StreamingIvfIndexer(
             spark, str(tmp_path / "bad"), index_path, layout="pq"
         )
+    # the published layout is read from the index itself
+    with pytest.raises(ValueError, match="has layout 'int8', not 'ivf'"):
+        StreamingIvfIndexer(spark, str(tmp_path / "bad"), index_path)
+    with pytest.raises(ValueError, match="no published index"):
+        StreamingIvfIndexer(
+            spark, str(tmp_path / "bad"), str(tmp_path / "none"),
+            layout="int8",
+        )
 
     ix = StreamingIvfIndexer(
         spark, str(tmp_path / "online8"), index_path,
