@@ -34,6 +34,8 @@ import pandas as pd  # noqa: F401 — pandas_udf resolves 'pd.Series' hints
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hadoop_search_spark.session import TempDir, memo
+
 # Golden parquets live in the repo checkout next to this package —
 # derive the path from the module location so the oracles survive a
 # repo relocation (a hardcoded /root/repo broke at any other root).
@@ -436,46 +438,44 @@ postings AS (
 """
 
 
-# Built indexes are memoized per (session, sf_dir): the reference's own
-# architecture separates the offline index build from query evaluation
-# (SURVEY.md §3.2), so consecutive search queries share one persisted
-# index instead of re-running tokenize/stem per query.
-_ENGINE_CACHE: dict = {}
-
-import threading as _threading
-
-_CACHE_LOCK = _threading.Lock()
-
-
-def _session_key(spark: SparkSession) -> str:
-    # applicationId is unique per SparkContext lifetime; id(spark) can
-    # be recycled by the allocator after a session is stopped, which
-    # would serve DataFrames bound to a dead context
-    return spark.sparkContext.applicationId
+# Built indexes are memoized per (session, sf_dir) in the session memo
+# (kind "engine"): the reference's own architecture separates the
+# offline index build from query evaluation (SURVEY.md §3.2), so
+# consecutive search queries share one persisted index instead of
+# re-running tokenize/stem per query. The memo builds each key once,
+# so concurrent cold calls never double-persist; an engine entry is
+# (engine, its persisted postings), which the memo unpersists on
+# release, and a published-index build returns a ``TempDir``, which
+# the memo removes on release.
 
 
-def _plain_engine(spark: SparkSession, sf_dir: str):
-    """Un-stemmed, no-stop-word engine over the documents fixture."""
-    from hadoop_search_spark.operators.index import build_postings
-    from hadoop_search_spark.plans.planner import SearchEngine
-
+def _engine(spark: SparkSession, sf_dir: str, stemmed: bool = False):
+    """The engine over the documents fixture: un-stemmed with no stop
+    words, or (``stemmed``) Porter-stemmed with 2 computed stop words."""
     from pyspark import StorageLevel
 
-    key = (_session_key(spark), sf_dir, "plain")
-    with _CACHE_LOCK:  # concurrent cold calls must not double-persist
-        if key not in _ENGINE_CACHE:
-            docs = _t(spark, sf_dir, "documents")
-            # DISK_ONLY: the columnar in-memory cache is pathologically
-            # slow building batches for the positions ARRAY column (~7x
-            # the cost of computing the pipeline); row-serialized disk
-            # cache is not.
-            postings = build_postings(docs, num_docs=None, stem=False).persist(
-                StorageLevel.DISK_ONLY
-            )
-            _ENGINE_CACHE[key] = SearchEngine(
-                spark, postings, documents=docs, stem=None
-            )
-        return _ENGINE_CACHE[key]
+    from hadoop_search_spark.operators.index import build_postings, stop_words
+    from hadoop_search_spark.plans import parser as P
+    from hadoop_search_spark.plans.planner import SearchEngine
+
+    def build():
+        docs = _t(spark, sf_dir, "documents")
+        words, sw = [], None
+        if stemmed:
+            words = [r.word for r in stop_words(docs, k=2).collect()]
+            sw = spark.createDataFrame([(w,) for w in words], "word STRING")
+        # DISK_ONLY: the columnar in-memory cache is pathologically
+        # slow building batches for the positions ARRAY column (~7x
+        # the cost of computing the pipeline); row-serialized disk
+        # cache is not.
+        postings = build_postings(
+            docs, stopwords=sw, num_docs=None, stem=stemmed
+        ).persist(StorageLevel.DISK_ONLY)
+        stem = P.porter_stem if stemmed else None
+        return SearchEngine(spark, postings, docs, words, stem), postings
+
+    key = (sf_dir, "stemmed" if stemmed else "plain")
+    return memo(spark, "engine", key, build)[0]
 
 
 @register(
@@ -1853,7 +1853,7 @@ bm25 AS (
 def postings_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_search_spark.operators.index import bm25_idf_lookup, bm25_scores
 
-    eng = _plain_engine(spark, sf_dir)
+    eng = _engine(spark, sf_dir)
     n = _t(spark, sf_dir, "documents").count()
     return bm25_scores(eng.postings, n, idf_lookup=bm25_idf_lookup(spark, n)).select(
         "term",
@@ -1880,7 +1880,7 @@ GROUP BY doc_id
 def search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_search_spark.operators.index import bm25_idf_lookup, bm25_scores
 
-    eng = _plain_engine(spark, sf_dir)
+    eng = _engine(spark, sf_dir)
     n = _t(spark, sf_dir, "documents").count()
     scored = bm25_scores(eng.postings, n, idf_lookup=bm25_idf_lookup(spark, n))
     return (
@@ -1947,7 +1947,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_search_spark.operators.similarity import cosine_topk
     from hadoop_search_spark.operators.vocab import rrf_fuse
 
-    eng = _plain_engine(spark, sf_dir)
+    eng = _engine(spark, sf_dir)
     n = _t(spark, sf_dir, "documents").count()
     scored = bm25_scores(eng.postings, n, idf_lookup=bm25_idf_lookup(spark, n))
     wb = Window.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -1975,7 +1975,7 @@ JOIN (SELECT doc_id, score FROM postings WHERE term = 'scan') b USING (doc_id)
     note="J1 via engine: '(table) and (scan)' — clause AND, score product",
 )
 def search_and(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _plain_engine(spark, sf_dir).plan("(table) and (scan)").select(
+    return _engine(spark, sf_dir).plan("(table) and (scan)").select(
         "doc_id", F.round("score", 9).alias("score")
     )
 
@@ -1993,7 +1993,7 @@ FULL OUTER JOIN (SELECT doc_id, score FROM postings WHERE term = 'scan') b
     note="J2 via engine: 'table or scan' — union-merge, scores add",
 )
 def search_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _plain_engine(spark, sf_dir).plan("table or scan").select(
+    return _engine(spark, sf_dir).plan("table or scan").select(
         "doc_id", F.round("score", 9).alias("score")
     )
 
@@ -2010,7 +2010,7 @@ WHERE NOT EXISTS (SELECT 1 FROM postings b
     note="J3/J4 via engine: 'table and not scan' — difference",
 )
 def search_and_not(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _plain_engine(spark, sf_dir).plan("table and not scan").select(
+    return _engine(spark, sf_dir).plan("table and not scan").select(
         "doc_id", F.round("score", 9).alias("score")
     )
 
@@ -2041,7 +2041,7 @@ LEFT JOIN mind ON mind.doc_id = a.doc_id
     note="J1 phrase: 'table scan' — proximity boost (sA*sB)^(1+1/minDist)",
 )
 def search_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _plain_engine(spark, sf_dir).plan("table scan").select(
+    return _engine(spark, sf_dir).plan("table scan").select(
         "doc_id", F.round("score", 9).alias("score")
     )
 
@@ -2066,7 +2066,7 @@ WHERE len(list_filter(pa.positions,
 def search_exact_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_search_spark.plans.planner import exact_phrase_docs
 
-    eng = _plain_engine(spark, sf_dir)
+    eng = _engine(spark, sf_dir)
     return exact_phrase_docs(eng.postings, ["table", "scan"])
 
 
@@ -2088,7 +2088,7 @@ ORDER BY dist, df DESC, term LIMIT 5
 def search_suggest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_search_spark.operators.vocab import suggest_terms
 
-    eng = _plain_engine(spark, sf_dir)
+    eng = _engine(spark, sf_dir)
     return suggest_terms(eng.postings, "tabel", max_dist=2, k=5)
 
 
@@ -2116,7 +2116,7 @@ ORDER BY n_docs DESC, t1, t2 LIMIT 20
 def terms_related(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_search_spark.operators.vocab import related_terms
 
-    eng = _plain_engine(spark, sf_dir)
+    eng = _engine(spark, sf_dir)
     n = _t(spark, sf_dir, "documents").count()
     out = related_terms(eng.postings, n, max_df=390, min_pair_count=2, k=20)
     return out.withColumn("lift", F.round("lift", 9))
@@ -2157,7 +2157,7 @@ def search_render_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
 
     query = "(table) and (scan)"
-    eng = _plain_engine(spark, sf_dir)
+    eng = _engine(spark, sf_dir)
     page = page_slice(rank(eng.plan(query)), 1)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     words = highlight_words(query)
@@ -2191,7 +2191,7 @@ WHERE NOT EXISTS (
     note="J5 + root negation: 'not (table or scan)' — complement vs universe",
 )
 def search_not_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _plain_engine(spark, sf_dir).plan("not (table or scan)").select(
+    return _engine(spark, sf_dir).plan("not (table or scan)").select(
         "doc_id", F.round("score", 9).alias("score")
     )
 
@@ -2215,7 +2215,7 @@ WHERE NOT EXISTS (SELECT 1 FROM postings s
     note="J4+J5 composition: '(table or part) and (not stream)'",
 )
 def search_cnf_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _plain_engine(spark, sf_dir).plan("(table or part) and (not stream)").select(
+    return _engine(spark, sf_dir).plan("(table or part) and (not stream)").select(
         "doc_id", F.round("score", 9).alias("score")
     )
 
@@ -2239,25 +2239,7 @@ FROM fp WHERE NOT EXISTS (SELECT 1 FROM g WHERE g.corpus_bytes = fp.cb)
     "algebra), valid at sf0.001/sf0.01/sf0.1",
 )
 def search_stemmed_cnf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_search_spark.operators.index import build_postings, stop_words
-    from hadoop_search_spark.plans.planner import SearchEngine
-
-    from pyspark import StorageLevel
-
-    key = (_session_key(spark), sf_dir, "stemmed")
-    with _CACHE_LOCK:
-        if key not in _ENGINE_CACHE:
-            docs = _t(spark, sf_dir, "documents")
-            stopword_list = [r.word for r in stop_words(docs, k=2).collect()]
-            sw = spark.createDataFrame([(w,) for w in stopword_list], "word STRING")
-            # DISK_ONLY — see _plain_engine (array-column cache cost)
-            postings = build_postings(
-                docs, stopwords=sw, num_docs=None, stem=True
-            ).persist(StorageLevel.DISK_ONLY)
-            _ENGINE_CACHE[key] = SearchEngine(
-                spark, postings, documents=docs, stopwords=stopword_list
-            )
-        engine = _ENGINE_CACHE[key]
+    engine = _engine(spark, sf_dir, stemmed=True)
     return engine.search("(sparks or streaming) and not tables").select(
         "doc_id", F.round("score", 9).alias("score")
     )
@@ -2855,13 +2837,14 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hadoop_search_spark.operators.dedup import word_shingles
 
-    key = (_session_key(spark), sf_dir, "shingles")
-    with _CACHE_LOCK:
-        if key not in _ENGINE_CACHE:
-            _ENGINE_CACHE[key] = word_shingles(
-                _t(spark, sf_dir, "documents")
-            ).persist(StorageLevel.DISK_ONLY)
-        return _ENGINE_CACHE[key]
+    return memo(
+        spark,
+        "engine",
+        (sf_dir, "shingles"),
+        lambda: word_shingles(_t(spark, sf_dir, "documents")).persist(
+            StorageLevel.DISK_ONLY
+        ),
+    )
 
 
 @register(
@@ -7717,21 +7700,18 @@ def _ropq_published_index(spark: SparkSession) -> str:
         write_ivfpq_index,
     )
 
-    key = (_session_key(spark), "ropq_index")
-    with _CACHE_LOCK:
-        if key not in _ENGINE_CACHE:
-            emb = _t(spark, _ANISO_DIR, "embeddings").select(
-                "vec_id", "embedding"
-            )
-            cents = ivf_train_kmeans(emb, k=8, iterations=2)
-            books, rot = pq_residual_opq_model(emb, cents, iterations=2)
-            path = tempfile.mkdtemp(prefix="ropq_index_")
-            write_ivfpq_index(
-                emb, path, centroids=cents, books=books,
-                encoding="residual_opq", rotation=rot,
-            )
-            _ENGINE_CACHE[key] = path
-        return _ENGINE_CACHE[key]
+    def build():
+        emb = _t(spark, _ANISO_DIR, "embeddings").select("vec_id", "embedding")
+        cents = ivf_train_kmeans(emb, k=8, iterations=2)
+        books, rot = pq_residual_opq_model(emb, cents, iterations=2)
+        path = TempDir(tempfile.mkdtemp(prefix="ropq_index_"))
+        write_ivfpq_index(
+            emb, path, centroids=cents, books=books,
+            encoding="residual_opq", rotation=rot,
+        )
+        return path
+
+    return memo(spark, "engine", "ropq_index", build)
 
 
 @register(
@@ -7966,15 +7946,14 @@ def _graph_published_index(spark: SparkSession, sf_dir: str) -> str:
         write_ivfpq_index,
     )
 
-    key = (_session_key(spark), "graph_index", sf_dir)
-    with _CACHE_LOCK:
-        if key not in _ENGINE_CACHE:
-            emb = _t(spark, sf_dir, "embeddings")
-            path = tempfile.mkdtemp(prefix="refine_idx_")
-            write_ivfpq_index(emb, path, num_centroids=8)
-            publish_knn_graph(spark, path, emb, g=8, build_nprobe=2)
-            _ENGINE_CACHE[key] = path
-        return _ENGINE_CACHE[key]
+    def build():
+        emb = _t(spark, sf_dir, "embeddings")
+        path = TempDir(tempfile.mkdtemp(prefix="refine_idx_"))
+        write_ivfpq_index(emb, path, num_centroids=8)
+        publish_knn_graph(spark, path, emb, g=8, build_nprobe=2)
+        return path
+
+    return memo(spark, "engine", ("graph_index", sf_dir), build)
 
 
 @register(

@@ -94,7 +94,7 @@ def curate(
     # ONE projection over one scan of the survivor set — the feature
     # families are pure expressions (quality_exprs / lang_exprs), so
     # composing them costs no extra scans and no joins
-    qe = quality_exprs(text_col)  # str -> per-process memoized tree
+    qe = quality_exprs(text_col)  # str -> session-memoized tree
     le = lang_exprs(text_col)
     feats = after_near.select(
         "doc_id",
@@ -206,7 +206,7 @@ def corpus_datacard(
     from hadoop_search_spark.partitioning import spread
 
     t = F.col(text_col)
-    qe = quality_exprs(text_col)  # str -> per-process memoized tree
+    qe = quality_exprs(text_col)  # str -> session-memoized tree
     le = lang_exprs(text_col)
     feats = spread(docs, "doc_id").select(
         source_col,

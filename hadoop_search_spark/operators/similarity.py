@@ -32,6 +32,8 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hadoop_search_spark.session import forget, memo
+
 NUM_HYPERPLANES = 8
 _HP_HEX = 10  # 40-bit hyperplane component hashes
 
@@ -3185,15 +3187,6 @@ def _write_rows(rows: DataFrame, path: str, table: str, mode: str) -> None:
     )
 
 
-_MODEL_CACHE: dict = {}
-
-# Bounded: a long-lived serving session pins at most this many
-# (session, path) model sets; beyond it the oldest entry is evicted
-# (per-mkdtemp test indexes would otherwise accumulate forever — each
-# entry is only KBs, but unbounded is unbounded).
-_MODEL_CACHE_MAX = 32
-
-
 def _model_fingerprint(spark: SparkSession, path: str, table: str = "centroids"):
     """Cross-process staleness signal for a published model table:
     the sorted (file name, length, mtime) tuple of ``{path}/{table}``
@@ -3221,22 +3214,6 @@ def _model_fingerprint(spark: SparkSession, path: str, table: str = "centroids")
     )
 
 
-def _model_cache_get(key, fingerprint, loader):
-    """Fingerprint-validated read of :data:`_MODEL_CACHE`: hit only
-    when the stored fingerprint still matches; otherwise (re)load and
-    evict oldest entries beyond :data:`_MODEL_CACHE_MAX` (dict
-    preserves insertion order)."""
-    hit = _MODEL_CACHE.get(key)
-    if hit is not None and hit[0] == fingerprint:
-        return hit[1]
-    value = loader()
-    _MODEL_CACHE.pop(key, None)
-    _MODEL_CACHE[key] = (fingerprint, value)
-    while len(_MODEL_CACHE) > _MODEL_CACHE_MAX:
-        _MODEL_CACHE.pop(next(iter(_MODEL_CACHE)))
-    return value
-
-
 def _models(spark: SparkSession, path: str, layout: IndexLayout) -> _Models:
     """The frozen models of the index at ``path``, loaded at most once
     per (session, path) — CORRECT by the frozen-models contract:
@@ -3252,11 +3229,8 @@ def _models(spark: SparkSession, path: str, layout: IndexLayout) -> _Models:
     model-load jobs from every cold serve/append/drift (measured r11:
     1.4 s → ~0.4 s fresh-plan IVF-PQ serve at nprobe=2; the
     fingerprint is one driver-side listStatus, not a job)."""
-    return _model_cache_get(
-        (spark.sparkContext.applicationId, path),
-        (layout.name, _model_fingerprint(spark, path)),
-        lambda: layout.load(spark, path),
-    )
+    fp = (layout.name, _model_fingerprint(spark, path))
+    return memo(spark, "model", path, lambda: layout.load(spark, path), fp)
 
 
 def _publish(
@@ -3291,7 +3265,7 @@ def _publish(
         _model_frame(spark, model_rows, schema).write.mode("overwrite").parquet(
             f"{path}/{table}"
         )
-    _MODEL_CACHE.pop((spark.sparkContext.applicationId, path), None)
+    forget("model", lambda k: k == path)
 
 
 def _serve(

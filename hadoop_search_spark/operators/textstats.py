@@ -8,11 +8,11 @@ wraps silently, DuckDB promotes — overflow would diverge)."""
 
 from __future__ import annotations
 
-from functools import lru_cache as _lru_cache
-
 import pandas as pd  # noqa: F401 — pandas_udf resolves 'pd.Series' hints
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from hadoop_search_spark.session import memo
 
 # tiny embedded stopword list for ratio features (order irrelevant)
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
@@ -70,22 +70,22 @@ def lang_exprs(t: "F.Column | str") -> dict[str, F.Column]:
     composable into a wider single-scan projection (see
     ``operators/curation.py``).
 
-    r13: pass the column NAME (a str) to get the per-process memoized
-    expression tree — building this family costs ~300 py4j round
-    trips (~0.2-0.3 s of every fresh curation/text plan), and Column
-    objects are immutable unresolved expression descriptors that are
-    safe to reuse across DataFrames and sessions within one process
-    (the analyzer resolves per plan). Values are identical by
-    construction: the memo returns the same expression tree the
-    Column path builds."""
+    r13: pass the column NAME (a str) to get the session-memoized
+    expression tree (``session.memo``, kind ``"exprs"``) — building
+    this family costs ~300 py4j round trips (~0.2-0.3 s of every fresh
+    curation/text plan), and Column objects are immutable unresolved
+    expression descriptors that are safe to reuse across DataFrames
+    within one session (the analyzer resolves per plan). Values are
+    identical by construction: the memo holds the same expression
+    tree the Column path builds; each call gets its own shallow copy
+    of the dict, so a caller's edit cannot leak into the next call."""
     if isinstance(t, str):
-        return _lang_exprs_cached(t)
+        return _exprs("lang", t, lambda: _lang_exprs_build(F.col(t)))
     return _lang_exprs_build(t)
 
 
-@_lru_cache(maxsize=64)
-def _lang_exprs_cached(col_name: str) -> dict[str, F.Column]:
-    return _lang_exprs_build(F.col(col_name))
+def _exprs(family: str, col_name: str, build) -> dict[str, F.Column]:
+    return dict(memo(None, "exprs", (family, col_name), build))
 
 
 def _lang_exprs_build(t: F.Column) -> dict[str, F.Column]:
@@ -132,16 +132,11 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def quality_exprs(t: "F.Column | str") -> dict[str, F.Column]:
     """Quality features as pure expressions over a text column.
-    Pass the column NAME for the per-process memoized tree (see
+    Pass the column NAME for the session-memoized tree (see
     :func:`lang_exprs` — same rationale and safety argument)."""
     if isinstance(t, str):
-        return _quality_exprs_cached(t)
+        return _exprs("quality", t, lambda: _quality_exprs_build(F.col(t)))
     return _quality_exprs_build(t)
-
-
-@_lru_cache(maxsize=64)
-def _quality_exprs_cached(col_name: str) -> dict[str, F.Column]:
-    return _quality_exprs_build(F.col(col_name))
 
 
 def _quality_exprs_build(t: F.Column) -> dict[str, F.Column]:
@@ -319,12 +314,11 @@ def gopher_exprs(text_col: str = "text") -> dict[str, F.Column]:
     """The rule expressions behind :func:`gopher_rules`, exposed so a
     pipeline (curation v2) can inline the ``pass`` predicate as a
     map-only filter instead of joining the rules frame back.
-    Per-process memoized by column name (see :func:`lang_exprs`)."""
-    return _gopher_exprs_cached(text_col)
+    Session-memoized by column name (see :func:`lang_exprs`)."""
+    return _exprs("gopher", text_col, lambda: _gopher_exprs_build(text_col))
 
 
-@_lru_cache(maxsize=64)
-def _gopher_exprs_cached(text_col: str) -> dict[str, F.Column]:
+def _gopher_exprs_build(text_col: str) -> dict[str, F.Column]:
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), " "), lambda x: x != ""
     )

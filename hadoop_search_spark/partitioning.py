@@ -18,13 +18,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-# memo: (file set, maxPartitionBytes) -> estimated scan partitions.
-# The same fixture tables are scanned by many operators per session;
-# the estimate is a pure function of the file set and the split conf.
-# (A file overwritten in place with a different size would go stale —
-# fixture files are immutable within a session, and a wrong estimate
-# only mis-sizes one repartition decision.)
-_SPLIT_EST_CACHE: dict[tuple[frozenset[str], int], int] = {}
+from hadoop_search_spark.session import memo
 
 _SIZE_SUFFIXES = {
     "k": 10, "kb": 10,
@@ -70,22 +64,27 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
     max_bytes = _parse_bytes(
         df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    key = (frozenset(files), max_bytes)
-    est = _SPLIT_EST_CACHE.get(key)
-    if est is None:
-        est = 0
-        for f in files:
-            splits = 1
-            if f.startswith("file:"):
-                try:
-                    splits = max(
-                        1, -(-os.path.getsize(f.removeprefix("file:")) // max_bytes)
-                    )
-                except OSError:
-                    pass
-            est += splits
-        _SPLIT_EST_CACHE[key] = est
-    return est
+    # memoized per session (kind "split"): the same fixture tables are
+    # scanned by many operators, and the estimate is a pure function of
+    # the file set and the split conf. (A file overwritten in place with
+    # a different size would go stale — fixture files are immutable
+    # within a session, and a wrong estimate only mis-sizes one
+    # repartition decision.)
+    return memo(
+        df.sparkSession,
+        "split",
+        (frozenset(files), max_bytes),
+        lambda: sum(_file_splits(f, max_bytes) for f in files),
+    )
+
+
+def _file_splits(f: str, max_bytes: int) -> int:
+    if f.startswith("file:"):
+        try:
+            return max(1, -(-os.path.getsize(f.removeprefix("file:")) // max_bytes))
+        except OSError:
+            pass
+    return 1
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

@@ -276,20 +276,7 @@ class SearchEngine:
         elif isinstance(vocab, dict):
             self._vocab = {str(t): int(d) for t, d in vocab.items()}
         else:
-            # same cap policy AND tie-break as the lazy path: keep the
-            # HIGHEST-df terms (they're the ones whose ordering matters
-            # for J6), term-ascending within equal df — without the
-            # tie-break, the subset kept at the cap boundary would be
-            # nondeterministic and could differ between a seeded and a
-            # lazily-seeded engine
-            self._vocab = {
-                r[0]: int(r[1])
-                for r in vocab.orderBy(
-                    F.desc(vocab.columns[1]), F.asc(vocab.columns[0])
-                )
-                .limit(self._VOCAB_CACHE_MAX)
-                .collect()
-            }
+            self._vocab = self._collect_vocab(vocab, *vocab.columns[:2])
         self._vocab_lock = threading.Lock()
 
     # ---- statistics (J6 ordering) ------------------------------------
@@ -311,15 +298,25 @@ class SearchEngine:
                 if self._vocab is None:
                     from hadoop_search_spark.operators.index import vocab_stats
 
-                    vocab = vocab_stats(self.postings)
-                    rows = (
-                        vocab.orderBy(F.desc("df"), F.asc("term"))
-                        .limit(self._VOCAB_CACHE_MAX)
-                        .collect()
+                    self._vocab = self._collect_vocab(
+                        vocab_stats(self.postings), "term", "df"
                     )
-                    self._vocab = {r.term: r.df for r in rows}
         v = self._vocab
         return {t: v.get(t, 0) for t in terms}
+
+    def _collect_vocab(self, vocab: DataFrame, term: str, df: str) -> dict[str, int]:
+        """The one (term → df) collect behind both vocab paths: a
+        published stats table (eager, in ``__init__``) and
+        ``vocab_stats(postings)`` (lazy, on first use). At the cap it
+        keeps the HIGHEST-df terms (they're the ones whose ordering
+        matters for J6), term-ascending within equal df — without the
+        tie-break, the subset kept at the cap boundary would be
+        nondeterministic and could differ between a seeded and a
+        lazily-seeded engine."""
+        rows = (
+            vocab.orderBy(F.desc(df), F.asc(term)).limit(self._VOCAB_CACHE_MAX).collect()
+        )
+        return {r[0]: int(r[1]) for r in rows}
 
     # ---- leaves ------------------------------------------------------
 

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_search_spark.session import forget, memo
+
 TABLES = (
     "region",
     "nation",
@@ -29,17 +31,16 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-_HANDLES: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """Session-memoized table handle. ``spark.read.parquet`` costs
     ~0.1 s per call even warm (JVM file listing + footer schema read),
     so a 6-table join paid ~0.6 s of plan-BUILD latency per cold
     query — measured as the dominant slice of the r3 cold-sequential
-    drift. Handles of stopped sessions are evicted by applicationId on
-    every call (hit or miss — the scan is one dict pass, negligible
-    next to the ~0.1 s read it replaces).
+    drift. Handles live in the session memo (``session.memo``, kind
+    ``"table"``): least recently used evicted beyond the memo's bound,
+    and dropped with every other entry once their session stops. A
+    handle is shared: if a caller ``.cache()``s it, the eviction or
+    :func:`invalidate` that drops the handle also unpersists it.
 
     PRECONDITION: the table path must be immutable for the life of the
     session. The memoized handle pins the parquet file listing taken
@@ -48,29 +49,17 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     later reads serve stale data / fail on deleted files. The fixture
     dirs under /root/testdata are immutable, so catalog queries are
     always safe."""
-    app = spark.sparkContext.applicationId
-    # list() snapshots: concurrent queries (the serving bench runs
-    # 8 threads) may insert while we evict, and iterating the live
-    # dict would raise; a lost race only costs a duplicate read
-    for k in list(_HANDLES):
-        if k[0] != app:
-            _HANDLES.pop(k, None)
-    key = (app, sf_dir, name)
-    df = _HANDLES.get(key)
-    if df is None:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        _HANDLES[key] = df
-    return df
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return memo(spark, "table", (sf_dir, name), lambda: spark.read.parquet(path))
 
 
 def invalidate(sf_dir: str, name: str | None = None) -> None:
     """Drop memoized handles for ``sf_dir`` (all tables, or just
     ``name``) so the next load_table re-reads the directory. Required
     before re-reading any table whose path was overwritten within the
-    current session (see load_table's precondition)."""
-    for k in list(_HANDLES):
-        if k[1] == sf_dir and (name is None or k[2] == name):
-            _HANDLES.pop(k, None)
+    current session (see load_table's precondition). A dropped handle
+    that a caller cached is unpersisted."""
+    forget("table", lambda k: k[0] == sf_dir and (name is None or k[1] == name))
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:

@@ -46,7 +46,7 @@ def main() -> int:
         spark.read.parquet(f"{SF_DIR}/{tbl}.parquet").cache().count()
     _cat._events(spark, SF_DIR).cache().count()
     _cat._t(spark, _cat._ANISO_DIR, "embeddings").cache().count()
-    _cat._plain_engine(spark, SF_DIR).plan("table").collect()
+    _cat._engine(spark, SF_DIR).plan("table").collect()
     _cat.search_stemmed_cnf(spark, SF_DIR).limit(1).collect()
     _cat._ropq_published_index(spark)
     for name in names:  # warm-up (JIT, codegen cache, shuffle services)

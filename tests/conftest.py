@@ -9,7 +9,10 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="hadoop_search_spark_tests", cpus=8, shuffle_partitions=8)
+    # cores and shuffle partitions follow SPARK_GRAFT_CPUS (the box's own
+    # core count in the Tier-1 command); a test that needs a fixed width
+    # pins it itself
+    spark = get_spark(app_name="hadoop_search_spark_tests")
     yield spark
 
 

@@ -269,9 +269,9 @@ def test_no_scale_killers_in_any_catalog_plan(spark):
     # 4 worker threads (r13): the audit's 175 plan constructions are
     # py4j/JVM-planning-bound and serialize on round-trip latency;
     # overlapping them cut the suite's single biggest test ~3x.
-    # Construction is read-only per entry (memoized engines guard
-    # their build with _CACHE_LOCK), so concurrency cannot change
-    # what any plan contains.
+    # Construction is read-only per entry (the session memo builds
+    # each engine once), so concurrency cannot change what any plan
+    # contains.
     with ThreadPoolExecutor(4) as pool:
         for name, hits in pool.map(audit, list(catalog.queries().items())):
             if hits:

@@ -196,14 +196,14 @@ def test_cell_ranking_zero_norm_centroid_raises():
 
 def test_model_cache_cross_process_rebuild(spark, tmp_path):
     """The model cache detects an in-place rebuild performed by a
-    DIFFERENT process (r11 ADVICE): the in-process writer pop can't
+    DIFFERENT process (r11 ADVICE): the in-process writer drop can't
     fire there, so the cache validates a persisted fingerprint
     (file listing of /centroids) on every read. Simulated by
-    re-inserting the stale pre-rebuild entry under the OLD
+    re-entering the stale pre-rebuild model under the OLD
     fingerprint after the rebuild — exactly the state a long-lived
     serving session is in after a CLI rebuild."""
+    from hadoop_search_spark import session as S
     from hadoop_search_spark.operators.similarity import (
-        _MODEL_CACHE,
         LAYOUTS,
         _model_fingerprint,
         _models,
@@ -214,17 +214,17 @@ def test_model_cache_cross_process_rebuild(spark, tmp_path):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     path = str(tmp_path / "ivf")
     write_ivf_index(emb, path, num_centroids=4)
-    key = (spark.sparkContext.applicationId, path)
     old_model = _models(spark, path, ivf)
-    old_fp = _MODEL_CACHE[key][0]
+    models = S._MEMO[(spark.sparkContext.applicationId, "model")]
+    old_fp = models[path][0]
     assert old_fp == ("ivf", _model_fingerprint(spark, path))
 
     # in-place rebuild with a different quantizer (8 cells)
     new_cents = write_ivf_index(emb, path, num_centroids=8)
-    assert key not in _MODEL_CACHE  # the publish dropped its key
-    # simulate "other process rebuilt": restore the stale entry the
-    # writer pop just removed, under the old fingerprint
-    _MODEL_CACHE[key] = (old_fp, old_model)
+    assert path not in models  # the publish dropped its key
+    # simulate "other process rebuilt": re-enter the stale model the
+    # publish just dropped, under the old fingerprint
+    assert S.memo(spark, "model", path, lambda: old_model, old_fp) is old_model
 
     served = _models(spark, path, ivf)
     assert served.cents == new_cents and len(served.cents) == 8
@@ -235,21 +235,39 @@ def test_model_cache_cross_process_rebuild(spark, tmp_path):
     assert _models(spark, path, ivf) is served
 
 
-def test_model_cache_bounded():
-    """Eviction keeps the cache at _MODEL_CACHE_MAX entries (oldest
-    first) — per-mkdtemp test indexes must not accumulate forever."""
-    from hadoop_search_spark.operators import similarity as sim
+def test_model_cache_bounded(spark):
+    """Eviction keeps each memo kind at _MEMO_BOUND entries, least
+    recently used first, and releases what an evicted entry holds: a
+    persisted frame is unpersisted and a memo-owned ``TempDir`` removed
+    (a plain path string is left alone) — per-mkdtemp test indexes
+    must not accumulate forever."""
+    import os
+    import tempfile
 
-    saved = dict(sim._MODEL_CACHE)
-    sim._MODEL_CACHE.clear()
+    from hadoop_search_spark import session as S
+
+    kind = "bound-test"
+    df = spark.range(3).persist()
+    df.count()
+    tmp = S.TempDir(tempfile.mkdtemp(prefix="memo_bound_"))
+    kept = tempfile.mkdtemp(prefix="memo_bound_kept_")  # not memo-owned
     try:
-        for i in range(sim._MODEL_CACHE_MAX + 8):
-            sim._model_cache_get(f"k{i}", ("fp",), lambda i=i: i)
-        cache = sim._MODEL_CACHE
-        assert len(cache) == sim._MODEL_CACHE_MAX
-        assert "k0" not in cache and f"k{sim._MODEL_CACHE_MAX + 7}" in cache
-        assert sim._model_cache_get("k8", ("fp",), lambda: "reloaded") == 8
-        assert sim._model_cache_get("k8", ("fp2",), lambda: "new") == "new"
+        assert S.memo(spark, kind, "df", lambda: df) is df  # true hit
+        assert S.memo(spark, kind, "df", lambda: None) is df
+        S.memo(spark, kind, "dir", lambda: tmp)
+        S.memo(spark, kind, "kept", lambda: kept)
+        for i in range(S._MEMO_BOUND + 8):
+            S.memo(spark, kind, f"k{i}", lambda i=i: i, ("fp",))
+        shelf = S._MEMO[(spark.sparkContext.applicationId, kind)]
+        assert len(shelf) == S._MEMO_BOUND
+        assert not {"df", "dir", "kept"} & set(shelf)
+        assert "k7" not in shelf and f"k{S._MEMO_BOUND + 7}" in shelf
+        assert not df.is_cached and not df.storageLevel.useDisk
+        assert not df.storageLevel.useMemory
+        assert not os.path.exists(tmp) and os.path.isdir(kept)
+        assert S.memo(spark, kind, "k8", lambda: "reloaded", ("fp",)) == 8
+        assert S.memo(spark, kind, "k8", lambda: "new", ("fp2",)) == "new"
     finally:
-        sim._MODEL_CACHE.clear()
-        sim._MODEL_CACHE.update(saved)
+        S.forget(kind, lambda k: True)
+        df.unpersist()
+        os.rmdir(kept)

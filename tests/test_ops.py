@@ -652,6 +652,9 @@ def test_load_table_memoizes_per_session(spark):
     on every call — hit or miss — so the sweep can't be starved by a
     warm cache (the r4 version only swept on miss and was
     order-dependent under the shared-session suite)."""
+    from concurrent.futures import Future
+
+    from hadoop_search_spark import session as S
     from hadoop_search_spark.sources import tables as T
 
     a = T.load_table(spark, "region", "/root/testdata/sf0.001")
@@ -663,16 +666,19 @@ def test_load_table_memoizes_per_session(spark):
     # stale-session handles are dropped on ANY call, even a cache hit
     # (supplier may already be cached by earlier tests in the session)
     app = spark.sparkContext.applicationId
-    T._HANDLES[("dead-app", "/x", "region")] = a
+    dead = Future()
+    dead.set_result(a)
+    S._MEMO[("dead-app", "table")] = {("/x", "region"): (None, dead)}
     T.load_table(spark, "supplier", "/root/testdata/sf0.001")
-    assert ("dead-app", "/x", "region") not in T._HANDLES
-    assert all(k[0] == app for k in T._HANDLES)
+    assert ("dead-app", "table") not in S._MEMO
+    assert all(k[0] == app for k in S._MEMO)
     # invalidate() drops handles for a dir so a rewritten path re-reads
+    handles = S._MEMO[(app, "table")]
     T.invalidate("/root/testdata/sf0.001", "nation")
-    assert (app, "/root/testdata/sf0.001", "nation") not in T._HANDLES
-    assert (app, "/root/testdata/sf0.001", "region") in T._HANDLES
+    assert ("/root/testdata/sf0.001", "nation") not in handles
+    assert ("/root/testdata/sf0.001", "region") in handles
     T.invalidate("/root/testdata/sf0.001")
-    assert not any(k[1] == "/root/testdata/sf0.001" for k in T._HANDLES)
+    assert not any(k[0] == "/root/testdata/sf0.001" for k in handles)
 
 
 def test_semantic_dedup_keeps_one_per_cluster(spark):
