@@ -1,29 +1,43 @@
-"""CNF query planner — lowers the parse tree to a DataFrame join DAG.
+"""CNF query planner — lowers the parse tree to ONE SQL statement.
 
 This is the Spark shape of the reference's posting-list algebra
-(`hadoop_wiki_search/util/QueryParser.java:96-325`, SURVEY.md §2.4):
-a sort-merge join engine over docId-sorted posting lists becomes a
-DAG of equi-joins on ``doc_id`` that Catalyst/AQE lowers to
-broadcast/sort-merge joins from runtime statistics.
+(`hadoop_wiki_search/util/QueryParser.java:96-325`, SURVEY.md §2.4).
+The reference evaluates a whole CNF query as one merge over
+docId-sorted posting lists; here a query is one
+``spark.sql(text, args=…)`` statement. The query terms are bound
+parameters (``:t0``, ``:t1``, …), never text spliced into the
+statement, so every CNF shape has one stable text. The statement:
 
-Algebra (wrapper types 0=normal, 1=negated, 2=ignored stop word):
+1. scans the postings once, ``WHERE term IN (:t0, :t1, …)`` pushed to
+   parquet — the map-side semi-join on the query terms (J8,
+   `code/query/QueryMapred.java:56-61`);
+2. runs one ``GROUP BY doc_id`` that pivots each term's score
+   (``_s{i}``), and the positions of phrase-boosted terms only
+   (``_p{i}``), with ``max(CASE WHEN term = :t{i} …)``. Exactly one row
+   per (term, doc) exists by index construction, so max IS the value.
+   A single-term query reads its rows directly, with no aggregate;
+3. evaluates the CNF algebra as per-document expressions over those
+   pivots: a membership predicate (the WHERE clause) and a score.
 
-* J1 intersect (AND)  → inner join; ``score = sA*sB``; when both
-  operands still carry positions (only phrase members do), the boost
-  ``score = (sA*sB)^(1 + 1/minDist)`` applies
-  (`QueryParser.java:250-253`, phraseFactor=1.0).
-* J2 merge (OR)       → full-outer join; ``score = coalesce(sA,0)+coalesce(sB,0)``.
-* J3 difference       → left-anti join.
-* J4/J5 negation algebra → case analysis in Python, lowering to the
-  three joins above (De Morgan rewrites, `QueryParser.java:122-139,281-298`).
-* J6 smallest-first AND → operands ordered by *estimated* cardinality
-  from the index's df statistics instead of the reference's
-  materialized ``list.size()`` (`QueryParser.java:159-164`) — the
-  plan stays lazy; no action per operand.
-* J7 n-ary OR → when every operand is positive, collapses to
-  ``unionByName + groupBy(doc_id).sum(score)`` — one shuffle instead
-  of a join per operand (strictly better than the reference's
-  divide-and-conquer merge); mixed signs fold pairwise.
+Algebra (wrapper types 0=normal, 1=negated, 2=ignored stop word;
+``m`` membership, ``s`` score):
+
+* J1 intersect (AND)  → ``mA AND mB``, ``score = sA*sB``; when both
+  operands are leaves still carrying positions (only phrase members
+  do), the boost ``score = (sA*sB)^(1 + 1/minDist)`` applies
+  (`QueryParser.java:250-253`, phraseFactor=1.0), computed in staged
+  projections (``_tg``, ``_md``; see :func:`_phrase_stages`).
+* J2 merge (OR)       → ``mA OR mB``,
+  ``score = CASE WHEN mA THEN sA ELSE 0 END + CASE WHEN mB THEN sB ELSE 0 END``.
+* J3 difference       → ``mA AND NOT mB``, score ``sA``.
+* J4/J5 negation algebra → case analysis in Python over J1-J3 (De
+  Morgan rewrites, `QueryParser.java:122-139,281-298`).
+* J6 smallest-first AND → operands ordered by df from the driver-side
+  vocabulary instead of the reference's materialized ``list.size()``
+  (`QueryParser.java:159-164`); the order also picks which pair of a
+  phrase gets the proximity boost, as in the reference.
+* J7 n-ary OR → when every operand is positive, one sum of guarded
+  scores; mixed signs fold pairwise.
 
 Deviations (SURVEY.md §2.4 "semantic caveats", risk register §7):
 
@@ -37,18 +51,19 @@ Deviations (SURVEY.md §2.4 "semantic caveats", risk register §7):
 * docIds compare as BIGINT, not string — membership identical, only
   internal merge order differs.
 
-Scale: every leaf is a parquet scan with ``term = 'w'`` pushed down;
-the index layout (range-partitioned + sorted by term) prunes to one
-partition per term — the distributed form of the reference's
-boundary-file pruning (`code/query/QueryMapred.java:126-162`). Joins
-key on ``doc_id``; posting lists for single terms are small relative
-to the cluster, so AQE broadcasts the small side. Nothing is
-collected on the driver.
+Scale: the index layout (range-partitioned + sorted by term) prunes
+the one scan to the query terms' partitions — the distributed form of
+the reference's boundary-file pruning
+(`code/query/QueryMapred.java:126-162`). The aggregate shuffles only
+those terms' postings, partially aggregated per doc_id on the map
+side. Nothing is collected on the driver.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+import uuid
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,15 +72,18 @@ from hadoop_search_spark.plans import parser as P
 
 PHRASE_FACTOR = 1.0  # QueryParser.java:45
 
-_RESULT_SCHEMA = "doc_id BIGINT, score DOUBLE, positions ARRAY<INT>"
+# every operand a stop word: an empty local relation, no scan
+_EMPTY_SQL = (
+    "SELECT CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS DOUBLE) AS score "
+    "WHERE false"
+)
 
 
 def _phrase_score_expr() -> F.Column:
-    """Phrase-proximity score over the four staged columns
-    ``_sa, _sb, _pa, _pb`` — shared verbatim by the pairwise join form
-    (:meth:`SearchEngine._intersect_lists`) and the fused single-scan
-    form (:meth:`SearchEngine._phrase_pair_fused`), so the two plans
-    cannot drift in arithmetic.
+    """Phrase-proximity score over the four columns
+    ``_sa, _sb, _pa, _pb`` as one expression — the semantic reference
+    the engine's staged form (:func:`_phrase_stages`) is value-pinned
+    against (``tests/test_expr_twins.py``).
 
     Exact min pairwise nonzero |pa - pb| in O((tf_a+tf_b)·log)
     instead of materializing the O(tf_a·tf_b) cross product
@@ -86,51 +104,14 @@ def _phrase_score_expr() -> F.Column:
     practice (measured 1-3s vs 40s struct-sort vs 104-117s
     cross-product on 2000 rows of tf=1500).
 
-    Built as ONE ``F.expr`` SQL string (r12 optimization): the
-    Column/lambda form issued ~60 py4j round trips (~0.13 s of
-    driver latency per fresh plan — the dominant construct cost of
-    every phrase query); the parsed string resolves to the SAME
-    optimized plan, pinned canonically-equal and value-equal to the
-    retained Column form by ``tests/test_expr_twins.py``.
-
-    NOTE: production paths apply the score through
-    :func:`_apply_phrase_score` (staged projections) — this single
-    expression inlines the merged-sort ``tagged`` array ~10× and the
-    engine re-SORTS it per reference per row (measured: 0.38 s/pass
-    over 3,159 docs at sf0.1, the whole prepared-serving cost of the
-    phrase headline; Catalyst does not CSE across the duplicates
-    here, and CollapseProject would re-inline a simple alias). This
-    form remains the semantic reference the staged pipeline is
-    value-pinned against."""
+    Built as ONE ``F.expr`` SQL string: the Column/lambda form
+    (:func:`_phrase_score_expr_column_form`) issued ~60 py4j round
+    trips per fresh plan; the parsed string resolves to the SAME
+    optimized plan, pinned canonically-equal by
+    ``tests/test_expr_twins.py``. This single expression inlines the
+    merged-sort ``tagged`` array ~10× and Catalyst does not CSE the
+    duplicates, so the engine evaluates it in stages instead."""
     return F.expr(_PHRASE_SCORE_SQL)
-
-
-def _apply_phrase_score(df: DataFrame) -> DataFrame:
-    """(doc_id, _sa, _sb, _pa, _pb) → (doc_id, score) with each
-    expensive intermediate evaluated ONCE per row via staged
-    projections: P1 materializes the merged-sorted side-tagged
-    position array (``_tg`` — the one array_sort), P2 the min
-    cross-side gap (``_md``), P3 the boosted score. CollapseProject
-    keeps the stages separate (the staged attributes are non-cheap
-    and multiply referenced), so the single-expression form's ~10
-    re-sorts of ``tagged`` per row collapse to one — measured
-    0.38 → ~0.05 s per prepared pass on the sf0.1 phrase headline.
-    Value-pinned equal to :func:`_phrase_score_expr` by
-    ``tests/test_expr_twins.py`` and the search oracle gates."""
-    staged = df.select(
-        "doc_id", "_sa", "_sb", F.expr(_PHRASE_TAGGED_SQL).alias("_tg")
-    )
-    gapped = staged.select(
-        "doc_id", "_sa", "_sb", F.expr(_PHRASE_MIN_DIST_SQL).alias("_md")
-    )
-    return gapped.select(
-        "doc_id",
-        F.expr(
-            "CASE WHEN _md IS NOT NULL "
-            f"THEN power(_sa * _sb, {PHRASE_FACTOR!r}D + 1.0D / _md) "
-            "ELSE _sa * _sb END"
-        ).alias("score"),
-    )
 
 
 # The merged side-tagged position array (one array_sort). Literal-
@@ -138,11 +119,12 @@ def _apply_phrase_score(df: DataFrame) -> DataFrame:
 # arithmetic in DOUBLE (a bare ``1.0`` parses as DECIMAL(2,1) in
 # Spark SQL); the side tag ``* 2 (+ 1)`` stays an INT literal exactly
 # like ``F.lit(2)`` so analyzer type promotion is identical.
-_PHRASE_TAGGED_SQL = (
-    "array_sort(concat("
-    "transform(_pa, x -> CAST(x AS BIGINT) * 2), "
-    "transform(_pb, y -> CAST(y AS BIGINT) * 2 + 1)))"
-)
+def _phrase_tagged_sql(pa: str, pb: str) -> str:
+    return (
+        "array_sort(concat("
+        f"transform({pa}, x -> CAST(x AS BIGINT) * 2), "
+        f"transform({pb}, y -> CAST(y AS BIGINT) * 2 + 1)))"
+    )
 
 
 def _phrase_gaps_sql(src: str, off: int) -> str:
@@ -165,23 +147,39 @@ def _phrase_min_dist_sql(src: str) -> str:
     return f"array_min(concat({_phrase_gaps_sql(src, 1)}, {_phrase_gaps_sql(src, 2)}))"
 
 
-# staged form: min gap over a materialized ``_tg`` column
-_PHRASE_MIN_DIST_SQL = _phrase_min_dist_sql("_tg")
-
-
-def _phrase_score_sql() -> str:
-    """The :func:`_phrase_score_expr` expression as Spark SQL text —
-    the single-expression reference form (``tagged`` inlined at every
-    reference)."""
-    min_dist = _phrase_min_dist_sql(_PHRASE_TAGGED_SQL)
+def _phrase_boost_sql(sa: str, sb: str, md: str) -> str:
     return (
-        f"CASE WHEN {min_dist} IS NOT NULL "
-        f"THEN power(_sa * _sb, {PHRASE_FACTOR!r}D + 1.0D / {min_dist}) "
-        "ELSE _sa * _sb END"
+        f"CASE WHEN {md} IS NOT NULL "
+        f"THEN power({sa} * {sb}, {PHRASE_FACTOR!r}D + 1.0D / {md}) "
+        f"ELSE {sa} * {sb} END"
     )
 
 
-_PHRASE_SCORE_SQL = _phrase_score_sql()
+_PHRASE_SCORE_SQL = _phrase_boost_sql(
+    "_sa", "_sb", _phrase_min_dist_sql(_phrase_tagged_sql("_pa", "_pb"))
+)
+
+
+def _phrase_stages(pairs: list[tuple[int, int]]) -> list[str]:
+    """The staged phrase projections for boosted pivot-slot pairs:
+    first the merged-sorted side-tagged position array (``_tg`` — the
+    one array_sort per row), then its min cross-side gap (``_md``);
+    the score reads ``_md`` (:func:`_phrase_boost_sql`). CollapseProject
+    keeps the stages apart (each staged attribute is non-cheap and
+    referenced more than once), so the single expression's ~10
+    re-sorts per row collapse to one — measured 0.38 → ~0.05 s per
+    prepared pass on the sf0.1 phrase headline. A second pair in one
+    query gets the suffix 1 (``_tg1``, ``_md1``), and so on."""
+    if not pairs:
+        return []
+    sfx = [str(k or "") for k in range(len(pairs))]
+    return [
+        ", ".join(
+            f"{_phrase_tagged_sql(f'_p{a}', f'_p{b}')} AS _tg{x}"
+            for (a, b), x in zip(pairs, sfx)
+        ),
+        ", ".join(f"{_phrase_min_dist_sql(f'_tg{x}')} AS _md{x}" for x in sfx),
+    ]
 
 
 def _phrase_score_expr_column_form() -> F.Column:
@@ -219,15 +217,162 @@ def _phrase_score_expr_column_form() -> F.Column:
     ).otherwise(prod)
 
 
-@dataclass
+@dataclass(frozen=True)
 class _Wrapped:
-    """PostingListWrapper (`QueryParser.java:63-70`): a posting
-    relation + its wrapper type + a lazy cardinality estimate."""
+    """PostingListWrapper (`QueryParser.java:63-70`) as per-document
+    SQL over the pivot row: membership ``m``, score ``s`` (meaningful
+    where ``m`` holds), the pivot slot of a leaf that still carries
+    positions, and a cardinality estimate for J6 ordering."""
 
     type: int  # 0 normal / 1 negated / 2 ignored
-    df: DataFrame  # (doc_id, score, positions)
-    has_positions: bool
-    est: float  # estimated row count, for J6 join ordering
+    m: str = "false"
+    s: str = "0.0D"
+    slot: int | None = None
+    est: float = 0.0
+
+
+_IGNORED = _Wrapped(P.IGNORED)
+
+
+class _Lowering:
+    """One query's lowering: term slots (bound as ``:t{i}``), the
+    slots whose positions are pivoted, and the boosted phrase pairs."""
+
+    def __init__(self, stats: dict[str, int]) -> None:
+        self.stats = stats
+        self.slots: dict[str, int] = {}
+        self.positions: set[int] = set()
+        self.pairs: list[tuple[int, int]] = []
+
+    # ---- algebra -----------------------------------------------------
+
+    def _leaf(self, type: int, term: str) -> _Wrapped:
+        i = self.slots.setdefault(term, len(self.slots))
+        est = float(self.stats.get(term, 0))
+        return _Wrapped(type, f"_s{i} IS NOT NULL", f"_s{i}", i, est)
+
+    def _intersect(self, a: _Wrapped, b: _Wrapped) -> _Wrapped:
+        """J1, with the phrase boost when both sides carry positions."""
+        if a.slot is not None and b.slot is not None:
+            md = f"_md{len(self.pairs) or ''}"
+            self.pairs.append((a.slot, b.slot))
+            self.positions |= {a.slot, b.slot}
+            s = f"({_phrase_boost_sql(a.s, b.s, md)})"
+        else:
+            s = f"({a.s} * {b.s})"
+        return _Wrapped(P.NORMAL, f"({a.m} AND {b.m})", s, None, min(a.est, b.est))
+
+    @staticmethod
+    def _merge(*ws: _Wrapped) -> _Wrapped:
+        """J2 (and J7 over n positive operands): scores add on overlap."""
+        m = " OR ".join(w.m for w in ws)
+        s = " + ".join(f"CASE WHEN {w.m} THEN {w.s} ELSE 0.0D END" for w in ws)
+        return _Wrapped(P.NORMAL, f"({m})", f"({s})", None, sum(w.est for w in ws))
+
+    @staticmethod
+    def _difference(a: _Wrapped, b: _Wrapped) -> _Wrapped:
+        """J3: docs in A not in B, keeping A's scores."""
+        return _Wrapped(P.NORMAL, f"({a.m} AND NOT {b.m})", a.s, None, a.est)
+
+    def _and_pair(self, a: _Wrapped, b: _Wrapped) -> _Wrapped:
+        """J4: AND with negation algebra (`QueryParser.java:122-139`)."""
+        if b.type == P.IGNORED:
+            return a
+        if a.type == P.IGNORED:
+            return b
+        if a.type == P.NEGATED and b.type == P.NEGATED:
+            return replace(self._merge(a, b), type=P.NEGATED)  # -A and -B -> -(A ∪ B)
+        if a.type == P.NORMAL and b.type == P.NORMAL:
+            return self._intersect(a, b)
+        if a.type == P.NEGATED:
+            return self._difference(b, a)  # -A and B -> B - A
+        return self._difference(a, b)  # A and -B -> A - B
+
+    def _or_pair(self, a: _Wrapped, b: _Wrapped) -> _Wrapped:
+        """J5: OR with De Morgan rewrites (`QueryParser.java:281-298`)."""
+        if b.type == P.IGNORED:
+            return a
+        if a.type == P.IGNORED:
+            return b
+        if a.type == P.NEGATED and b.type == P.NEGATED:
+            return replace(self._intersect(a, b), type=P.NEGATED)  # -A or -B -> -(A ∩ B)
+        if a.type == P.NORMAL and b.type == P.NORMAL:
+            return self._merge(a, b)
+        if a.type == P.NEGATED:
+            return replace(self._difference(a, b), type=P.NEGATED)  # -A or B -> -(A - B)
+        return replace(self._difference(b, a), type=P.NEGATED)  # A or -B -> -(B - A)
+
+    # ---- tree evaluation --------------------------------------------
+
+    def evaluate(self, node: P.Node) -> _Wrapped:
+        if isinstance(node, P.Word):
+            return self._leaf(P.NORMAL, node.term)
+        if isinstance(node, P.ExceptWord):
+            return self._leaf(P.NEGATED, node.term)
+        if isinstance(node, P.StopWord):
+            return _IGNORED
+        if isinstance(node, P.And):
+            children = [self.evaluate(c) for c in node.children]
+            if len(children) == 1:
+                # single-operand AND copies without positions
+                # (doAnd low==high, QueryParser.java:150-157)
+                return replace(children[0], slot=None)
+            # J6: smallest estimated list first
+            children.sort(key=lambda w: w.est)
+            acc = children[0]
+            for nxt in children[1:]:
+                acc = self._and_pair(acc, nxt)
+            return acc
+        if isinstance(node, P.Or):
+            # doOr's recursion base copies every operand without
+            # positions (QueryParser.java:267-275) — phrase proximity
+            # never applies across OR operands, only inside a phrase AND.
+            children = [replace(self.evaluate(c), slot=None) for c in node.children]
+            if len(children) > 1 and all(c.type == P.NORMAL for c in children):
+                acc = self._merge(*children)  # J7
+            else:
+                acc = children[0]
+                for nxt in children[1:]:
+                    acc = self._or_pair(acc, nxt)
+            if node.negated and acc.type != P.IGNORED:
+                acc = replace(acc, type=1 - acc.type)
+            return acc
+        raise TypeError(f"unknown node {node!r}")
+
+    # ---- statement ---------------------------------------------------
+
+    def statement(self, root: _Wrapped, postings: str, documents: str | None) -> str:
+        """The one SQL text for ``root`` over the named views."""
+        if root.type == P.IGNORED or (root.type == P.NEGATED and documents is None):
+            return _EMPTY_SQL
+        n = len(self.slots)
+        if n == 1:
+            # one term: (term, doc) rows are the pivot rows already
+            cols = ["score AS _s0"] + ["positions AS _p0"] * bool(self.positions)
+            src = f"SELECT doc_id, {', '.join(cols)} FROM {postings} WHERE term = :t0"
+        else:
+            cols = [f"max(CASE WHEN term = :t{i} THEN score END) AS _s{i}" for i in range(n)]
+            cols += [
+                f"max(CASE WHEN term = :t{i} THEN positions END) AS _p{i}"
+                for i in sorted(self.positions)
+            ]
+            marks = ", ".join(f":t{i}" for i in range(n))
+            src = (
+                f"SELECT doc_id, {', '.join(cols)} FROM {postings} "
+                f"WHERE term IN ({marks}) GROUP BY doc_id"
+            )
+        rows = f"SELECT * FROM ({src}) WHERE {root.m}"
+        if root.type == P.NEGATED:
+            # root negation: complement against the document universe
+            # (documented deviation — the reference returns the negated
+            # list unmaterialized, `QueryParser.java` root handling)
+            return (
+                f"SELECT d.doc_id, 0.0D AS score FROM {documents} d "
+                f"LEFT ANTI JOIN ({rows}) l ON d.doc_id = l.doc_id"
+            )
+        for stage in _phrase_stages(self.pairs):
+            rows = f"SELECT *, {stage} FROM ({rows})"
+        return f"SELECT doc_id, {root.s} AS score FROM ({rows})"
 
 
 class SearchEngine:
@@ -260,15 +405,21 @@ class SearchEngine:
         stem=P.porter_stem,
         vocab: DataFrame | dict | None = None,
     ) -> None:
-        import threading
-
         self.spark = spark
         self.postings = postings
         self.documents = documents
         self.stem = stem or (lambda w: w)
         self.stopwords = frozenset(self.stem(w) for w in stopwords)
+        # registered once per engine: every query's statement names
+        # these views instead of re-wiring the frames
+        tag = uuid.uuid4().hex
+        self._views = [f"`_postings_{tag}`", None]
+        postings.createOrReplaceTempView(f"_postings_{tag}")
+        if documents is not None:
+            self._views[1] = f"`_documents_{tag}`"
+            documents.createOrReplaceTempView(f"_documents_{tag}")
         # ``vocab``: a published (term, df) stats table (see
-        # build_index_tables) or a prebuilt dict — seeds the J6 join-
+        # build_index_tables) or a prebuilt dict — seeds the J6
         # ordering cache so the engine's first query pays no collect;
         # omitted → collected lazily from the postings on first use.
         if vocab is None:
@@ -289,8 +440,8 @@ class SearchEngine:
         collected once per engine lifetime (one tiny term-keyed
         aggregate — vocabulary stats, the table an index build
         publishes anyway) and every subsequent ``plan()`` orders its
-        joins from the in-memory dict. Estimation error only ever
-        affects join order, never results."""
+        operands from the in-memory dict. Estimation error only ever
+        affects evaluation order, never membership."""
         if not terms:
             return {}
         if self._vocab is None:
@@ -318,260 +469,35 @@ class SearchEngine:
         )
         return {r[0]: int(r[1]) for r in rows}
 
-    # ---- leaves ------------------------------------------------------
-
-    def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], _RESULT_SCHEMA)
-
-    def _leaf_df(self, postings: DataFrame, term: str) -> DataFrame:
-        return postings.filter(F.col("term") == term).select(
-            "doc_id", "score", "positions"
-        )
-
-    # ---- algebra -----------------------------------------------------
-
-    @staticmethod
-    def _strip_positions(df: DataFrame) -> DataFrame:
-        return df.select("doc_id", "score")
-
-    def _intersect_lists(self, a: _Wrapped, b: _Wrapped) -> _Wrapped:
-        """J1: inner join with phrase-proximity scoring."""
-        if a.has_positions and b.has_positions:
-            left = a.df.select("doc_id", F.col("score").alias("_sa"), F.col("positions").alias("_pa"))
-            right = b.df.select("doc_id", F.col("score").alias("_sb"), F.col("positions").alias("_pb"))
-            joined = left.join(right, "doc_id")
-            out = _apply_phrase_score(joined)
-        else:
-            left = a.df.select("doc_id", F.col("score").alias("_sa"))
-            right = b.df.select("doc_id", F.col("score").alias("_sb"))
-            out = left.join(right, "doc_id").select(
-                "doc_id", (F.col("_sa") * F.col("_sb")).alias("score")
-            )
-        return _Wrapped(P.NORMAL, out, False, min(a.est, b.est))
-
-    def _phrase_pair_fused(
-        self, postings: DataFrame, t1: str, t2: str, stats: dict[str, int]
-    ) -> _Wrapped:
-        """The two-word phrase AND as ONE pass over the postings
-        relation: ``term IN (t1, t2)`` then a doc_id aggregation that
-        pivots each side's (score, positions) and keeps docs holding
-        BOTH terms — same rows and bit-identical scores as
-        :meth:`_intersect_lists` over two leaves (shared
-        :func:`_phrase_score_expr`), but the index is scanned once
-        instead of once per side, and the doc_id equi-join becomes a
-        partial-aggregated shuffle of just the two terms' postings.
-        Measured at sf0.1 (local[32], min/median of 7 hot runs,
-        values pinned equal): join form 205/274 ms → fused 193/211 ms
-        — a real but modest win; the residual constant is per-job
-        scheduling + result collect, shared by both forms. At scale
-        the shape argument dominates: one pruned scan of two term
-        partitions + one width-2 shuffle, vs two scans + a broadcast
-        build whose cost grows with the posting list.
-
-        Guarded to distinct terms: a repeated-word phrase must
-        self-join (each (term, doc) row exists once, so the pivot
-        would see one side)."""
-        hits = postings.filter(F.col("term").isin(t1, t2)).select(
-            "doc_id", "term", "score", "positions"
-        )
-        # max() pivots: exactly one row per (term, doc) exists by
-        # index construction, so max IS the value (and stays
-        # deterministic even if an external index violated that).
-        # The both-terms gate counts DISTINCT terms, not rows — a
-        # duplicated (term, doc) row in an external index must not
-        # let a one-term doc through (row-count 2) or drop a genuine
-        # two-term doc (row-count 3)
-        agg = (
-            hits.groupBy("doc_id")
-            .agg(
-                F.count_distinct(F.col("term")).alias("_n"),
-                F.max(F.when(F.col("term") == t1, F.col("score"))).alias("_sa"),
-                F.max(F.when(F.col("term") == t2, F.col("score"))).alias("_sb"),
-                F.max(F.when(F.col("term") == t1, F.col("positions"))).alias("_pa"),
-                F.max(F.when(F.col("term") == t2, F.col("positions"))).alias("_pb"),
-            )
-            .filter(F.col("_n") == 2)
-        )
-        out = _apply_phrase_score(agg)
-        est = min(float(stats.get(t1, 0)), float(stats.get(t2, 0)))
-        return _Wrapped(P.NORMAL, out, False, est)
-
-    def _merge_lists(self, a: _Wrapped, b: _Wrapped) -> _Wrapped:
-        """J2: full-outer union-merge, scores add on overlap."""
-        left = self._strip_positions(a.df).withColumnRenamed("score", "_sa")
-        right = self._strip_positions(b.df).withColumnRenamed("score", "_sb")
-        out = left.join(right, "doc_id", "full_outer").select(
-            "doc_id",
-            (F.coalesce("_sa", F.lit(0.0)) + F.coalesce("_sb", F.lit(0.0))).alias("score"),
-        )
-        return _Wrapped(P.NORMAL, out, False, a.est + b.est)
-
-    def _difference_lists(self, a: _Wrapped, b: _Wrapped) -> _Wrapped:
-        """J3: docs in A not in B, keeping A's scores."""
-        out = self._strip_positions(a.df).join(
-            self._strip_positions(b.df).select("doc_id"), "doc_id", "left_anti"
-        )
-        return _Wrapped(P.NORMAL, out, False, a.est)
-
-    def _and_pair(self, a: _Wrapped, b: _Wrapped) -> _Wrapped:
-        """J4: AND with negation algebra (`QueryParser.java:122-139`)."""
-        if a.type == P.IGNORED and b.type == P.IGNORED:
-            return _Wrapped(P.IGNORED, self._empty(), False, 0.0)
-        if a.type == P.IGNORED:
-            return b
-        if b.type == P.IGNORED:
-            return a
-        if a.type == P.NEGATED and b.type == P.NEGATED:
-            m = self._merge_lists(a, b)  # -A and -B -> -(A ∪ B)
-            return _Wrapped(P.NEGATED, m.df, False, m.est)
-        if a.type == P.NORMAL and b.type == P.NORMAL:
-            return self._intersect_lists(a, b)
-        if a.type == P.NEGATED:
-            return self._difference_lists(b, a)  # -A and B -> B - A
-        return self._difference_lists(a, b)  # A and -B -> A - B
-
-    def _or_pair(self, a: _Wrapped, b: _Wrapped) -> _Wrapped:
-        """J5: OR with De Morgan rewrites (`QueryParser.java:281-298`)."""
-        if a.type == P.IGNORED and b.type == P.IGNORED:
-            return _Wrapped(P.IGNORED, self._empty(), False, 0.0)
-        if a.type == P.IGNORED:
-            return b
-        if b.type == P.IGNORED:
-            return a
-        if a.type == P.NEGATED and b.type == P.NEGATED:
-            i = self._intersect_lists(a, b)  # -A or -B -> -(A ∩ B)
-            return _Wrapped(P.NEGATED, i.df, False, i.est)
-        if a.type == P.NORMAL and b.type == P.NORMAL:
-            return self._merge_lists(a, b)
-        if a.type == P.NEGATED:
-            d = self._difference_lists(a, b)  # -A or B -> -(A - B)
-            return _Wrapped(P.NEGATED, d.df, False, d.est)
-        d = self._difference_lists(b, a)  # A or -B -> -(B - A)
-        return _Wrapped(P.NEGATED, d.df, False, d.est)
-
-    # ---- tree evaluation --------------------------------------------
-
-    def _evaluate(
-        self, node: P.Node, postings: DataFrame, stats: dict[str, int]
-    ) -> _Wrapped:
-        if isinstance(node, P.Word):
-            return _Wrapped(
-                P.NORMAL,
-                self._leaf_df(postings, node.term),
-                True,
-                float(stats.get(node.term, 0)),
-            )
-        if isinstance(node, P.ExceptWord):
-            return _Wrapped(
-                P.NEGATED,
-                self._leaf_df(postings, node.term),
-                True,
-                float(stats.get(node.term, 0)),
-            )
-        if isinstance(node, P.StopWord):
-            return _Wrapped(P.IGNORED, self._empty(), False, 0.0)
-        if isinstance(node, P.And):
-            if (
-                len(node.children) == 2
-                and all(isinstance(c, P.Word) for c in node.children)
-                and node.children[0].term != node.children[1].term
-            ):
-                # the common two-word phrase: fuse both leaves into one
-                # scan + one aggregation (see _phrase_pair_fused);
-                # J6 ordering is moot for a symmetric pair
-                return self._phrase_pair_fused(
-                    postings,
-                    node.children[0].term,
-                    node.children[1].term,
-                    stats,
-                )
-            children = [self._evaluate(c, postings, stats) for c in node.children]
-            if len(children) == 1:
-                c = children[0]
-                # single-operand AND copies without positions
-                # (doAnd low==high, QueryParser.java:150-157)
-                return _Wrapped(c.type, self._strip_positions(c.df), False, c.est)
-            # J6: smallest estimated list first
-            children.sort(key=lambda w: w.est)
-            acc = children[0]
-            for nxt in children[1:]:
-                acc = self._and_pair(acc, nxt)
-            return acc
-        if isinstance(node, P.Or):
-            # doOr's recursion base copies every operand without
-            # positions (QueryParser.java:267-275) — phrase proximity
-            # never applies across OR operands, only inside a phrase AND.
-            children = [
-                _Wrapped(c.type, self._strip_positions(c.df), False, c.est)
-                for c in (self._evaluate(ch, postings, stats) for ch in node.children)
-            ]
-            if len(children) == 1:
-                acc = children[0]
-            elif all(c.type == P.NORMAL for c in children):
-                # J7 fast path: one union + one aggregation shuffle
-                unioned = self._strip_positions(children[0].df)
-                for c in children[1:]:
-                    unioned = unioned.unionByName(self._strip_positions(c.df))
-                acc = _Wrapped(
-                    P.NORMAL,
-                    unioned.groupBy("doc_id").agg(F.sum("score").alias("score")),
-                    False,
-                    sum(c.est for c in children),
-                )
-            else:
-                acc = children[0]
-                for nxt in children[1:]:
-                    acc = self._or_pair(acc, nxt)
-            if node.negated:
-                acc = _Wrapped(1 - acc.type if acc.type != P.IGNORED else P.IGNORED,
-                               acc.df, acc.has_positions, acc.est)
-            return acc
-        raise TypeError(f"unknown node {node!r}")
-
     # ---- public API --------------------------------------------------
+
+    def _sql(self, query: str, order: str = "") -> DataFrame:
+        tree = P.parse_query(query, self.stopwords, stem=self.stem)
+        low = _Lowering(self._df_stats(P.query_terms(tree)))
+        text = low.statement(low.evaluate(tree), *self._views)
+        args = {f"t{i}": t for t, i in low.slots.items()}
+        return self.spark.sql(f"SELECT doc_id, score FROM ({text}){order}", args or None)
 
     def plan(self, query: str) -> DataFrame:
         """Lower ``query`` to a (doc_id, score) DataFrame, unranked —
-        with ZERO blocking Spark actions on the query path (after the
-        engine's one-time vocabulary collect): parse, order, and wire
-        the join DAG entirely on the driver, lazily.
+        one parameterized SQL statement, with ZERO blocking Spark
+        actions on the query path (after the engine's one-time
+        vocabulary collect).
 
-        Each leaf filters the shared postings frame on its own term —
-        the Spark form of the reference's map-side semi-join (J8,
-        `code/query/QueryMapred.java:56-61`): a published index scan
-        sees ``term = 'w'`` pushed to parquet (file-level range
-        pruning + row-group min/max), and a caller-persisted postings
-        frame serves the filter from its local cache. Nothing is
-        persisted or collected per query — per-query state lives only
-        in the returned plan.
+        A published index scan sees the ``term`` predicate pushed to
+        parquet (file-level range pruning + row-group min/max), and a
+        caller-persisted postings frame serves the scan from its cache.
+        Nothing is persisted or collected per query.
 
         Thread-safe: one engine instance serves concurrent queries
         (the bench drives exactly that); the only shared mutable state
         is the once-initialized vocabulary dict."""
-        tree = P.parse_query(query, self.stopwords, stem=self.stem)
-        terms = P.query_terms(tree)
-        postings = self.postings
-        stats = self._df_stats(terms)
-        result = self._evaluate(tree, postings, stats)
-        if result.type == P.IGNORED:
-            return self._empty().select("doc_id", "score")
-        if result.type == P.NEGATED:
-            # root negation: complement against the document universe
-            # (documented deviation — the reference returns the negated
-            # list unmaterialized, `QueryParser.java` root handling)
-            if self.documents is None:
-                return self._empty().select("doc_id", "score")
-            return (
-                self.documents.select("doc_id")
-                .join(result.df.select("doc_id"), "doc_id", "left_anti")
-                .select("doc_id", F.lit(0.0).alias("score"))
-            )
-        return self._strip_positions(result.df)
+        return self._sql(query)
 
     def search(self, query: str) -> DataFrame:
         """Ranked results: (doc_id, score), score desc / doc_id asc
         (reference O2, ties broken deterministically)."""
-        return self.plan(query).orderBy(F.desc("score"), F.asc("doc_id"))
+        return self._sql(query, " ORDER BY score DESC, doc_id ASC")
 
 
 def exact_phrase_docs(postings: DataFrame, terms: list[str]) -> DataFrame:

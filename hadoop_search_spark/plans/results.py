@@ -256,13 +256,23 @@ def render_page(
     """Full reference query lifecycle step 8 (SURVEY.md §3.1): rank,
     count, fetch the requested page's documents, snippet + highlight.
 
+    Ranks once: the total and the page's (doc_id, score) rows come
+    from one ``limit`` collect of the ranked rows, as in
+    :meth:`SearchResult.from_ranked`; the exact ``count()`` runs only
+    when that collect is truncated.
+
     Returns (total_result_count, [{doc_id, score, snippet}, ...]).
     """
     ranked = engine.search(query)
-    total = ranked.count()
+    cap = SearchResult.MAX_IDS
+    top = ranked.limit(cap + 1).collect()
+    total = ranked.count() if len(top) > cap else len(top)
     # clamp to the last page like the reference (CorpusFetcher.java:88)
-    last_page = max(1, -(-total // PAGE_SIZE))
-    rows = page_slice(rank(ranked), min(max(page, 1), last_page)).collect()
+    page = min(max(page, 1), max(1, -(-total // PAGE_SIZE)))
+    if page * PAGE_SIZE <= cap or total <= cap:
+        rows = top[(page - 1) * PAGE_SIZE : page * PAGE_SIZE]
+    else:  # a page past the collected prefix of a truncated result
+        rows = page_slice(ranked, page).collect()
     words = highlight_words(query)
     docs = {
         r.doc_id: r[text_col]

@@ -26,17 +26,15 @@ COMMENTARY = {
         "AQE re-plans from runtime sizes."
     ),
     "search_phrase": (
-        "Phrase query through the CNF planner, FUSED form (r11): ONE "
-        "term-IN-pruned index scan (on the published range-partitioned "
-        "index this prunes to the two terms' files), a doc_id "
-        "aggregation pivoting each side's (score, positions) and "
-        "gating on both DISTINCT terms present, and the min-distance "
-        "boost as the same nested-array expression the join form "
-        "shares (bit-identical scores). The agg is a SortAggregate "
-        "(array-typed pivot values aren't hash-aggregatable) over the "
-        "two terms' postings only — one width-2 shuffle instead of a "
-        "second scan + broadcast build. No Python, no driver "
-        "materialization."
+        "Phrase query through the CNF planner: ONE statement with the "
+        "terms as bound parameters. One term-IN-pruned index scan (on "
+        "the published range-partitioned index this prunes to the two "
+        "terms' files), one doc_id aggregation pivoting each term's "
+        "(score, positions), the both-terms membership filter, and the "
+        "min-distance boost in staged _tg/_md projections. The agg is a "
+        "SortAggregate (array-typed pivot values aren't "
+        "hash-aggregatable) over the two terms' postings only. No "
+        "Python, no driver materialization."
     ),
     "dedup_minhash_lsh": (
         "MinHash+LSH: one shuffle computes all 16 min-hashes as "

@@ -46,22 +46,30 @@ def test_phrase_score_sql_form_plan_and_values(spark):  # noqa: F811
 
 
 def test_apply_phrase_score_staged_matches_single_expr(spark):  # noqa: F811
-    # the staged projections (P1 tagged, P2 min-gap, P3 score) must
-    # compute bit-identical scores to the single-expression reference
-    # — the staging exists purely so the merged-sort evaluates once
-    # per row instead of ~10x
+    # the engine's staged phrase projections (_tg merged sort, _md
+    # min gap, then the boosted score) must compute bit-identical
+    # scores to the single-expression reference — the staging exists
+    # purely so the merged sort evaluates once per row instead of ~10x.
+    # Each row becomes two postings, and the two-word phrase query
+    # runs through the engine's own statement.
     import struct
 
-    from hadoop_search_spark.plans.planner import (
-        _apply_phrase_score,
-        _phrase_score_expr,
-    )
+    from hadoop_search_spark.plans.planner import SearchEngine, _phrase_score_expr
 
     df = spark.createDataFrame(
         PHRASE_ROWS,
         "doc_id INT, _sa DOUBLE, _sb DOUBLE, _pa ARRAY<INT>, _pb ARRAY<INT>",
     )
-    staged = {r.doc_id: r.score for r in _apply_phrase_score(df).collect()}
+    postings = spark.createDataFrame(
+        [
+            row
+            for d, sa, sb, pa, pb in PHRASE_ROWS
+            for row in (("alpha", d, 1, pa, sa), ("beta", d, 1, pb, sb))
+        ],
+        "term STRING, doc_id BIGINT, tf INT, positions ARRAY<INT>, score DOUBLE",
+    )
+    engine = SearchEngine(spark, postings, stem=None)
+    staged = {r.doc_id: r.score for r in engine.plan("alpha beta").collect()}
     single = {
         r.doc_id: r.score
         for r in df.select("doc_id", _phrase_score_expr().alias("score")).collect()

@@ -7,10 +7,16 @@ brute-force evaluator in tests/brute_force.py.
 """
 
 import math
+import random
+import re
+import threading
+from contextlib import contextmanager
 
+import pyarrow as pa
 import pytest
 
 from hadoop_search_spark.operators.index import build_postings, stop_words
+from hadoop_search_spark.plans import parser as P
 from hadoop_search_spark.plans.parser import (
     And,
     ExceptWord,
@@ -243,6 +249,205 @@ def test_corpus_query_matches_brute_force(corpus_setup, query):
         assert math.isclose(got[d], s, rel_tol=1e-9, abs_tol=1e-12), (
             f"score mismatch for {query!r} doc {d}: {got[d]} vs {s}"
         )
+
+
+def _assert_matches_brute_force(engine, query, terms, universe, stopword_list):
+    want = bf.search(query, terms, universe, stopwords=stopword_list)
+    got = {r.doc_id: r.score for r in engine.search(query).collect()}
+    assert got.keys() == want.keys(), f"membership mismatch for {query!r}"
+    for d, s in want.items():
+        assert math.isclose(got[d], s, rel_tol=1e-9, abs_tol=1e-12), (
+            f"score mismatch for {query!r} doc {d}: {got[d]} vs {s}"
+        )
+
+
+@pytest.fixture(scope="module")
+def published_setup(spark, corpus_setup, documents, tmp_path_factory):
+    """The corpus engine's postings published as parquet, the way the
+    CLI ``index`` command leaves them, under a second engine: a query
+    then reads a pruned file scan instead of re-running the stemmed
+    build. Also returns the corpus's raw words."""
+    engine, terms, universe, stopword_list = corpus_setup
+    path = str(tmp_path_factory.mktemp("published") / "postings")
+    engine.postings.write.parquet(path)
+    published = SearchEngine(
+        spark, spark.read.parquet(path), documents=documents, stopwords=stopword_list
+    )
+    words = {
+        w
+        for r in documents.select("text").collect()
+        for w in re.findall(r"[a-z]+", r.text.lower())
+    }
+    return published, terms, universe, stopword_list, sorted(words - {"and", "or", "not"})
+
+
+UNKNOWN_WORDS = ["zzzqqq", "qqqzzz"]
+
+
+def _random_query(rng: random.Random, words: list[str], stop: list[str]) -> str:
+    """One seeded CNF query: 1-3 clauses of 1-3 operands, each a soft
+    phrase of 1-3 words (stop words, unknown words and repeats mixed
+    in) or a ``not w`` operand; clauses may be ``not (…)``."""
+
+    def word() -> str:
+        r = rng.random()
+        if r < 0.12:
+            return rng.choice(stop)
+        if r < 0.18:
+            return rng.choice(UNKNOWN_WORDS)
+        return rng.choice(words)
+
+    def operand() -> str:
+        if rng.random() < 0.2:
+            return "not " + word()
+        ws = [word() for _ in range(rng.choice((1, 1, 2, 2, 3)))]
+        if len(ws) > 1 and rng.random() < 0.25:
+            ws[-1] = ws[0]  # repeated word
+        return " ".join(ws)
+
+    def clause() -> str:
+        ops = " or ".join(operand() for _ in range(rng.choice((1, 1, 2, 3))))
+        r = rng.random()
+        if r < 0.2:
+            return f"not ({ops})"
+        return f"({ops})" if r < 0.4 else ops
+
+    return " and ".join(clause() for _ in range(rng.choice((1, 1, 2, 3))))
+
+
+def test_random_cnf_queries_match_brute_force(published_setup):
+    """Seeded differential test of the whole algebra (J1-J7, root
+    negation, stop words) against the brute-force evaluator."""
+    engine, terms, universe, stopword_list, words = published_setup
+    rng = random.Random(20261020)
+    queries = [_random_query(rng, words, stopword_list) for _ in range(50)]
+    stems = [P.porter_stem(w) for w in stopword_list]
+    trees = [P.parse_query(q, stems) for q in queries]
+    phrases = [
+        op
+        for t in trees
+        for clause in t.children
+        for op in clause.children
+        if isinstance(op, And)
+    ]
+    # the stream covers what it is meant to
+    assert any(sum(isinstance(w, Word) for w in op.children) == 3 for op in phrases)
+    assert any(
+        len({w.term for w in op.children if isinstance(w, Word)})
+        < sum(isinstance(w, Word) for w in op.children)
+        for op in phrases
+    )
+    assert any(
+        any(isinstance(w, StopWord) for w in op.children) and len(op.children) > 1
+        for op in phrases
+    )
+    assert any(all(isinstance(w, StopWord) for w in op.children) for op in phrases)
+    assert any(isinstance(op, ExceptWord) for t in trees for c in t.children for op in c.children)
+    assert any(c.negated for t in trees for c in t.children)
+    assert any(any(u in q for u in UNKNOWN_WORDS) for q in queries)
+    assert {bf.evaluate(t, terms)[0] for t in trees} == {0, 1, 2}  # root types
+    for q in queries:
+        _assert_matches_brute_force(engine, q, terms, universe, stopword_list)
+
+
+SPECIAL_WORDS = ["o'brien", "back\\slash", "tick`word", "--", ";", ":t0", "semi;colon", "it's"]
+
+
+def test_terms_cannot_change_the_statement(spark):
+    """Query words are bound parameters, never statement text: words
+    holding quotes, backslashes, backticks, comment and statement
+    markers, or a parameter marker match exactly their own postings."""
+    rows = [
+        (P.porter_stem(w), d, 1, [i + 1, i + 3], 1.0 + 0.1 * i + d)
+        for i, w in enumerate(SPECIAL_WORDS + ["x"])
+        for d in range(1, 6)
+        if (i + d) % 3
+    ]
+    postings = spark.createDataFrame(
+        pa.table(
+            {
+                "term": [r[0] for r in rows],
+                "doc_id": pa.array([r[1] for r in rows], pa.int64()),
+                "tf": pa.array([r[2] for r in rows], pa.int32()),
+                "positions": pa.array([r[3] for r in rows], pa.list_(pa.int32())),
+                "score": [r[4] for r in rows],
+            }
+        )
+    )
+    docs = spark.createDataFrame(pa.table({"doc_id": pa.array(range(1, 7), pa.int64())}))
+    engine = SearchEngine(spark, postings, documents=docs)
+    terms: dict[str, bf.PL] = {}
+    for t, d, _tf, pos, s in rows:
+        terms.setdefault(t, {})[d] = (s, pos)
+    for q in [
+        "o'brien and x",
+        "o'brien it's",
+        "back\\slash or tick`word",
+        "-- and ;",
+        ":t0 or x",
+        "not :t0",
+        "semi;colon and not --",
+        "x and not (o'brien or ;)",
+        "o'brien'); drop view x; --",
+    ]:
+        _assert_matches_brute_force(engine, q, terms, set(range(1, 7)), [])
+
+
+def test_term_predicate_reaches_the_parquet_scan(published_setup):
+    engine = published_setup[0]
+    for q in ["table", "table and scan", "table or scan or merge"]:
+        plan = engine.search(q)._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"PushedFilters: \[[^\]]*\b(EqualTo|In)\(term,", plan), (q, plan)
+
+
+@contextmanager
+def _py4j_commands(spark):
+    """Count the py4j commands this thread sends (other threads' traffic
+    is not counted)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, n = client.send_command, threading.get_ident(), [0]
+
+    def counted(command, retry=True, binary=False):
+        if threading.get_ident() == me:
+            n[0] += 1
+        return send(command, retry, binary)
+
+    client.send_command = counted
+    try:
+        yield n
+    finally:
+        client.send_command = send
+
+
+# one query of each perfbench shape (perfbench/inputs.py:make_query)
+PERFBENCH_SHAPES = [
+    "table",
+    "table and scan",
+    "table or scan or merge",
+    "table scan",
+    "table and not scan",
+    "(scan or merge) and not table",
+]
+
+
+def test_plan_construction_py4j_budget(spark, published_setup):
+    engine = published_setup[0]
+    engine.plan("table")  # the one-time vocabulary collect
+    for q in PERFBENCH_SHAPES:
+        with _py4j_commands(spark) as n:
+            engine.plan(q)
+        assert n[0] <= 16, f"{q!r} sent {n[0]} py4j commands"
+
+
+def test_stop_word_query_plans_no_rdd_scan(published_setup):
+    engine, _, _, stopword_list, _ = published_setup
+    sw = stopword_list[0]
+    for q in [sw, f"{sw} and {sw} {sw}", f"not ({sw})"]:
+        df = engine.search(q)
+        qe = df._jdf.queryExecution()
+        plan = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+        assert df.collect() == []
 
 
 def test_exact_phrase_docs(spark):

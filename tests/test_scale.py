@@ -3,6 +3,8 @@ pruning, predicate pushdown, broadcast joins, and whole-stage codegen
 — the properties that make the engine viable at 100 TB
 (ARCHITECTURE.md "Scale design")."""
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -88,16 +90,21 @@ def test_no_cartesian_in_dedup(spark, documents):
     assert "CartesianProduct" not in plan
 
 
-def test_search_plan_is_join_dag_not_collect(spark, documents):
+def test_search_plan_is_one_doc_id_aggregate_not_collect(spark, documents, index_path):
     from hadoop_search_spark.plans.planner import SearchEngine
 
-    postings = build_postings(documents, num_docs=500, stem=False)
+    postings = spark.read.parquet(index_path)
     engine = SearchEngine(spark, postings, documents=documents, stem=None)
     df = engine.plan("(table) and (scan or merge)")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # evaluation is a distributed join DAG (the reference funnels all
-    # posting lists to a single reducer)
-    assert "Join" in plan
+    # evaluation is distributed (the reference funnels all posting
+    # lists to a single reducer): one term-pruned scan of the index, a
+    # partial aggregate on the map side, one doc_id shuffle, no join
+    assert plan.count("FileScan parquet") == 1
+    assert re.search(r"PushedFilters: \[[^\]]*\bIn\(term, ", plan)
+    assert "partial_max(" in plan
+    assert len(re.findall(r"Exchange hashpartitioning\(doc_id#", plan)) == 1
+    assert "Join" not in plan
 
 
 def test_ivf_assignment_is_map_only(spark):
@@ -195,12 +202,13 @@ def test_token_budget_mix_single_shuffle(spark, documents):
     assert "BatchEvalPython" not in plan
 
 
-def test_viral_term_and_join_broadcasts_small_side(spark):
+def test_viral_term_and_spreads_by_doc_id(spark):
     """Skewed-corpus stress for the search path: one viral term with
-    df ≈ corpus ANDed with a rare term. The AND is a doc_id equi-join;
-    AQE must pick a broadcast of the tiny side at runtime (the viral
-    postings then never shuffle), which is exactly the plan that keeps
-    a hot term from becoming the straggler partition at 100 TB."""
+    df ≈ corpus ANDed with a rare term. The AND is one scan and one
+    doc_id aggregate: the shuffle is hash-partitioned on doc_id, so the
+    viral term's postings spread over every partition instead of
+    becoming the straggler partition a term-keyed exchange would make
+    at 100 TB, and no join is planned."""
     from hadoop_search_spark.operators.index import build_postings
     from hadoop_search_spark.plans.planner import SearchEngine
 
@@ -214,10 +222,12 @@ def test_viral_term_and_join_broadcasts_small_side(spark):
         engine = SearchEngine(spark, postings, documents=docs, stem=None)
         res = engine.search("viral and rare")
         assert {r.doc_id for r in res.collect()} == {0, 400, 800, 1200, 1600}
-        # executed (post-AQE) plan: the 5-row side broadcasts
+        # executed (post-AQE) plan above the cached postings
         plan = res._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
+        query_part = plan.split("InMemoryTableScan")[0]
+        assert re.search(r"Exchange hashpartitioning\(doc_id#\d+L?, \d+\)", query_part)
+        assert "hashpartitioning(term" not in query_part
+        assert "Join" not in query_part
     finally:
         postings.unpersist()
 

@@ -58,3 +58,37 @@ def test_search_session_page(spark, documents, tmp_path):
     # clamped page returns the tail page
     _, last = sess.page("spark and stream", 10**6)
     assert 0 < len(last) <= 10
+
+
+def test_search_session_miss_job_budget(spark, documents, tmp_path):
+    """A miss ranks with one statement over the published index: one
+    Spark job for a single term (no shuffle), two for any other shape
+    (the doc_id aggregate's map stage, then the ranked collect), plus
+    the doc fetch."""
+    path = str(tmp_path / "postings")
+    build_postings(documents, num_docs=500, stem=False).write.parquet(path)
+    engine = SearchEngine(spark, spark.read.parquet(path), documents=documents, stem=None)
+    engine.plan("table")  # the one-time vocabulary collect
+    sess = SearchSession(engine, documents)
+    sc = spark.sparkContext
+    shapes = [  # one query of each perfbench shape
+        "table",
+        "table and scan",
+        "table or scan or merge",
+        "table scan",
+        "table and not scan",
+        "(scan or merge) and not table",
+    ]
+    groups = []
+    for i, q in enumerate(shapes):
+        groups.append(f"miss-{tmp_path.name}-{i}")
+        sc.setJobGroup(groups[-1], q)
+        try:
+            total, rows = sess.page(q, 1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert total > 0 and rows
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+    assert jobs[0] <= 2 and max(jobs) <= 3, dict(zip(shapes, jobs))
